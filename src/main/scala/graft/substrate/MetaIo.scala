@@ -25,25 +25,52 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   */
 private[substrate] object MetaIo {
 
+  /** The `*.parquet` files directly under `dir`, their paths fully
+    * QUALIFIED (scheme + authority): a persisted manifest row must
+    * resolve against the filesystem it was listed on, not the reading
+    * session's default FS. Listing order; empty when `dir` is absent.
+    */
+  def parquetFiles(conf: Configuration, dir: String)
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
+    val all =
+      try fs.listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    all.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .map { s => s.setPath(fs.makeQualified(s.getPath)); s }
+  }
+
+  /** One parquet file's schema, from its FOOTER, and all its rows as
+    * example Groups — one open per file, opened from the listing's
+    * status. The footer carries the schema even when the file holds no
+    * rows.
+    */
+  private def readFile(conf: Configuration,
+      f: org.apache.hadoop.fs.FileStatus)
+      : (org.apache.parquet.schema.MessageType, Seq[Group]) = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+    try {
+      val schema = reader.getFooter.getFileMetaData.getSchema
+      val io = new org.apache.parquet.io.ColumnIOFactory()
+        .getColumnIO(schema)
+      val rows = Iterator.continually(reader.readNextRowGroup())
+        .takeWhile(_ != null).flatMap { store =>
+          val rr = io.getRecordReader(store,
+            new org.apache.parquet.example.data.simple.convert
+              .GroupRecordConverter(schema))
+          Iterator.fill(store.getRowCount.toInt)(rr.read())
+        }.toVector
+      (schema, rows)
+    } finally reader.close()
+  }
+
   /** All rows of every `*.parquet` file directly under `dir`, as
     * parquet example Groups. Empty when the directory is absent.
     */
-  def groups(conf: Configuration, dir: String): Seq[Group] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Seq.empty
-    val files = fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath)
-    files.flatMap { f =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), f)
-        .withConf(conf)
-        .build()
-      try Iterator.continually(reader.read()).takeWhile(_ != null).toVector
-      finally reader.close()
-    }
-  }
+  def groups(conf: Configuration, dir: String): Seq[Group] =
+    parquetFiles(conf, dir).flatMap(readFile(conf, _)._2)
 
   /** Can [[writeRows]] carry this schema? Scalar commit-metadata types
     * — long/int/string/binary/boolean/double, the full universe the
@@ -166,11 +193,13 @@ private[substrate] object MetaIo {
   /** READ metadata-scale parquet rows back as Spark (schema, rows),
     * driver-side — the inverse of [[writeRows]] (r17): what
     * `appendCommit` feeds its ancestor-manifest union from without a
-    * cluster scan job. Schemas merge across files by field name
-    * (first-seen order, the mergeSchema shape a stats-evolving store
-    * needs); a name carrying two different types fails loudly. Only the
-    * metadata type universe is supported — any other parquet type fails
-    * here, routing the caller to a Spark read.
+    * cluster scan job. The schema is read from the file footers, so a
+    * zero-row file reads back with its columns. Schemas merge across
+    * files by field name (first-seen order, the mergeSchema shape a
+    * stats-evolving store needs); INT32 and INT64 under one name widen
+    * to LONG, and any other pair of types under one name fails loudly.
+    * Only the metadata type universe is supported — any other parquet
+    * type fails here, routing the caller to a Spark read.
     */
   def readRows(conf: Configuration, dir: String)
       : (org.apache.spark.sql.types.StructType,
@@ -221,15 +250,19 @@ private[substrate] object MetaIo {
             "outside the metadata type universe; read it with Spark")
       }
     }
-    val gs = dirs.flatMap(d => groups(conf, d))
+    val files = dirs.flatMap(parquetFiles(conf, _)).map(readFile(conf, _))
+    val gs = files.flatMap(_._2)
+    // a LONG field reads INT32 values too (optLong widens)
     val fields = scala.collection.mutable.LinkedHashMap[String, DataType]()
-    gs.foreach { g =>
-      val t = g.getType
+    files.foreach { case (t, _) =>
       (0 until t.getFieldCount).foreach { i =>
         val f = t.getType(i)
         val st = sparkType(f)
         fields.get(f.getName) match {
-          case Some(prev) => require(prev == st,
+          case Some(prev) if prev == st => ()
+          case Some(prev) if Set(prev, st) == Set[DataType](IntegerType,
+              LongType) => fields.put(f.getName, LongType)
+          case Some(prev) => throw new IllegalArgumentException(
             s"metadata field ${f.getName} carries both $prev and $st " +
               s"under ${dirs.mkString(",")} — schemas must agree to merge")
           case None => fields.put(f.getName, st)

@@ -3,52 +3,6 @@ package graft.substrate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Thrown when a racing committer loses the claim on a version — the
-  * loud, NAMED failure optimistic concurrency demands (VERDICT r12 next
-  * #1): the loser retries at the next version or aborts; it never
-  * interleaves writes under the directory the winner claimed. Extends
-  * IllegalArgumentException (VERDICT r13 what's-wrong #2): the
-  * pre-stage requires that detect a dead/taken candidate now throw the
-  * TYPED conflict directly — retry clients match on the type, never on
-  * a message substring — while non-racing callers that treated those
-  * requires as argument errors keep their contract by subtyping.
-  *
-  * Handler discipline (ADVICE r14 low #3 — the subtyping's latent
-  * footgun): a BROAD `catch IllegalArgumentException` around a store
-  * operation that can conflict would silently swallow a genuine commit
-  * conflict instead of retrying or surfacing it. Refusal-check sites
-  * (asserting that an operation refuses) must catch the MOST SPECIFIC
-  * expectation and re-throw CommitConflictException; retry loops match
-  * on this type alone.
-  */
-final class CommitConflictException(msg: String)
-  extends IllegalArgumentException(msg)
-
-/** One shared path normalization for every file-identity comparison on
-  * both durable stores (VERDICT r13 what's-wrong #1): manifest rows are
-  * fully-qualified `makeQualified` strings (raw space, literal '%'),
-  * `input_file_name` emits Spark's `SparkPath` spelling (URL-ENCODED:
-  * space → %20, '%' → %25), and the comparisons that decide DELETION or
-  * a rewrite split must recognize all of them as the same file. A
-  * well-formed URI spelling decodes through `java.net.URI`; a raw
-  * spelling (space, lone '%') makes that parser THROW — the r13 sites
-  * that called it unconditionally crashed mid-maintenance on a legal
-  * filename, after deletes had already started — and falls back to
-  * hadoop `Path`, which passes the path through verbatim. Residual
-  * caveat: a filename that IS a valid percent-escape of another name
-  * (a literal "a%20b" directory) decodes on the URI side and collides
-  * with the spelling of "a b" — consumers stay conservative under such
-  * an adversarial miss (bloom build: null bloom = kept; purge: the
-  * claimed-set recheck bounds deletion to already-retired remains).
-  */
-object PathNorm {
-  def apply(f: String): String =
-    try new java.net.URI(f).getPath
-    catch { case _: java.net.URISyntaxException =>
-      new org.apache.hadoop.fs.Path(f).toUri.getPath
-    }
-}
-
 /** Manifest-pinned snapshot reads over an immutable-file store — the
   * data-level mechanism behind Factor 4's version coverage (reference
   * `factors/requirements.yaml:136-138`, immutable version ids; cf.
@@ -78,81 +32,42 @@ object PathNorm {
   */
 object SnapshotStore {
 
-  private def mdir(base: String, v: Long) = s"$base/_manifest/v=$v"
-
-  /** In-JVM claim serialization for [[commit]]'s stage-then-claim
-    * protocol. The FS rename is the cross-process claim; this lock
-    * closes the same-JVM check-then-rename window completely (the shape
-    * a streaming ingester racing a maintenance job in one driver
-    * actually has). STRIPED (code-review r13): a map keyed by
-    * (base, version) grows one monitor per commit for the JVM lifetime
-    * — an unbounded leak under a per-micro-batch committer; 64 hash
-    * stripes bound the memory at the cost of occasionally serializing
-    * two unrelated commits (held only across an exists + rename).
-    * [[purgeRetired]] takes the same stripe before destroying a
-    * version's remains, so a same-JVM maintenance pass can never race a
-    * committer's claim of that id.
+  /** Versions live under `<base>/_manifest/v=N`, committed by a
+    * `_SUCCESS` marker inside the version directory.
     */
-  private val commitLocks = Array.fill(64)(new Object)
-  // the lock key normalizes the base spelling (code-review r14 #2: a
-  // committer addressing "/data/t" and a purge addressing
-  // "file:/data/t" must land on the SAME stripe, or the local-FS
-  // claim-window serialization the protocol documents silently
-  // evaporates between differently-spelled callers)
-  private def lockFor(base: String, version: Long): Object =
-    commitLocks(math.floorMod(s"${PathNorm(base)}#v=$version".hashCode, 64))
+  private val log = new CommitLog(base => s"$base/_manifest", "_SUCCESS")
+
+  private def mdir(base: String, v: Long) = log.dir(base, v)
 
   /** COMMIT `version`'s manifest rows durably under
-    * `<base>/_manifest/v=<version>/` — the missing half of r11's
-    * session-DataFrame manifests (VERDICT r11 what's-missing #3: until
-    * the manifest is itself a committed artifact, time travel only works
-    * within the session that built it).
+    * `<base>/_manifest/v=<version>/`, so time travel works across
+    * sessions, not only within the one that built the manifest.
     *
-    * Commit protocol (r13 — VERDICT r12 next #1, optimistic
-    * concurrency): the rows are STAGED under
-    * `<base>/_manifest/.stage-v=N-<uuid>/` (fully written, `_SUCCESS`
-    * included, invisible to every reader), then the version is CLAIMED
-    * by one rename of the staged directory onto the final path. Two
-    * racing committers stage independently; exactly one rename claims
-    * the version and the loser gets a [[CommitConflictException]] —
-    * never two writers interleaving under one `v=N` directory. The
-    * rename-claim is atomic on HDFS-like filesystems; on the local FS
-    * the per-(base,version) JVM lock serializes the check-then-rename
-    * window (the same residual documented by real table formats'
-    * HDFS-vs-local log stores). [[committedVersions]] never surfaces a
-    * half-written commit (stage dirs don't match `v=\\d+`), a commit
-    * that crashes mid-stage leaves invisible stage garbage (repaired by
-    * re-committing), and — versions being immutable
-    * (`factors/requirements.yaml:136-138`) — re-committing an
-    * already-COMMITTED version fails loudly instead of silently
-    * rewriting history.
+    * Commit protocol ([[CommitLog.claim]], optimistic concurrency): the
+    * rows are STAGED (fully written, `_SUCCESS` included, invisible to
+    * every reader), then the version is CLAIMED by one rename of the
+    * staged directory onto the final path. Two racing committers stage
+    * independently; exactly one rename claims the version and the loser
+    * gets a [[CommitConflictException]] — never two writers interleaving
+    * under one `v=N` directory. [[committedVersions]] never surfaces a
+    * half-written commit, a commit that crashes mid-stage leaves only
+    * invisible stage garbage, and — versions being immutable
+    * (`factors/requirements.yaml:136-138`) and ids monotonic —
+    * re-committing a committed or retired id fails loudly instead of
+    * silently rewriting history.
     */
   def commit(spark: SparkSession, base: String, version: Long,
       manifest: DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(mdir(base, version))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
-    // both pre-stage guards throw the TYPED conflict (VERDICT r13
-    // what's-wrong #2 + ADVICE r13): for a retry client either one
-    // means "this candidate is dead against committed history — refresh
-    // and retry", and matching on the type removes the message-substring
-    // coupling commitNext used to carry. A racer that commits N and N+1
-    // and RETIRES N during the attempt window fires the monotonic guard
-    // instead of the marker one (ADVICE r13 low #2) — same conflict,
-    // same type, same retry.
-    if (fs.exists(marker))
+    val conf = spark.sparkContext.hadoopConfiguration
+    // both pre-stage guards throw the TYPED conflict: for a retry client
+    // either one means "this candidate is dead against committed
+    // history — refresh and retry"
+    if (log.isCommitted(conf, base, version))
       throw new CommitConflictException(
         s"snapshot version $version is already committed under $base — " +
           "versions are immutable; commit the next version instead")
-    // version ids are MONOTONIC (code-review r13): a commit below the
-    // head would re-mint an id retention deliberately dropped — a
-    // consumer pinned to the old v=N would silently resolve different
-    // content. The head is always committed (retire keeps it), so any
-    // replayed/crashed intent at ≤ head is stale by construction.
-    if (!committedVersions(spark, base).lastOption.forall(_ < version))
-      throw new CommitConflictException(
-        s"snapshot commits are monotonic: v=$version is at or below the " +
-          s"committed head under $base — version ids are never re-minted")
+    log.requireAboveHead(conf, base, version,
+      "commit the next version instead")
     // (version, file) is the manifest's REQUIRED core; any further
     // columns — [[manifestForStats]]' row_count and min_/max_ bounds —
     // ride along verbatim, the way a table format's manifest carries
@@ -164,122 +79,52 @@ object SnapshotStore {
     // a version-literal mismatch between the rows and the commit call
     // would otherwise land an EMPTY manifest under a green _SUCCESS —
     // and vacuumExecute would read 'this version pins no files' and
-    // delete the store (code-review r12); fail at commit time instead.
-    // The rows MATERIALIZE driver-side here (r16 optimization): the old
-    // isEmpty guard planned and executed the manifest plan once, and
-    // the stage write below executed it AGAIN — manifests are
-    // O(#files) commit metadata (the versionGroups discipline reads
-    // them back driver-side too), so one collect feeds both the guard
-    // and a local-relation write
+    // delete the store; fail at commit time instead. The rows
+    // MATERIALIZE driver-side once: manifests are O(#files) commit
+    // metadata, and one collect feeds both this guard and the
+    // local-relation write below
     val localRows = rows.collect()
     require(localRows.nonEmpty,
       s"no manifest rows carry version $version — the rows passed to " +
         "commit() must be tagged with the version being committed")
-    // sanity cap (ADVICE r16): manifests are O(#files) commit metadata —
-    // a caller that passes a pathological DATA-scale frame here must
-    // fail loudly instead of ballooning the driver; 4M rows is far past
-    // any real file count at this store's file sizing and still only
-    // ~hundreds of MB of driver heap
+    // sanity cap: a caller that passes a pathological DATA-scale frame
+    // here must fail loudly instead of ballooning the driver; 4M rows is
+    // far past any real file count at this store's file sizing and
+    // still only ~hundreds of MB of driver heap
     require(localRows.length <= (1 << 22),
       s"commit() was handed ${localRows.length} manifest rows for " +
         s"v=$version under $base — manifests are O(#files) metadata; " +
         "a row count this size means a data frame was passed by mistake")
-    val stage = new org.apache.hadoop.fs.Path(
-      s"$base/_manifest/.stage-v=$version-${java.util.UUID.randomUUID()}")
-    val lock = lockFor(base, version)
-    // the stage write sits INSIDE the cleanup scope (code-review r13):
-    // a mid-write crash must delete its partial stage immediately, the
-    // same invariant VectorArtifact.stagedPublish keeps — not wait for
-    // a purgeRetired mtime sweep
-    try {
-      // the stage write is DRIVER-SIDE parquet I/O (r17 — the write half
-      // of the MetaIo discipline): the rows are already materialized
-      // local metadata, and the old one-task Spark write paid planning +
-      // job + committer per commit. Schemas outside the metadata type
+    // the monotonic guard RE-CHECKS under the claim lock: a racer that
+    // committed this id (or this id and a successor whose retention then
+    // retired it) during staging leaves the candidate at or below the head
+    log.claim(conf, base, version, replace = false)(
+      log.requireAboveHead(conf, base, version,
+        "retry at the next version")) { (stage, _) =>
+      // the stage write is DRIVER-SIDE parquet I/O: the rows are already
+      // materialized local metadata. Schemas outside the metadata type
       // universe (none today) keep the Spark path.
       if (MetaIo.writableSchema(rows.schema))
-        MetaIo.writeRows(spark.sparkContext.hadoopConfiguration,
-          stage.toString, rows.schema, localRows.toSeq)
+        MetaIo.writeRows(conf, stage, rows.schema, localRows.toSeq)
       else spark.createDataFrame(
           java.util.Arrays.asList(localRows: _*), rows.schema)
-        .coalesce(1).write.parquet(stage.toString)
-      lock.synchronized {
-      if (fs.exists(marker))
-        throw new CommitConflictException(
-          s"snapshot version $version under $base was committed by a " +
-            "concurrent committer while this commit was staging — " +
-            "versions are immutable; retry at the next version")
-      // the monotonic guard RE-CHECKS under the claim lock (code-review
-      // r14 #2): a racer that committed this id AND a successor, whose
-      // id retention then retired DURING our staging window, leaves no
-      // marker for the check above — claiming here would re-mint a
-      // dropped id below the head with different content
-      if (!committedVersions(spark, base).lastOption.forall(_ < version))
-        throw new CommitConflictException(
-          s"snapshot commits are monotonic: v=$version fell at or " +
-            s"below the committed head under $base while this commit " +
-            "was staging — version ids are never re-minted; retry at " +
-            "the next version")
-      // a directory without the marker is a pre-CAS crashed orphan —
-      // repairing it by re-claiming IS the documented recovery. The
-      // marker is RE-CHECKED immediately before the delete (code-review
-      // r14 #2): cross-process, a racer's atomic rename (which always
-      // carries the marker — stages are fully written first) can land
-      // between the check above and here; the re-check narrows that
-      // TOCTOU to microseconds. Residual (documented): on a
-      // non-rename-atomic object store a multi-PROCESS race on one
-      // version id retains a tiny destroy window — deployments there
-      // should funnel same-id repair through purgeRetired's
-      // grace-windowed sweep instead of concurrent re-commits.
-      if (fs.exists(p)) {
-        if (fs.exists(marker))
-          throw new CommitConflictException(
-            s"snapshot version $version under $base was committed by a " +
-              "concurrent committer during the claim — retry at the " +
-              "next version")
-        fs.delete(p, true)
-      }
-      if (!fs.rename(stage, p))
-        throw new CommitConflictException(
-          s"claiming snapshot version $version under $base failed: a " +
-            "concurrent committer won the rename race")
-      }
-    } finally {
-      if (fs.exists(stage)) fs.delete(stage, true)
+        .coalesce(1).write.parquet(stage)
     }
   }
 
   /** Claim the NEXT free version with bounded conflict retries — the
-    * append-ingest client shape (VERDICT r12 next #1's second clause:
-    * the CAS loser retries at N+1 rather than aborting). Each attempt
-    * re-reads the latest committed version, asks `rowsFor` for manifest
-    * rows tagged with the candidate version, and tries [[commit]]; a
-    * [[CommitConflictException]] — thrown by the claim race or by either
-    * pre-stage guard when a racer made the candidate dead — refreshes
-    * the candidate and retries. Returns the version claimed; rethrows
-    * the last conflict when contention outlasts `maxAttempts`. Any
-    * failure NOT explained by the candidate having been taken propagates
-    * immediately (a broken manifest must not be retried into a
-    * different version).
+    * append-ingest client shape ([[CommitLog.retryAtNext]]: the loser of
+    * a claim race retries at N+1 rather than aborting). Each attempt asks
+    * `rowsFor` for manifest rows tagged with the candidate version and
+    * tries [[commit]]. Returns the version claimed; rethrows the last
+    * conflict when contention outlasts `maxAttempts`. A broken manifest
+    * fails as a plain IllegalArgumentException and propagates at once: it
+    * must not be retried into a different version.
     */
   def commitNext(spark: SparkSession, base: String,
-      maxAttempts: Int = 5)(rowsFor: Long => DataFrame): Long = {
-    require(maxAttempts >= 1, "commitNext needs at least one attempt")
-    var last: CommitConflictException = null
-    var i = 0
-    while (i < maxAttempts) {
-      val next = committedVersions(spark, base).lastOption.fold(0L)(_ + 1)
-      // only the TYPED conflict retries (VERDICT r13 what's-wrong #2:
-      // the old message-substring match on the pre-stage require is
-      // gone — commit() now throws CommitConflictException from both
-      // pre-stage guards). A broken rowsFor manifest still fails as a
-      // plain IllegalArgumentException and propagates: it must not be
-      // retried into a different version.
-      try { commit(spark, base, next, rowsFor(next)); return next }
-      catch { case e: CommitConflictException => last = e; i += 1 }
-    }
-    throw last
-  }
+      maxAttempts: Int = 5)(rowsFor: Long => DataFrame): Long =
+    log.retryAtNext(spark.sparkContext.hadoopConfiguration, base,
+      maxAttempts)((_, next) => commit(spark, base, next, rowsFor(next)))
 
   /** The APPEND COMMIT as a first-class client (code-review r13 round
     * 3 — the scaladoc's "an append commit pins the previous version's
@@ -353,14 +198,8 @@ object SnapshotStore {
     if (batchTag.exists(t => batchTagCommitted(spark, base, t)))
       return committed.last
     val conf = spark.sparkContext.hadoopConfiguration
-    val newFiles = newDirs.flatMap { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(s => fs.makeQualified(s.getPath).toString)
-    }
+    val newFiles = newDirs.flatMap(d =>
+      MetaIo.parquetFiles(conf, d).map(_.getPath.toString))
     if (newFiles.isEmpty) return committed.last // zero-row batch: no-op
     val headFiles = MetaIo.groups(conf, mdir(base, committed.last))
       .flatMap(g => MetaIo.optString(g, "file")).toSet
@@ -423,18 +262,10 @@ object SnapshotStore {
   }
 
   /** Versions with a completed commit marker, ascending — a
-    * metadata-scale directory listing (the VectorArtifact.versions
-    * geometry on the manifest store).
+    * metadata-scale directory listing ([[CommitLog.versions]]).
     */
-  def committedVersions(spark: SparkSession, base: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$base/_manifest")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v=\\d+") &&
-        fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong).sorted
-  }
+  def committedVersions(spark: SparkSession, base: String): Seq[Long] =
+    log.versions(spark.sparkContext.hadoopConfiguration, base)
 
   /** The durable manifest TABLE: every committed version's rows, read
     * back from the store — what [[readAt]]/[[changedFiles]]/[[vacuum]]
@@ -1292,12 +1123,8 @@ object SnapshotStore {
         // coalesce(true): a NULL key is outside any range — keep it
         .filter(coalesce(!col(c).between(lit(lo), lit(hi)), lit(true)))
       Layout.writeClustered(survivors, rewriteDir, c, numFiles)
-      val written = {
-        val p = new org.apache.hadoop.fs.Path(rewriteDir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.exists(p) && fs.listStatus(p).exists(s =>
-          s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
-      }
+      val written = MetaIo.parquetFiles(spark.sparkContext.hadoopConfiguration,
+        rewriteDir).exists(_.getLen > 0)
       if (!written && hit.size == total)
         // every file hit and nothing survived: the "delete" empties the
         // table — an empty version cannot be committed; name the real
@@ -1375,11 +1202,9 @@ object SnapshotStore {
     // caller's retry supplies a fresh deleteDir derived from the new
     // head (commit() re-checks authoritatively under the claim lock)
     requireFromHead(spark, base, fromVersion, "a MoR delete")
-    if (!committedVersions(spark, base).lastOption.forall(_ < version))
-      throw new CommitConflictException(
-        s"snapshot commits are monotonic: v=$version is at or below " +
-          s"the committed head under $base — retry the MoR delete at " +
-          "the next version with a fresh deleteDir")
+    log.requireAboveHead(spark.sparkContext.hadoopConfiguration, base,
+      version, "retry the MoR delete at the next version with a fresh " +
+        "deleteDir")
     val k = keys.select(keyCols.map(col): _*)
       .filter(keyCols.map(c => col(c).isNotNull).reduce(_ && _))
       .distinct()
@@ -1391,11 +1216,8 @@ object SnapshotStore {
     // funnel through one write task. Every reader lists the dir plural.
     k.repartition(sidecarFileCount(n)).write.parquet(deleteDir)
     val conf = spark.sparkContext.hadoopConfiguration
-    val dp = new org.apache.hadoop.fs.Path(deleteDir)
-    val fs = dp.getFileSystem(conf)
-    val delFiles = fs.listStatus(dp).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => fs.makeQualified(s.getPath).toString).sorted
+    val delFiles = MetaIo.parquetFiles(conf, deleteDir)
+      .map(_.getPath.toString).sorted
     require(delFiles.nonEmpty,
       s"the delete sidecar write under $deleteDir produced no files")
     val prev = manifestDfAt(spark, base, fromVersion)
@@ -1407,12 +1229,11 @@ object SnapshotStore {
       lit(keyCols.mkString(",")).as("delete_key"))
     // a conflict surfacing from commit()'s in-lock re-checks (or any
     // commit failure) lands AFTER the sidecar write — reclaim the dir
-    // (guarded: only when the version did not durably commit) so the
-    // documented retry-with-fresh-dirs leaves no orphaned data
-    // (ADVICE r15 low + code-review r16)
-    commitReclaiming(spark, base, version,
-      prev.unionByName(delRows, allowMissingColumns = true),
-      Seq(deleteDir))
+    // unless the version committed, so a retry with fresh dirs leaves
+    // no orphaned data
+    log.reclaimUnlessCommitted(conf, base, version, Seq(deleteDir))(
+      commit(spark, base, version,
+        prev.unionByName(delRows, allowMissingColumns = true)))
     n
   }
 
@@ -1427,32 +1248,6 @@ object SnapshotStore {
     math.max(1L, (nKeys + sidecarTargetKeysPerFile - 1) /
       sidecarTargetKeysPerFile).toInt
   private[graft] var sidecarTargetKeysPerFile: Long = 4L * 1024 * 1024
-
-  /** The shared commit step of every sidecar-publishing path
-    * ([[deleteCommitMor]] / [[mergeCommitMor]] / [[deleteCommitPos]]):
-    * commit the manifest, and on failure reclaim the freshly-written
-    * `dirs` — but ONLY when the version did NOT durably commit
-    * (code-review r16: `commit()` can throw from its stage-cleanup
-    * `finally` AFTER the claim rename succeeded on a remote FS; an
-    * unconditional cleanup would then delete files the committed
-    * manifest references — durable data loss under a committed
-    * version. A failed-and-unclaimed candidate's manifest references
-    * nothing, so reclaiming its dirs orphans nothing and the
-    * documented retry-with-fresh-dirs starts clean).
-    */
-  private def commitReclaiming(spark: SparkSession, base: String,
-      version: Long, manifest: DataFrame, dirs: Seq[String]): Unit =
-    try commit(spark, base, version, manifest)
-    catch { case t: Throwable =>
-      if (!committedVersions(spark, base).contains(version))
-        dirs.foreach { d =>
-          val p = new org.apache.hadoop.fs.Path(d)
-          try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-          catch { case _: java.io.IOException => () } // best-effort
-        }
-      throw t
-    }
 
   /** A version's committed per-file [min, max] bounds on `c`,
     * normalized-path keyed — the driver-side metadata
@@ -1558,11 +1353,9 @@ object SnapshotStore {
     require(keys.columns.contains(c),
       s"deleteCommitPos needs a `$c` column on the key batch")
     requireFromHead(spark, base, fromVersion, "a positional delete")
-    if (!committedVersions(spark, base).lastOption.forall(_ < version))
-      throw new CommitConflictException(
-        s"snapshot commits are monotonic: v=$version is at or below " +
-          s"the committed head under $base — retry the positional " +
-          "delete at the next version with a fresh deleteDir")
+    log.requireAboveHead(spark.sparkContext.hadoopConfiguration, base,
+      version, "retry the positional delete at the next version with a fresh " +
+        "deleteDir")
     // checkpointed: the distinct batch feeds THREE jobs (the prune's
     // min/max, its occupied-bins distinct, the matched semi-join) —
     // an expensive upstream key plan must not recompute per job
@@ -1601,11 +1394,8 @@ object SnapshotStore {
     matched.get.repartition(sidecarFileCount(nPos)).write
       .parquet(deleteDir)
     val conf = spark.sparkContext.hadoopConfiguration
-    val dp = new org.apache.hadoop.fs.Path(deleteDir)
-    val fs = dp.getFileSystem(conf)
-    val delFiles = fs.listStatus(dp).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => fs.makeQualified(s.getPath).toString).sorted
+    val delFiles = MetaIo.parquetFiles(conf, deleteDir)
+      .map(_.getPath.toString).sorted
     require(delFiles.nonEmpty,
       s"the positional sidecar write under $deleteDir produced no files")
     val prev = manifestDfAt(spark, base, fromVersion)
@@ -1614,9 +1404,9 @@ object SnapshotStore {
     val delRows = delFiles.toDF("file").select(
       lit(version).as("version"), col("file"),
       lit("pos_delete").as("kind"), lit(c).as("delete_key"))
-    commitReclaiming(spark, base, version,
-      prev.unionByName(delRows, allowMissingColumns = true),
-      Seq(deleteDir))
+    log.reclaimUnlessCommitted(conf, base, version, Seq(deleteDir))(
+      commit(spark, base, version,
+        prev.unionByName(delRows, allowMissingColumns = true)))
     nPos
   }
 
@@ -1735,12 +1525,8 @@ object SnapshotStore {
     val merged = Cdc.applyChangeLog(baseScan, changes, Seq(c),
       seqCol, opCol)
     Layout.writeClustered(merged, rewriteDir, c, numFiles)
-    val written = {
-      val p = new org.apache.hadoop.fs.Path(rewriteDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && fs.listStatus(p).exists(s =>
-        s.isFile && s.getPath.getName.endsWith(".parquet") && s.getLen > 0)
-    }
+    val written = MetaIo.parquetFiles(spark.sparkContext.hadoopConfiguration,
+      rewriteDir).exists(_.getLen > 0)
     if (!written && hitFiles.size == byFile.size)
       throw new IllegalArgumentException(
         s"mergeCommit removes every row of v=$fromVersion under $base " +
@@ -1814,11 +1600,8 @@ object SnapshotStore {
     // deleteCommitMor discipline): a race loser must get the typed
     // conflict while its dirs are still clean
     requireFromHead(spark, base, fromVersion, "a MoR MERGE")
-    if (!committedVersions(spark, base).lastOption.forall(_ < version))
-      throw new CommitConflictException(
-        s"snapshot commits are monotonic: v=$version is at or below " +
-          s"the committed head under $base — retry the MoR merge at " +
-          "the next version with fresh dirs")
+    log.requireAboveHead(spark.sparkContext.hadoopConfiguration, base,
+      version, "retry the MoR merge at the next version with fresh dirs")
     val k = changes.select(keyCols.map(col): _*)
       .filter(keyCols.map(c => col(c).isNotNull).reduce(_ && _))
       .distinct()
@@ -1828,15 +1611,8 @@ object SnapshotStore {
     // CDC-window-sized sidecar must not write through one task
     k.repartition(sidecarFileCount(nKeys)).write.parquet(deleteDir)
     val conf = spark.sparkContext.hadoopConfiguration
-    def parquetFiles(dir: String): Seq[String] = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(s => fs.makeQualified(s.getPath).toString).sorted
-    }
-    val delFiles = parquetFiles(deleteDir)
+    val delFiles = MetaIo.parquetFiles(conf, deleteDir)
+      .map(_.getPath.toString).sorted
     require(delFiles.nonEmpty,
       s"the merge sidecar write under $deleteDir produced no files")
     // the surviving post-images: per-key latest change, op != D — an
@@ -1855,8 +1631,6 @@ object SnapshotStore {
       lit(keyCols.mkString(",")).as("delete_key"),
       lit(version).as("delete_v"))
     val nImages = images.count()
-    // image/sidecar reclaim on post-write failure (ADVICE r15 low +
-    // code-review r16: guarded — see commitReclaiming)
     val manifest =
       if (nImages == 0) // all-delete changelog: sidecar only
         prev.unionByName(delRows, allowMissingColumns = true)
@@ -1868,8 +1642,9 @@ object SnapshotStore {
         prev.unionByName(delRows, allowMissingColumns = true)
           .unionByName(fresh, allowMissingColumns = true)
       }
-    commitReclaiming(spark, base, version, manifest,
-      Seq(deleteDir, imageDir))
+    // image/sidecar reclaim on a commit failure, as in deleteCommitMor
+    log.reclaimUnlessCommitted(conf, base, version,
+      Seq(deleteDir, imageDir))(commit(spark, base, version, manifest))
     (nKeys, nImages)
   }
 
@@ -1971,15 +1746,12 @@ object SnapshotStore {
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     drop.foreach { v =>
-      // under the committer's stripe (code-review r14 #2): a same-JVM
-      // commit claiming this id must never interleave with the
-      // tombstone rename — the claim path's in-lock re-checks rely on
-      // retire being serialized against them
-      lockFor(base, v).synchronized {
-        val src = new org.apache.hadoop.fs.Path(mdir(base, v))
-        val dst = new org.apache.hadoop.fs.Path(
-          s"$base/_manifest/.retired-v=$v-${java.util.UUID.randomUUID()}")
-        require(fs.rename(src, dst),
+      // under the committer's stripe: a same-JVM commit claiming this id
+      // must never interleave with the tombstone rename — the claim's
+      // in-lock re-checks rely on retire being serialized against them
+      log.locked(base, v) {
+        require(fs.rename(new org.apache.hadoop.fs.Path(mdir(base, v)),
+            log.tombstone(base, v)),
           s"retiring snapshot version $v under $base failed: could not " +
             "tombstone its manifest directory")
       }
@@ -2000,69 +1772,18 @@ object SnapshotStore {
     */
   def purgeRetired(spark: SparkSession, base: String,
       stageGraceMs: Long = 3600000L): Seq[String] = {
-    val mroot = new org.apache.hadoop.fs.Path(s"$base/_manifest")
-    val fs = mroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mroot)) return Seq.empty
-    val now = System.currentTimeMillis()
-    fs.listStatus(mroot).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(".stage-")
-        && now - s.getModificationTime > stageGraceMs)
-      .foreach(s => fs.delete(s.getPath, true))
-    // reclaimable remains: retire()'s tombstones, plus legacy/crashed
-    // marker-less v=N dirs. The marker is checked PER DIRECTORY, fresh
-    // — not against a pre-listing committed-set snapshot (code-review
-    // r13 round 2: a committer's rename can land v=N between that
-    // snapshot and the listing, and a stale set would classify the
-    // freshly-COMMITTED version as retired and destroy it)
-    def isOrphan(s: org.apache.hadoop.fs.FileStatus): Boolean =
-      s.getPath.getName.matches("v=\\d+") && !fs.exists(
-        new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS"))
-    val retiredDirs = fs.listStatus(mroot).toSeq
-      .filter(s => s.isDirectory &&
-        (s.getPath.getName.startsWith(".retired-") || isOrphan(s)))
-      .map(_.getPath)
-    if (retiredDirs.isEmpty) return Seq.empty
     // both file sets are commit metadata — driver-side reads (MetaIo),
     // no cluster jobs on the maintenance path
     val conf = spark.sparkContext.hadoopConfiguration
-    def filesOf(dirs: Seq[String]): Set[String] = dirs
-      .flatMap(d => MetaIo.groups(conf, d)
-        .flatMap(g => MetaIo.optString(g, "file"))).toSet
-    // claim the DIRS first: tombstones unconditionally, marker-less
-    // v=N orphans under the committer's stripe with a marker re-check —
-    // a same-JVM commit repairing/claiming that id between the listing
-    // and here must win, not be swept. File deletion happens only for
-    // dirs actually claimed, against pins RECOMPUTED after the claims,
-    // so a concurrently-committed version's files survive no matter
-    // which side of the listing its rename landed on.
-    val claimed = retiredDirs.flatMap { d =>
-      val files = filesOf(Seq(d.toString))
-      if (d.getName.startsWith(".retired-")) {
-        fs.delete(d, true); files
-      } else {
-        val v = d.getName.stripPrefix("v=").toLong
-        lockFor(base, v).synchronized {
-          if (fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-            Set.empty[String]
-          else { fs.delete(d, true); files }
-        }
-      }
-    }.toSet
-    val keptFiles = filesOf(
-      committedVersions(spark, base).map(v => mdir(base, v)))
-    // sharing detection normalizes both sides through PathNorm
-    // (code-review r13; VERDICT r13 what's-wrong #1 moved it off
-    // java.net.URI, which throws on a legal space-bearing filename —
-    // MID-SWEEP, after deletes have started): a store whose older
-    // commits wrote raw paths and whose newer ones write qualified URIs
-    // must still recognize the two spellings as the same file — a
-    // missed match here DELETES a file a kept version pins
-    val keptNorm = keptFiles.map(PathNorm(_))
-    val deletable =
-      claimed.filterNot(f => keptNorm(PathNorm(f))).toSeq.sorted
-    deletable.foreach(f =>
-      fs.delete(new org.apache.hadoop.fs.Path(f), false))
-    deletable
+    def filesOf(dir: String): Seq[String] =
+      MetaIo.groups(conf, dir).flatMap(g => MetaIo.optString(g, "file"))
+    log.purge(conf, base, stageGraceMs) { d =>
+      // a tombstone or orphan manifest names the files it pinned; the
+      // directory itself goes with the claim
+      val files = filesOf(d.toString)
+      d.getFileSystem(conf).delete(d, true)
+      files
+    }(v => filesOf(mdir(base, v)))._2
   }
 
   /** [[vacuumExecute]] guarded by CROSS-STORE provenance (VERDICT r12

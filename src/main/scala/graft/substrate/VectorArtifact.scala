@@ -80,84 +80,52 @@ object VectorArtifact {
       corpusBase: Option[String] = None,
       corpusVersion: Option[Long] = None)
 
-  /** In-JVM claim serialization for [[stagedPublish]] — see
-    * SnapshotStore.commitLocks for the contract. STRIPED (code-review
-    * r13): a per-(base, version) map grows a monitor per publish for
-    * the JVM lifetime; 64 hash stripes bound the memory. [[purgeRetired]]
-    * takes the same stripe before destroying a version's remains.
+  /** Versions live under `<base>/v=N`, committed by `meta/_SUCCESS`
+    * (the meta row is written last inside the stage).
     */
-  private val claimLocks = Array.fill(64)(new Object)
-  private def lockFor(base: String, version: Long): Object =
-    claimLocks(math.floorMod(s"$base#v=$version".hashCode, 64))
+  private val log = new CommitLog(base => base, "meta/_SUCCESS")
 
-  /** The stage-then-claim publish protocol every publish form commits
-    * through (VERDICT r12 next #1 — optimistic concurrency): `write`
-    * lays the COMPLETE version (skinny tables, codes, manifest, meta)
-    * under an invisible `.stage-v=N-<uuid>` directory, then one rename
-    * claims `v=N`. Two racing publishers of the same version stage
-    * independently and exactly one rename wins; the loser gets a
-    * [[CommitConflictException]] and its stage is cleaned up — writes
-    * can never interleave under one version directory. A publish that
-    * crashes mid-stage leaves the PREVIOUS commit serving untouched
-    * (strictly stronger than the r12 decommit-first rewrite, which left
-    * the version invisible until repair).
+  /** The stage-then-claim publish every publish form commits through
+    * ([[CommitLog.claim]], optimistic concurrency): `write` lays the
+    * COMPLETE version (skinny tables, codes, manifest, meta) under an
+    * invisible stage directory, then one rename claims `v=N`. Two racing
+    * publishers of the same version stage independently and exactly one
+    * rename wins; the loser gets a [[CommitConflictException]] and its
+    * stage is cleaned up. A publish that crashes mid-stage leaves the
+    * PREVIOUS commit serving untouched.
     *
     * Re-publish vs race is the CALLER's intent, never arrival timing
     * (`allowRepublish`): only [[save]]/[[saveClustered]] may
     * deliberately swap a committed version (leaf rewrite / orphan
     * repair), and only one that was ALREADY committed when this publish
-    * began. A DERIVED publish (append/incremental/delete/compact)
-    * derives from a `fromVersion` and claims a NEW version — finding its
-    * target committed, whenever that happens, means a racer won and the
-    * intent is STALE; it must fail with the named conflict and be
-    * re-derived at N+1 ([[retryPublish]]). The r13 first cut measured
-    * `committedAtStart` at stage entry for every form, which conflated
-    * the two: a racer that arrived AFTER the winner's claim (the
-    * compactor doing more pre-stage work than the appender — found by
-    * `ann_stored_index_concurrent`'s requires on first run) classified
-    * itself as a deliberate re-publish and silently clobbered the
-    * winner's commit — a lost update under a green commit. `finalize`
-    * rewrites a staged file's qualified URI to the path it will hold
-    * after the claim — manifest rows must carry FINAL paths.
+    * began. A DERIVED publish (append/incremental/delete/compact) claims
+    * a NEW version — finding its target committed, whenever that
+    * happens, means a racer won and the intent is STALE; it fails with
+    * the named conflict and is re-derived at N+1 ([[retryPublish]]).
+    * Judging by the state at stage entry alone would let a racer that
+    * arrives after the winner's claim pass as a deliberate re-publish
+    * and silently clobber the winner's commit. `write` also receives the
+    * function that rewrites a staged file's qualified URI to the path it
+    * will hold after the claim — manifest rows must carry FINAL paths.
     */
   private def stagedPublish(spark: SparkSession, base: String,
       version: Long, allowRepublish: Boolean = false)(
       write: (String, String => String) => Unit): Unit = {
-    val finalDir = s"$base/v=$version"
-    val fp = new org.apache.hadoop.fs.Path(finalDir)
-    val fs = fp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committedAtEntry = versions(spark, base).contains(version)
-    val committedAtStart = allowRepublish && committedAtEntry
-    if (!allowRepublish && committedAtEntry)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val committedAtStart = log.isCommitted(conf, base, version)
+    if (!allowRepublish && committedAtStart)
       throw new CommitConflictException(
         s"v=$version under $base is already committed — a derived " +
           "publish claims a NEW version; this intent is stale (a " +
           "concurrent publisher won) — re-derive it at the next version")
-    val stage = new org.apache.hadoop.fs.Path(
-      s"$base/.stage-v=$version-${java.util.UUID.randomUUID()}")
-    val qStage = fs.makeQualified(stage).toString
-    val qFinal = fs.makeQualified(fp).toString
-    val finalize = (f: String) =>
-      if (f.startsWith(qStage)) qFinal + f.stripPrefix(qStage) else f
-    val lock = lockFor(base, version)
-    try {
-      write(stage.toString, finalize)
-      lock.synchronized {
-        if (!committedAtStart && versions(spark, base).contains(version))
-          throw new CommitConflictException(
-            s"v=$version under $base was committed by a concurrent " +
-              "publisher while this publish was staging — exactly one " +
-              "committer claims a version; retry at the next version")
-        requireUnreferenced(spark, base, version)
-        if (fs.exists(fp)) { decommit(spark, finalDir); fs.delete(fp, true) }
-        if (!fs.rename(stage, fp))
-          throw new CommitConflictException(
-            s"claiming v=$version under $base failed: a concurrent " +
-              "committer won the rename race")
-      }
-    } finally {
-      if (fs.exists(stage)) fs.delete(stage, true)
-    }
+    log.claim(conf, base, version, replace = allowRepublish) {
+      if (!committedAtStart && log.isCommitted(conf, base, version))
+        throw new CommitConflictException(
+          s"v=$version under $base was committed by a concurrent " +
+            "publisher while this publish was staging — exactly one " +
+            "committer claims a version; retry at the next version")
+      requireUnreferenced(spark, base, version)
+    }(write)
   }
 
   /** @param corpus the SnapshotStore (base, version) whose corpus
@@ -390,20 +358,13 @@ object VectorArtifact {
     * must not be retried into a different version.
     */
   def retryPublish(spark: SparkSession, base: String,
-      maxAttempts: Int = 5)(attempt: (Long, Long) => Unit): Long = {
-    require(maxAttempts >= 1, "retryPublish needs at least one attempt")
-    var last: CommitConflictException = null
-    var i = 0
-    while (i < maxAttempts) {
-      val vs = versions(spark, base)
-      require(vs.nonEmpty,
+      maxAttempts: Int = 5)(attempt: (Long, Long) => Unit): Long =
+    log.retryAtNext(spark.sparkContext.hadoopConfiguration, base,
+        maxAttempts) { (head, next) =>
+      require(head.nonEmpty,
         s"no committed version under $base to derive a publish from")
-      val from = vs.last
-      try { attempt(from, from + 1); return from + 1 }
-      catch { case e: CommitConflictException => last = e; i += 1 }
+      attempt(head.get, next)
     }
-    throw last
-  }
 
   /** The maintenance POLICY behind [[compactPublish]] — which cells a
     * maintenance window should rewrite: every cell whose committed file
@@ -891,20 +852,6 @@ object VectorArtifact {
       (f, cell)
     }
 
-  /** DECOMMIT a version before (re)writing its data tables: delete the
-    * meta directory (the commit record) FIRST, so the version is
-    * invisible to [[versions]]/[[loadLatest]] for the whole rewrite and
-    * the reader-atomic publish contract holds for RE-publishes too, not
-    * just first-time publishes and crashed orphans (ADVICE r11 medium —
-    * previously the stale `meta/_SUCCESS` stayed visible while the data
-    * tables were overwritten underneath a concurrent load).
-    */
-  private def decommit(spark: SparkSession, dir: String): Unit = {
-    val meta = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(meta)) fs.delete(meta, true)
-  }
-
   /** Guard every (re)publish of `version`: a LATER committed version's
     * manifest may pin files under `v=<version>/codes` (the sharing
     * contract), and a rewrite would silently destroy them —
@@ -937,16 +884,8 @@ object VectorArtifact {
     * (save() writes meta last); half-written publishes and stray
     * non-numeric `v=` names are invisible rather than a crash.
     */
-  def versions(spark: SparkSession, base: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(base)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v=\\d+") &&
-        fs.exists(
-          new org.apache.hadoop.fs.Path(s.getPath, "meta/_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong).sorted
-  }
+  def versions(spark: SparkSession, base: String): Seq[Long] =
+    log.versions(spark.sparkContext.hadoopConfiguration, base)
 
   def load(spark: SparkSession, base: String, version: Long): Loaded = {
     val dir = s"$base/v=$version"
@@ -1065,7 +1004,10 @@ object VectorArtifact {
     require(keepLatest >= 1, "retire must keep at least one version")
     val vs = versions(spark, base)
     val drop = vs.dropRight(keepLatest)
-    drop.foreach(v => decommit(spark, s"$base/v=$v"))
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    drop.foreach(v =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$base/v=$v/meta"), true))
     drop
   }
 
@@ -1078,72 +1020,31 @@ object VectorArtifact {
     */
   def purgeRetired(spark: SparkSession, base: String,
       stageGraceMs: Long = 3600000L): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(base)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    // sweep crashed publishers' stage garbage (.stage-v=N-<uuid> dirs are
-    // uncommitted by construction), but only past a grace window — an
-    // IN-FLIGHT publish's stage must survive a concurrent maintenance
-    // pass (the same mtime discipline table formats use for orphan-file
-    // cleanup)
-    val now = System.currentTimeMillis()
-    fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(".stage-")
-        && now - s.getModificationTime > stageGraceMs)
-      .foreach(s => fs.delete(s.getPath, true))
-    // retired = meta-less v= dirs, the commit marker checked PER
-    // VERSION under the committer's stripe (code-review r13 round 2: a
-    // stale committed-set snapshot would classify a version whose
-    // publish rename landed between the snapshot and the listing as
-    // retired and destroy it). The claim deletes the skinny tables and
-    // records the codes files as they stood at claim time; a later
-    // re-publish of the id writes fresh uuid-named part files the
-    // recorded list cannot touch.
-    val candidates = fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v=\\d+"))
-      .map(_.getPath.getName.stripPrefix("v=").toLong).sorted
-    val claimed: Seq[(Long, Seq[String])] = candidates.flatMap { v =>
-      lockFor(base, v).synchronized {
-        val dir = s"$base/v=$v"
-        if (fs.exists(
-            new org.apache.hadoop.fs.Path(s"$dir/meta/_SUCCESS"))) None
-        else {
-          // shareable remains: code files AND delete sidecars (r15) —
-          // a descendant's manifest may pin either
-          val codes = listParquetFiles(spark, s"$dir/codes") ++
-            listParquetFiles(spark, s"$dir/deletes")
-          Seq("manifest", "codebook", "centroids").foreach { d =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$d"), true)
-          }
-          Some(v -> codes)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
+    // the claim deletes the skinny tables and reports the version's
+    // shareable remains — code files AND delete sidecars, either of which
+    // a descendant's manifest may pin — as they stood at claim time; a
+    // later re-publish of the id writes fresh uuid-named part files the
+    // reported list cannot touch
+    val (claimed, deleted) = log.purge(conf, base, stageGraceMs) { d =>
+      val remains = listParquetFiles(spark, s"$d/codes") ++
+        listParquetFiles(spark, s"$d/deletes")
+      Seq("manifest", "codebook", "centroids").foreach(t =>
+        fs.delete(new org.apache.hadoop.fs.Path(d, t), true))
+      remains
+    }(v => readManifestFull(spark, base, v).map(_._1))
+    val gone = deleted.toSet
+    claimed.flatMap { case (d, remains) =>
+      CommitLog.versionOf(d).map { v =>
+        // a version none of whose files is still pinned goes entirely —
+        // unless a committer re-claimed the id since
+        if (remains.forall(gone)) log.locked(base, v) {
+          if (!log.isCommitted(conf, base, v)) fs.delete(d, true)
         }
+        v
       }
     }
-    if (claimed.isEmpty) return Seq.empty
-    // pins recomputed AFTER the claims — any concurrently committed
-    // version is visible here, so its manifest-shared files survive no
-    // matter which side of the listing its rename landed on. Pin
-    // detection normalizes both sides through PathNorm (code-review
-    // r13; VERDICT r13 what's-wrong #1 moved it off java.net.URI, which
-    // throws on a legal space-bearing filename mid-sweep): legacy
-    // raw-path manifest rows and qualified listings must compare equal
-    // — a missed match DELETES a pinned file.
-    val pinned: Set[String] = versions(spark, base)
-      .flatMap(v => readManifestFull(spark, base, v).map(_._1))
-      .map(PathNorm(_)).toSet
-    claimed.foreach { case (v, codes) =>
-      val dir = s"$base/v=$v"
-      val (keep, del) = codes.partition(f => pinned(PathNorm(f)))
-      del.foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f), false))
-      if (keep.isEmpty) lockFor(base, v).synchronized {
-        // the dir may have been re-claimed by a committer since —
-        // re-check before removing it wholesale
-        if (!fs.exists(
-            new org.apache.hadoop.fs.Path(s"$dir/meta/_SUCCESS")))
-          fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      }
-    }
-    claimed.map(_._1)
   }
 
   def vacuum(spark: SparkSession, base: String,

@@ -114,7 +114,20 @@ class VectorArtifactSpec extends SparkSpec {
       new java.io.File(s"$tmp/v=9/codes").mkdirs()
       // a stray non-numeric directory must not throw either
       new java.io.File(s"$tmp/v=junk").mkdirs()
+      // a publish that crashed after staging, before its claim
+      new java.io.File(s"$tmp/.stage-v=1-x").mkdirs()
       assert(VectorArtifact.versions(spark, tmp) == Seq(0L))
+      assert(VectorArtifact.loadLatest(spark, tmp).version == 0L)
+      // purge reclaims the marker-less orphan but keeps a stage inside
+      // the grace window: an in-flight publish's stage must survive
+      assert(VectorArtifact.purgeRetired(spark, tmp) == Seq(9L))
+      assert(!new java.io.File(s"$tmp/v=9").exists())
+      assert(new java.io.File(s"$tmp/.stage-v=1-x").exists(),
+        "an in-flight publish's stage must survive the maintenance pass")
+      assert(VectorArtifact.purgeRetired(spark, tmp,
+        stageGraceMs = -1L).isEmpty)
+      assert(!new java.io.File(s"$tmp/.stage-v=1-x").exists(),
+        "past the grace window, crashed stage garbage is swept")
       assert(VectorArtifact.loadLatest(spark, tmp).version == 0L)
     }
   }
@@ -979,6 +992,15 @@ class VectorArtifactSpec extends SparkSpec {
         .limit(2).as[Long].collect().toSeq
       assert(VectorArtifact.codesForCells(spark, tmp, 0L, probed)
         .count() > 0)
+      // retention across the two spellings: publish and retire through
+      // the qualified base, purge through the raw path — one store, one
+      // set of claim stripes
+      VectorArtifact.saveClustered(spark, tmp, 1L, Dim, cents, cb, codes)
+      assert(VectorArtifact.retire(spark, tmp, keepLatest = 1) == Seq(0L))
+      assert(VectorArtifact.purgeRetired(spark, rawTmp) == Seq(0L))
+      assert(!new java.io.File(s"$rawTmp/v=0").exists(),
+        "the retired version must be reclaimed through the raw spelling")
+      assert(VectorArtifact.loadLatest(spark, tmp).codes.count() == 200L)
     }
   }
 
