@@ -31,21 +31,31 @@ final case class Check(
 
 object CheckDsl {
 
-  /** Read one driver-generated table. Filters/projections layered on top
-    * push down to the vectorized parquet scan (verified via explain).
+  /** Read one driver-generated table: the single parquet file
+    * `<dir>/<name>.parquet`. Filters/projections layered on top push down
+    * to the vectorized parquet scan (verified via explain). The schema
+    * comes from the file's footer on the driver (`MetaIo.readParquet`),
+    * so resolving a table runs no Spark job.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Pin UTC alongside nanosAsLong: `normalizeEventTs`'s NTZ→Timestamp cast
-    // interprets the naive wall-clock in the session timezone, while the LONG
-    // branch and the DuckDB oracle's epoch_us(ts) are both tz-independent
-    // epoch micros. Under a non-UTC driver session the NTZ path would shift
-    // every ts by the zone offset; pinning here makes both branches agree
-    // regardless of which SparkSession calls us.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    // The session confs the footer → schema conversion reads, so they
+    // are in place before it: nanosAsLong admits a TIMESTAMP(NANOS)
+    // `ts`, and UTC makes `normalizeEventTs`'s NTZ→Timestamp cast (which
+    // reads the naive wall-clock in the session timezone) agree with the
+    // LONG branch and the DuckDB oracle's epoch_us(ts), both
+    // tz-independent epoch micros — whichever SparkSession calls us.
+    // Written only when they differ: the settings are session-global,
+    // and concurrent checks call this from many threads.
+    setIfDifferent(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
+    setIfDifferent(spark, "spark.sql.session.timeZone", "UTC")
+    val df = graft.substrate.MetaIo.readParquet(spark,
+      Seq(s"$dir/$name.parquet"), mergeSchema = false)
     if (name == "events") normalizeEventTs(df) else df
   }
+
+  private def setIfDifferent(spark: SparkSession, key: String,
+      value: String): Unit =
+    if (!spark.conf.getOption(key).contains(value)) spark.conf.set(key, value)
 
   /** `events.ts` has shipped in two physical shapes across testdata
     * generations: TIMESTAMP(NANOS) — which Spark 4 refuses to read as a

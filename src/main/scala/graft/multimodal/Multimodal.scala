@@ -79,8 +79,7 @@ object Multimodal {
     * claim.
     */
   def mediaTable(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/documents.parquet").select(
+    graft.checks.CheckDsl.table(spark, dir, "documents").select(
       col("doc_id").as("media_id"),
       element_at(
         array(lit("image/png"), lit("audio/wav"), lit("video/mp4")),

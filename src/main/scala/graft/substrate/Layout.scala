@@ -293,7 +293,7 @@ object Layout {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val futs = tasks.map { case (members, outDir) =>
       Future {
-        spark.read.parquet(members: _*)
+        MetaIo.readParquet(spark, members, mergeSchema = false)
           .coalesce(1)
           .sortWithinPartitions(orderCol)
           .write.mode(SaveMode.Overwrite)

@@ -21,9 +21,12 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * and array-typed tables (codes, codebook, centroids) stay Spark
   * scans; relational manifest ALGEBRA (vacuum anti-joins, the
   * DataFrame-typed changedCells split) stays DataFrame — this is only
-  * the bounded driver-side collect path, done without a job.
+  * the bounded driver-side collect path, done without a job. The one
+  * exception is [[readParquet]]: every explicit-file DATA scan of the
+  * engine resolves its schema here, from the footers, so planning a
+  * read never schedules Spark's schema-inference job.
   */
-private[substrate] object MetaIo {
+private[graft] object MetaIo {
 
   /** The `*.parquet` files directly under `dir`, their paths fully
     * QUALIFIED (scheme + authority): a persisted manifest row must
@@ -39,6 +42,69 @@ private[substrate] object MetaIo {
       catch { case _: java.io.FileNotFoundException => Seq.empty }
     all.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map { s => s.setPath(fs.makeQualified(s.getPath)); s }
+  }
+
+  /** `f` over `xs`, in order, on a bounded pool (≤16 threads): footer
+    * reads are independent metadata I/O, so on a remote store their
+    * latencies overlap instead of adding up, while the driver holds only
+    * the results. A single item runs inline. A failure rethrows its own
+    * cause.
+    */
+  def inParallel[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    if (xs.size <= 1) xs.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(16, xs.size))
+      try xs.map(x => pool.submit(new java.util.concurrent.Callable[B] {
+          def call(): B = f(x)
+        })).map { fut =>
+          try fut.get()
+          catch { case e: java.util.concurrent.ExecutionException =>
+            throw e.getCause }
+        }
+      finally pool.shutdown()
+    }
+
+  /** A DataFrame over the explicit parquet `files`, planned WITHOUT a
+    * Spark job: `spark.read.parquet(files)` runs Spark's schema-inference
+    * job (one task per footer batch) before it returns, even to read one
+    * footer. Here the footers are read on the driver and converted with
+    * Spark's own footer → schema code under the session's parquet confs,
+    * so the relation returned — `spark.read.schema(s)` over the same
+    * files and options — is the one Spark's inference would have built:
+    *  - `mergeSchema` on: every footer, merged in path order by Spark's
+    *    `StructType.merge` (an incompatible pair fails as it does there);
+    *  - `mergeSchema` off: the one footer Spark samples — the first file
+    *    by qualified path.
+    * The session's `spark.sql.parquet.mergeSchema` default never applies:
+    * callers state the merge. An empty list has no schema and fails.
+    */
+  def readParquet(spark: org.apache.spark.sql.SparkSession,
+      files: Seq[String], mergeSchema: Boolean)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.GraftParquetSchema
+    require(files.nonEmpty,
+      "readParquet needs at least one file — an empty scan has no schema")
+    val options = Map("mergeSchema" -> mergeSchema.toString)
+    val conf = GraftParquetSchema.hadoopConf(spark, options)
+    val qualified = files.map { f =>
+      val p = new Path(f)
+      p.getFileSystem(conf).makeQualified(p)
+    }.sortBy(_.toString)
+    val converter = GraftParquetSchema.converter(spark)
+    val schemas = inParallel(
+        if (mergeSchema) qualified.distinct else qualified.take(1)) { p =>
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter
+          .SKIP_ROW_GROUPS)
+      org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+        .readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(p, footer), converter)
+    }
+    spark.read
+      .schema(schemas.reduceLeft(GraftParquetSchema.merge(spark, _, _)))
+      .options(options).parquet(files: _*)
   }
 
   /** One parquet file's schema, from its FOOTER, and all its rows as
@@ -212,59 +278,97 @@ private[substrate] object MetaIo {
     */
   def readRowsMerged(conf: Configuration, dirs: Seq[String])
       : (org.apache.spark.sql.types.StructType,
-         Seq[org.apache.spark.sql.Row]) = {
+         Seq[org.apache.spark.sql.Row]) =
+    rowsOf(dirs.flatMap(parquetFiles(conf, _)).map(readFile(conf, _)),
+      dirs.mkString(","))
+
+  /** [[readRows]] as a DataFrame: a LocalRelation when every column is
+    * in the metadata type universe, else a Spark scan of the same files
+    * ([[readParquet]]) — the shape of a table whose writer fell back to
+    * Spark because [[writableSchema]] refused its schema (a vector
+    * store's caller-supplied centroids).
+    */
+  def readTable(spark: org.apache.spark.sql.SparkSession, dir: String)
+      : org.apache.spark.sql.DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val statuses = parquetFiles(conf, dir)
+    val files = statuses.map(readFile(conf, _))
+    if (files.forall(_._1.getFields.asScala.forall(sparkType(_).isRight))) {
+      val (schema, rows) = rowsOf(files, dir)
+      spark.createDataFrame(rows.asJava, schema)
+    } else readParquet(spark, statuses.map(_.getPath.toString),
+      mergeSchema = false)
+  }
+
+  /** One footer field's Spark type, or why it lies outside the metadata
+    * type universe.
+    */
+  private def sparkType(t: org.apache.parquet.schema.Type)
+      : Either[String, org.apache.spark.sql.types.DataType] = {
     import org.apache.spark.sql.types._
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    def sparkType(t: org.apache.parquet.schema.Type): DataType = {
-      if (!t.isPrimitive) {
-        // the standard 3-level LIST layout [[writeRows]] produces for
-        // ARRAY<DOUBLE> (and Spark's own writer produces for legacy
-        // files): group (LIST) { repeated group list { element } }
-        val gt = t.asGroupType()
-        require(gt.getLogicalTypeAnnotation.isInstanceOf[
-            LogicalTypeAnnotation.ListLogicalTypeAnnotation] &&
-            gt.getFieldCount == 1,
-          s"metadata field ${t.getName} is a non-LIST group — outside " +
-            "the metadata type universe; read it with Spark")
-        val el = gt.getType(0).asGroupType().getType(0).asPrimitiveType()
-        require(el.getPrimitiveTypeName == PrimitiveTypeName.DOUBLE,
-          s"metadata LIST field ${t.getName} carries " +
-            s"${el.getPrimitiveTypeName} — only ARRAY<DOUBLE> supported")
-        return ArrayType(DoubleType, containsNull =
-          el.getRepetition !=
-            org.apache.parquet.schema.Type.Repetition.REQUIRED)
-      }
-      val pt = t.asPrimitiveType()
-      pt.getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT64 => LongType
-        case PrimitiveTypeName.INT32 => IntegerType
-        case PrimitiveTypeName.BINARY
-            if pt.getLogicalTypeAnnotation.isInstanceOf[
-              LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-          StringType
-        case PrimitiveTypeName.BINARY => BinaryType
-        case PrimitiveTypeName.BOOLEAN => BooleanType
-        case PrimitiveTypeName.DOUBLE => DoubleType
-        case other => throw new IllegalStateException(
-          s"metadata field ${t.getName} has parquet type $other — " +
-            "outside the metadata type universe; read it with Spark")
-      }
+    if (!t.isPrimitive) {
+      // the standard 3-level LIST layout [[writeRows]] produces for
+      // ARRAY<DOUBLE> (and Spark's own writer produces for legacy
+      // files): group (LIST) { repeated group list { element } }
+      val gt = t.asGroupType()
+      val isList = gt.getLogicalTypeAnnotation.isInstanceOf[
+          LogicalTypeAnnotation.ListLogicalTypeAnnotation] &&
+        gt.getFieldCount == 1 && !gt.getType(0).isPrimitive &&
+        gt.getType(0).asGroupType().getFieldCount == 1 &&
+        gt.getType(0).asGroupType().getType(0).isPrimitive
+      if (!isList) return Left(s"metadata field ${t.getName} is a " +
+        "non-LIST group — outside the metadata type universe; read it " +
+        "with Spark")
+      val el = gt.getType(0).asGroupType().getType(0).asPrimitiveType()
+      if (el.getPrimitiveTypeName != PrimitiveTypeName.DOUBLE)
+        return Left(s"metadata LIST field ${t.getName} carries " +
+          s"${el.getPrimitiveTypeName} — only ARRAY<DOUBLE> supported")
+      return Right(ArrayType(DoubleType, containsNull =
+        el.getRepetition !=
+          org.apache.parquet.schema.Type.Repetition.REQUIRED))
     }
-    val files = dirs.flatMap(parquetFiles(conf, _)).map(readFile(conf, _))
+    val pt = t.asPrimitiveType()
+    pt.getPrimitiveTypeName match {
+      case PrimitiveTypeName.INT64 => Right(LongType)
+      case PrimitiveTypeName.INT32 => Right(IntegerType)
+      case PrimitiveTypeName.BINARY
+          if pt.getLogicalTypeAnnotation.isInstanceOf[
+            LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
+        Right(StringType)
+      case PrimitiveTypeName.BINARY => Right(BinaryType)
+      case PrimitiveTypeName.BOOLEAN => Right(BooleanType)
+      case PrimitiveTypeName.DOUBLE => Right(DoubleType)
+      case other => Left(s"metadata field ${t.getName} has parquet type " +
+        s"$other — outside the metadata type universe; read it with Spark")
+    }
+  }
+
+  /** Rows of already-read files under one merged schema (the
+    * [[readRowsMerged]] contract); `where` names the source in errors.
+    */
+  private def rowsOf(
+      files: Seq[(org.apache.parquet.schema.MessageType, Seq[Group])],
+      where: String)
+      : (org.apache.spark.sql.types.StructType,
+         Seq[org.apache.spark.sql.Row]) = {
+    import org.apache.spark.sql.types._
     val gs = files.flatMap(_._2)
     // a LONG field reads INT32 values too (optLong widens)
     val fields = scala.collection.mutable.LinkedHashMap[String, DataType]()
     files.foreach { case (t, _) =>
       (0 until t.getFieldCount).foreach { i =>
         val f = t.getType(i)
-        val st = sparkType(f)
+        val st = sparkType(f).fold(e => throw new IllegalStateException(e),
+          identity)
         fields.get(f.getName) match {
           case Some(prev) if prev == st => ()
           case Some(prev) if Set(prev, st) == Set[DataType](IntegerType,
               LongType) => fields.put(f.getName, LongType)
           case Some(prev) => throw new IllegalArgumentException(
             s"metadata field ${f.getName} carries both $prev and $st " +
-              s"under ${dirs.mkString(",")} — schemas must agree to merge")
+              s"under $where — schemas must agree to merge")
           case None => fields.put(f.getName, st)
         }
       }

@@ -434,7 +434,7 @@ object SnapshotStore {
       keepPos: Boolean = false): DataFrame = {
     val merge = mergeFor(mergeSchema, deletes.nonEmpty)
     if (deletes.isEmpty && posFiles.isEmpty && !keepPos)
-      return spark.read.option("mergeSchema", merge).parquet(files: _*)
+      return MetaIo.readParquet(spark, files, merge)
     // positional sidecars name exact (file, row_index) pairs — no era
     // or scope logic: a position applies wherever its file is still
     // present (copy-rewrites refuse pending deletes, so it always is).
@@ -464,11 +464,11 @@ object SnapshotStore {
       }.toSeq.sortBy(_._2.min)
     val scan = eras.map { case (applicable, fs) =>
       applicable.foldLeft(withPos(
-        spark.read.option("mergeSchema", merge).parquet(fs: _*))) {
+        MetaIo.readParquet(spark, fs, merge))) {
         (df, d) =>
           if (!d.keys.forall(df.columns.contains)) df
           else df.join(
-            broadcast(spark.read.parquet(d.files: _*)
+            broadcast(MetaIo.readParquet(spark, d.files, mergeSchema = false)
               .select(d.keys.map(col): _*).distinct()),
             d.keys, "left_anti")
       }
@@ -476,7 +476,7 @@ object SnapshotStore {
     val applied =
       if (posFiles.isEmpty) scan
       else scan.join(
-        broadcast(spark.read.parquet(posFiles: _*)
+        broadcast(MetaIo.readParquet(spark, posFiles, mergeSchema = false)
           .select("_graft_file", "_graft_pos").distinct()),
         Seq("_graft_file", "_graft_pos"), "left_anti")
     if (keepPos || posFiles.isEmpty) applied
@@ -490,15 +490,17 @@ object SnapshotStore {
     readCore(spark, deletesOfGroups(gs), addedVOfGroups(gs), files,
       mergeSchema, posDeletesOfGroups(gs))
 
-  /** The scan's mergeSchema under pending deletes: a sidecar may key on
-    * a POST-EVOLUTION column, and an unmerged scan whose sampled footer
-    * predates the evolution would miss the key column and fail the
-    * anti-join nondeterministically (code-review r14 #2) — deletes
-    * force schema merging; delete-free reads keep the caller's choice.
+  /** The scan's mergeSchema. Invariant: a read under pending deletes
+    * sees every column any of its files carries. A sidecar may key on a
+    * POST-EVOLUTION column, and an unmerged scan samples one footer —
+    * when that footer predates the evolution the key column is missing
+    * and the anti-join would be skipped or fail depending on which file
+    * sorts first. So deletes force the merge; delete-free reads keep the
+    * caller's choice.
     */
-  private def mergeFor(mergeSchema: Boolean,
-      hasDeletes: Boolean): String =
-    (mergeSchema || hasDeletes).toString
+  private def mergeFor(mergeSchema: Boolean, hasDeletes: Boolean)
+      : Boolean =
+    mergeSchema || hasDeletes
 
   /** [[readAt]] resolving through the PERSISTED manifest. The file list
     * resolves DRIVER-SIDE without a Spark job (MetaIo — a table
@@ -516,8 +518,13 @@ object SnapshotStore {
     * columns null on every pre-evolution file, exactly how real table
     * formats serve a widened schema over immutable old files (no
     * rewrite — the old files ARE still the old versions' data).
-    * Off by default: schema union costs a footer read per file at
-    * planning, and a non-evolving store shouldn't pay it.
+    * Invariant: without the merge (and with no pending deletes, which
+    * force it — [[mergeFor]]), the read's schema is the footer of the
+    * version's first file by path (the one footer Spark samples), so a
+    * column that only later files carry is not served. Off by
+    * default because the merge reads every file's footer while planning
+    * (driver-side, [[MetaIo.readParquet]] — no job either way), and a
+    * non-evolving store has nothing to merge.
     */
   def readAt(spark: SparkSession, base: String, version: Long,
       mergeSchema: Boolean): DataFrame = {
@@ -571,14 +578,8 @@ object SnapshotStore {
         .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
         .map(s => fs.makeQualified(s.getPath).toString)
     }.sorted
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(16, files.size)))
-    val stats = try files.map { f =>
-      pool.submit(new java.util.concurrent.Callable[(Long,
-          Map[String, (Long, Long)], Map[String, (String, String)])] {
-        def call() = MetaIo.footerStats(conf, f, statsCols)
-      })
-    }.map(_.get()) finally pool.shutdown()
+    val stats =
+      MetaIo.inParallel(files)(MetaIo.footerStats(conf, _, statsCols))
     // string-bound columns surface only when some file proved one —
     // a pure-integral commit keeps the pre-r14 schema exactly
     val strCols = statsCols.filter(c => stats.exists(_._3.contains(c)))
@@ -663,7 +664,11 @@ object SnapshotStore {
     // column re-reads the batch from storage (code-review r13 round 4);
     // unpersisted in finally so a failed fold cannot leak the cached
     // batch for the session lifetime (ADVICE r13 low #4)
-    val data = spark.read.parquet(paths: _*)
+    // the scan reads exactly the files the stats manifest lists
+    val baseRows = base.collect().toIndexedSeq
+    val data = MetaIo.readParquet(spark,
+        baseRows.map(r => r.getString(r.fieldIndex("file"))),
+        mergeSchema = false)
       .withColumn("_f", input_file_name()).persist()
     val blooms: Map[String, Map[String, Array[Long]]] = try {
       bloomCols.map { c =>
@@ -700,7 +705,6 @@ object SnapshotStore {
         }.toMap
       }.toMap
     } finally data.unpersist()
-    val baseRows = base.collect().toIndexedSeq
     // TWO DISTINCT files colliding after normalization (a literal
     // 'a%20b' next to 'a b' — the PathNorm residual above) would
     // otherwise overwrite each other in the per-file bloom map and
@@ -1118,8 +1122,7 @@ object SnapshotStore {
       // post-evolution schemas, and a single-footer inference could
       // silently DROP the evolved column from the surviving rows — a
       // durable data loss under a green commit
-      val survivors = spark.read.option("mergeSchema", "true")
-        .parquet(hit: _*)
+      val survivors = MetaIo.readParquet(spark, hit, mergeSchema = true)
         // coalesce(true): a NULL key is outside any range — keep it
         .filter(coalesce(!col(c).between(lit(lo), lit(hi)), lit(true)))
       Layout.writeClustered(survivors, rewriteDir, c, numFiles)
@@ -1521,7 +1524,7 @@ object SnapshotStore {
       if (hitFiles.isEmpty)
         readAt(spark, base, fromVersion, mergeSchema = true)
           .filter(lit(false))
-      else spark.read.option("mergeSchema", "true").parquet(hitFiles: _*)
+      else MetaIo.readParquet(spark, hitFiles, mergeSchema = true)
     val merged = Cdc.applyChangeLog(baseScan, changes, Seq(c),
       seqCol, opCol)
     Layout.writeClustered(merged, rewriteDir, c, numFiles)
@@ -1944,7 +1947,7 @@ object SnapshotStore {
       .collect().map(_.getString(0))
     require(files.nonEmpty,
       s"no files changed between versions $fromV and $toV")
-    spark.read.parquet(files.toIndexedSeq: _*)
+    MetaIo.readParquet(spark, files.toIndexedSeq, mergeSchema = false)
   }
 
   /** ROW-LEVEL CHANGE DATA FEED (r15 — VERDICT r14 what's-missing #2 /
@@ -2066,7 +2069,7 @@ object SnapshotStore {
         // files against the key batch when the domain allows, then
         // semi-join the logical v-1 rows to the sidecar keys
         val oldFromCarried = newSidecars.headOption.flatMap { d =>
-          val keys = spark.read.parquet(d.files: _*)
+          val keys = MetaIo.readParquet(spark, d.files, mergeSchema = false)
             .select(d.keys.map(col): _*).distinct()
           val hit = pruneByKeyCoverage(spark, keys, d.keys.head,
             boundsOfGroups(gsP, d.keys.head), carried)
@@ -2087,8 +2090,9 @@ object SnapshotStore {
         val oldFromPos =
           if (newPos.isEmpty) None
           else {
-            val sidecar = spark.read.parquet(newPos: _*)
-              .select("_graft_file", "_graft_pos")
+            val sidecar =
+              MetaIo.readParquet(spark, newPos, mergeSchema = false)
+                .select("_graft_file", "_graft_pos")
             val namedNorm = sidecar.select("_graft_file").distinct()
               .collect().map(r => PathNorm(r.getString(0))).toSet
             val hitFiles = carried.filter(f => namedNorm(PathNorm(f)))

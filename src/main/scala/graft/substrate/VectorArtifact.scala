@@ -603,9 +603,9 @@ object VectorArtifact {
     val affected: Seq[Long] =
       if (pending.isEmpty) Nil
       else {
-        val keys = spark.read.parquet(pending: _*)
+        val keys = MetaIo.readParquet(spark, pending, mergeSchema = false)
           .select("vec_id").distinct()
-        spark.read.parquet(prev.map(_._1): _*)
+        MetaIo.readParquet(spark, prev.map(_._1), mergeSchema = false)
           .join(broadcast(keys), Seq("vec_id"))
           .select("cell").distinct().collect().map(_.getLong(0)).toSeq
       }
@@ -634,6 +634,9 @@ object VectorArtifact {
     // centroids collect executes the same plan the write job executed;
     // column names/types (incl. array-element nullability) match the
     // old writer's, so loadLatest's spark.read sees the identical table.
+    // Centroids are the caller's frame: a column outside the metadata
+    // type universe keeps the Spark single-file write (and load reads
+    // it back with a Spark scan, MetaIo.readTable).
     import org.apache.spark.sql.types._
     val conf = spark.sparkContext.hadoopConfiguration
     MetaIo.writeRows(conf, s"$dir/codebook",
@@ -642,8 +645,10 @@ object VectorArtifact {
         StructField("cv", ArrayType(DoubleType, containsNull = false)))),
       for { s <- cb.indices; c <- cb(s).indices }
         yield org.apache.spark.sql.Row(s.toLong, c, cb(s)(c).toSeq))
-    MetaIo.writeRows(conf, s"$dir/centroids", centroids.schema,
-      centroids.collect().toIndexedSeq)
+    if (MetaIo.writableSchema(centroids.schema))
+      MetaIo.writeRows(conf, s"$dir/centroids", centroids.schema,
+        centroids.collect().toIndexedSeq)
+    else centroids.coalesce(1).write.parquet(s"$dir/centroids")
   }
 
   /** Write `codes` (vec_id, codes, cell, ...) repartitioned by cell and
@@ -807,7 +812,7 @@ object VectorArtifact {
       codes: DataFrame): DataFrame =
     if (delFiles.isEmpty) codes
     else codes.join(
-      broadcast(spark.read.parquet(delFiles: _*)
+      broadcast(MetaIo.readParquet(spark, delFiles, mergeSchema = false)
         .select("vec_id").distinct()),
       Seq("vec_id"), "left_anti")
 
@@ -911,11 +916,7 @@ object VectorArtifact {
       }
       out
     }
-    val centroids = {
-      val (s, rows) = MetaIo.readRows(conf, s"$dir/centroids")
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.asJava, s)
-    }
+    val centroids = MetaIo.readTable(spark, s"$dir/centroids")
     // codes resolve through the version's MANIFEST when present (files
     // may live under earlier versions' dirs — the sharing contract);
     // a manifest-less version is legacy layout: its own codes dir.
@@ -927,7 +928,8 @@ object VectorArtifact {
     val delFiles = mfFull
       .collect { case (f, _, k) if k.contains("delete") => f }
     val codes = applySidecars(spark, delFiles,
-      if (mfFull.nonEmpty) spark.read.parquet(dataFiles: _*)
+      if (mfFull.nonEmpty)
+        MetaIo.readParquet(spark, dataFiles, mergeSchema = false)
       else spark.read.parquet(s"$dir/codes"))
     Loaded(num("version"), num("dim").toInt,
       centroids, cb, codes,
@@ -961,7 +963,7 @@ object VectorArtifact {
     // the pruned serve applies pending MoR sidecars too (r15): a probed
     // ADC read must never rank a forgotten vector
     applySidecars(spark, pendingSidecarFiles(spark, base, version),
-      spark.read.parquet(files: _*))
+      MetaIo.readParquet(spark, files, mergeSchema = false))
   }
 
   /** The serving tier's default dereference: the highest published

@@ -1,0 +1,87 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.checks.CheckDsl
+import graft.substrate.{Cdc, Layout, SnapshotStore}
+
+/** Resolving a read is planning, not execution: the store's read paths
+  * and `CheckDsl.table` build their DataFrames without starting a Spark
+  * job (the parquet schema comes from footers read on the driver), even
+  * when every pending sidecar kind applies.
+  */
+class ReadResolveSpec extends SparkSpec {
+
+  private def withStore(f: String => Unit): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("resolve").toString
+    try f(tmp)
+    finally {
+      import scala.reflect.io.Directory
+      new Directory(new java.io.File(tmp)).deleteRecursively()
+    }
+  }
+
+  private def changes(upd: Range, del: Range): DataFrame = {
+    import spark.implicits._
+    (upd.map(i => (i.toLong, (i % 7) + 100L, "U", 1L)) ++
+      del.map(i => (i.toLong, 0L, "D", 1L))).toDF("k", "v", "op", "seq")
+  }
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  /** The frame `build` returns, asserting it started no job. */
+  private def resolved(what: String)(build: => DataFrame): DataFrame = {
+    val (df, jobs) = jobsDuring(build)
+    assert(jobs == 0, s"resolving $what started $jobs Spark job(s)")
+    df
+  }
+
+  test("readAt, readAtPoint and readAtWhere resolve without a Spark job " +
+      "under two pending merge sidecars and a positional sidecar") {
+    withStore { tmp =>
+      import spark.implicits._
+      val base = (0 until 100).map(i => (i.toLong, (i % 7).toLong))
+        .toDF("k", "v")
+      Layout.writeClustered(base, s"$tmp/d1", "k", numFiles = 4)
+      SnapshotStore.commit(spark, tmp, 1L,
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"),
+          Seq("k")))
+      val ch2 = changes(10 to 20, 30 to 40)
+      val ch3 = changes(50 to 55, 70 to 72)
+      SnapshotStore.mergeCommitMor(spark, tmp, 2L, 1L, "k", ch2,
+        s"$tmp/del2", s"$tmp/img2")
+      SnapshotStore.mergeCommitMor(spark, tmp, 3L, 2L, "k", ch3,
+        s"$tmp/del3", s"$tmp/img3")
+      SnapshotStore.deleteCommitPos(spark, tmp, 4L, 3L, "k",
+        (60 to 65).map(_.toLong).toDF("k"), s"$tmp/pos4")
+      val kinds = SnapshotStore.manifest(spark, tmp)
+        .filter(col("version") === 4L && col("kind").isNotNull)
+        .groupBy("kind").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(kinds == Map("merge_delete" -> 2L, "pos_delete" -> 1L))
+
+      val expected = Cdc.applyChangeLog(
+          Cdc.applyChangeLog(base, ch2, Seq("k")), ch3, Seq("k"))
+        .filter(!col("k").between(60, 65))
+      val all = resolved("readAt")(SnapshotStore.readAt(spark, tmp, 4L))
+      val point = resolved("readAtPoint")(
+        SnapshotStore.readAtPoint(spark, tmp, 4L, "k", 12L))
+      val range = resolved("readAtWhere")(
+        SnapshotStore.readAtWhere(spark, tmp, 4L, "k", 0L, 70L))
+      assert(sameRows(all, expected))
+      assert(sameRows(point, expected.filter(col("k") === 12L)))
+      assert(sameRows(range, expected.filter(col("k").between(0, 70))))
+    }
+  }
+
+  test("CheckDsl.table resolves a table without a Spark job") {
+    val events = resolved("CheckDsl.table")(
+      CheckDsl.table(spark, sf, "events"))
+    assert(events.schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
+    assert(events.count() ==
+      spark.read.parquet(s"$sf/events.parquet").count())
+  }
+}

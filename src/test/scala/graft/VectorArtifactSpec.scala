@@ -1134,4 +1134,46 @@ class VectorArtifactSpec extends SparkSpec {
         "compaction is read-equivalent: all rows survive")
     }
   }
+
+  test("load resolves without a Spark job under a pending forget sidecar") {
+    withTmp { tmp =>
+      val (_, _, codes, _) = clusteredV0(tmp)
+      val forget = corpus.filter(col("vec_id") % 10 === 7)
+        .select("vec_id").localCheckpoint(true)
+      VectorArtifact.deletePublishMor(spark, tmp, 1L, 0L, forget)
+      val (v1, jobs) = jobsDuring(VectorArtifact.load(spark, tmp, 1L))
+      assert(jobs == 0, s"load started $jobs Spark job(s)")
+      def key(df: DataFrame) = df.select("vec_id", "codes", "cell")
+        .orderBy("vec_id").collect().toSeq
+      assert(key(v1.codes) ==
+        key(codes.join(forget, Seq("vec_id"), "left_anti")))
+    }
+  }
+
+  test("centroids with a column outside the metadata type universe " +
+      "publish through the Spark writer and load back intact") {
+    withTmp { tmp =>
+      val e = corpus.localCheckpoint(true)
+      val cents = IvfPq.servingCentroids(e, centroidMod = 7)
+        .withColumn("cv32", col("cv").cast("array<float>"))
+        .localCheckpoint(true)
+      assert(!graft.substrate.MetaIo.writableSchema(cents.schema))
+      val cb = PqIndex.codebookArrays(
+        PqIndex.codebooks(e, "vec_id", "v", dim = Dim))
+      val asg = IvfPq.probeCellsFrom(cents, e, "vec_id", "v", nProbe = 1)
+        .select(col("qid").as("vec_id"), col("cell"))
+      val codes = PqIndex.encode(e, "vec_id", "v", cb, dim = Dim)
+        .join(asg, Seq("vec_id")).localCheckpoint(true)
+      VectorArtifact.saveClustered(spark, tmp, 0L, Dim, cents, cb, codes)
+      def rows(df: DataFrame) =
+        df.select("cell", "cv", "cv32").orderBy("cell").collect().toSeq
+      assert(rows(VectorArtifact.load(spark, tmp, 0L).centroids) ==
+        rows(cents))
+      // a derived publish re-writes the loaded centroids the same way
+      VectorArtifact.deletePublishMor(spark, tmp, 1L, 0L,
+        Seq(7L).toDF("vec_id"))
+      assert(rows(VectorArtifact.loadLatest(spark, tmp).centroids) ==
+        rows(cents))
+    }
+  }
 }
