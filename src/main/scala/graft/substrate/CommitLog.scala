@@ -105,7 +105,12 @@ private[substrate] final class CommitLog(root: String => String,
     */
   def requireAboveHead(conf: Configuration, base: String, version: Long,
       retry: String): Unit =
-    if (!versions(conf, base).lastOption.forall(_ < version))
+    requireAbove(versions(conf, base).lastOption, base, version, retry)
+
+  /** [[requireAboveHead]] against a `head` the caller already listed. */
+  def requireAbove(head: Option[Long], base: String, version: Long,
+      retry: String): Unit =
+    if (!head.forall(_ < version))
       throw new CommitConflictException(
         s"commits are monotonic: v=$version is at or below the committed " +
           s"head under $base — version ids are never re-minted; $retry")

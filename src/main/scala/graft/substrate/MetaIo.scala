@@ -136,7 +136,15 @@ private[graft] object MetaIo {
     * parquet example Groups. Empty when the directory is absent.
     */
   def groups(conf: Configuration, dir: String): Seq[Group] =
-    parquetFiles(conf, dir).flatMap(readFile(conf, _)._2)
+    readDir(conf, dir).flatMap(_._2)
+
+  /** Every `*.parquet` file directly under `dir`, each as its footer
+    * schema and its rows — one open per file, the input of both
+    * [[groups]] and [[rowsOf]].
+    */
+  def readDir(conf: Configuration, dir: String)
+      : Seq[(org.apache.parquet.schema.MessageType, Seq[Group])] =
+    parquetFiles(conf, dir).map(readFile(conf, _))
 
   /** Can [[writeRows]] carry this schema? Scalar commit-metadata types
     * — long/int/string/binary/boolean/double, the full universe the
@@ -257,9 +265,8 @@ private[graft] object MetaIo {
   }
 
   /** READ metadata-scale parquet rows back as Spark (schema, rows),
-    * driver-side — the inverse of [[writeRows]] (r17): what
-    * `appendCommit` feeds its ancestor-manifest union from without a
-    * cluster scan job. The schema is read from the file footers, so a
+    * driver-side, without a cluster scan job — the inverse of
+    * [[writeRows]]. The schema is read from the file footers, so a
     * zero-row file reads back with its columns. Schemas merge across
     * files by field name (first-seen order, the mergeSchema shape a
     * stats-evolving store needs); INT32 and INT64 under one name widen
@@ -279,8 +286,7 @@ private[graft] object MetaIo {
   def readRowsMerged(conf: Configuration, dirs: Seq[String])
       : (org.apache.spark.sql.types.StructType,
          Seq[org.apache.spark.sql.Row]) =
-    rowsOf(dirs.flatMap(parquetFiles(conf, _)).map(readFile(conf, _)),
-      dirs.mkString(","))
+    rowsOf(dirs.flatMap(readDir(conf, _)), dirs.mkString(","))
 
   /** [[readRows]] as a DataFrame: a LocalRelation when every column is
     * in the metadata type universe, else a Spark scan of the same files
@@ -348,7 +354,7 @@ private[graft] object MetaIo {
   /** Rows of already-read files under one merged schema (the
     * [[readRowsMerged]] contract); `where` names the source in errors.
     */
-  private def rowsOf(
+  private[substrate] def rowsOf(
       files: Seq[(org.apache.parquet.schema.MessageType, Seq[Group])],
       where: String)
       : (org.apache.spark.sql.types.StructType,
@@ -356,25 +362,12 @@ private[graft] object MetaIo {
     import org.apache.spark.sql.types._
     val gs = files.flatMap(_._2)
     // a LONG field reads INT32 values too (optLong widens)
-    val fields = scala.collection.mutable.LinkedHashMap[String, DataType]()
-    files.foreach { case (t, _) =>
-      (0 until t.getFieldCount).foreach { i =>
-        val f = t.getType(i)
-        val st = sparkType(f).fold(e => throw new IllegalStateException(e),
-          identity)
-        fields.get(f.getName) match {
-          case Some(prev) if prev == st => ()
-          case Some(prev) if Set(prev, st) == Set[DataType](IntegerType,
-              LongType) => fields.put(f.getName, LongType)
-          case Some(prev) => throw new IllegalArgumentException(
-            s"metadata field ${f.getName} carries both $prev and $st " +
-              s"under $where — schemas must agree to merge")
-          case None => fields.put(f.getName, st)
-        }
-      }
-    }
-    val schema = StructType(fields.toSeq.map { case (n, t) =>
-      StructField(n, t, nullable = true) })
+    val schema = unionSchemas(files.map { case (t, _) =>
+      StructType((0 until t.getFieldCount).map { i =>
+        StructField(t.getType(i).getName, sparkType(t.getType(i))
+          .fold(e => throw new IllegalStateException(e), identity))
+      })
+    }, where)
     val rows = gs.map { g =>
       org.apache.spark.sql.Row.fromSeq(schema.fields.toSeq.map { f =>
         f.dataType match {
@@ -407,6 +400,55 @@ private[graft] object MetaIo {
           case other => throw new IllegalStateException(other.toString)
         }
       })
+    }
+    (schema, rows)
+  }
+
+  /** One schema over several: fields by name in first-seen order, all
+    * nullable; INT and LONG under one name widen to LONG, and any other
+    * pair of types under one name fails loudly.
+    */
+  private def unionSchemas(
+      schemas: Seq[org.apache.spark.sql.types.StructType], where: String)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    val fields = scala.collection.mutable.LinkedHashMap[String, DataType]()
+    for (s <- schemas; f <- s.fields) fields.get(f.name) match {
+      case Some(prev) if prev == f.dataType => ()
+      case Some(prev) if Set(prev, f.dataType) == Set[DataType](IntegerType,
+          LongType) => fields.put(f.name, LongType)
+      case Some(prev) => throw new IllegalArgumentException(
+        s"metadata field ${f.name} carries both $prev and ${f.dataType} " +
+          s"under $where — schemas must agree to merge")
+      case None => fields.put(f.name, f.dataType)
+    }
+    StructType(fields.toSeq.map { case (n, t) =>
+      StructField(n, t, nullable = true) })
+  }
+
+  /** Several (schema, rows) parts as one: the [[unionSchemas]] schema,
+    * each part's rows in order with its missing fields null and INT
+    * values widened where the merged field is LONG — driver-side, what
+    * `unionByName(allowMissingColumns = true)` gives over the same parts.
+    */
+  private[substrate] def unionRows(
+      parts: Seq[(org.apache.spark.sql.types.StructType,
+        Seq[org.apache.spark.sql.Row])], where: String)
+      : (org.apache.spark.sql.types.StructType,
+         Seq[org.apache.spark.sql.Row]) = {
+    import org.apache.spark.sql.types._
+    val schema = unionSchemas(parts.map(_._1), where)
+    val rows = parts.flatMap { case (s, rs) =>
+      val from = schema.fields.toSeq.map(f =>
+        (Some(s.fieldNames.indexOf(f.name)).filter(_ >= 0), f.dataType))
+      rs.map(r => org.apache.spark.sql.Row.fromSeq(from.map {
+        case (None, _) => null
+        case (Some(i), LongType) => r.get(i) match {
+          case n: java.lang.Integer => Long.box(n.longValue)
+          case x => x
+        }
+        case (Some(i), _) => r.get(i)
+      }))
     }
     (schema, rows)
   }

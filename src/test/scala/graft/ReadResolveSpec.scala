@@ -9,7 +9,8 @@ import graft.substrate.{Cdc, Layout, SnapshotStore}
 /** Resolving a read is planning, not execution: the store's read paths
   * and `CheckDsl.table` build their DataFrames without starting a Spark
   * job (the parquet schema comes from footers read on the driver), even
-  * when every pending sidecar kind applies.
+  * when every pending sidecar kind applies. An append commit's manifest
+  * is driver-side metadata too, so appending written files starts none.
   */
 class ReadResolveSpec extends SparkSpec {
 
@@ -73,6 +74,24 @@ class ReadResolveSpec extends SparkSpec {
       assert(sameRows(all, expected))
       assert(sameRows(point, expected.filter(col("k") === 12L)))
       assert(sameRows(range, expected.filter(col("k").between(0, 70))))
+    }
+  }
+
+  test("appendCommit over an already-written batch dir starts no Spark " +
+      "job: its manifest is driver-side metadata") {
+    withStore { tmp =>
+      import spark.implicits._
+      Layout.writeClustered((0 until 40).map(i => (i.toLong, 1L))
+        .toDF("k", "v"), s"$tmp/d1", "k", numFiles = 2)
+      SnapshotStore.commit(spark, tmp, 1L,
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Seq("k")))
+      Layout.writeClustered((40 until 50).map(i => (i.toLong, 2L))
+        .toDF("k", "v"), s"$tmp/w2", "k", numFiles = 1)
+      val (v, jobs) = jobsDuring(SnapshotStore.appendCommit(spark, tmp,
+        Seq(s"$tmp/w2"), Seq("k")))
+      assert(v == 2L)
+      assert(jobs == 0, s"appendCommit started $jobs Spark job(s)")
+      assert(SnapshotStore.countAt(spark, tmp, 2L) == 50L)
     }
   }
 

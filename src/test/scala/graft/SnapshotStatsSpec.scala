@@ -630,6 +630,46 @@ class SnapshotStatsSpec extends SparkSpec {
     }
   }
 
+  // Spark writes a footer-only file for partition 0 even when no row
+  // survives, so a rewrite that empties the table still lists a file:
+  // the guard must read the committed row counts, not the listing
+  test("a CoW delete of every row refuses to commit an empty version " +
+      "and reclaims its rewrite") {
+    withStore { tmp =>
+      val d = spark.range(100).select(col("id").as("k"))
+      Layout.writeClustered(d, s"$tmp/d1", "k", numFiles = 2)
+      SnapshotStore.commit(spark, tmp, 1L,
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Seq("k")))
+      val e = intercept[IllegalArgumentException] {
+        SnapshotStore.deleteCommit(spark, tmp, 2L, 1L, "k", 0L, 99L,
+          s"$tmp/r2")
+      }
+      assert(e.getMessage.contains("an empty version cannot be committed"))
+      assert(SnapshotStore.committedVersions(spark, tmp) == Seq(1L))
+      assert(!new java.io.File(s"$tmp/r2").exists())
+      assert(SnapshotStore.readAt(spark, tmp, 1L).count() == 100L)
+    }
+  }
+
+  test("an all-delete CoW merge refuses to commit an empty version and " +
+      "reclaims its rewrite") {
+    withStore { tmp =>
+      val d = spark.range(100).select(col("id").as("k"),
+        (col("id") % 3).as("v"))
+      Layout.writeClustered(d, s"$tmp/d1", "k", numFiles = 2)
+      SnapshotStore.commit(spark, tmp, 1L,
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Seq("k")))
+      val e = intercept[IllegalArgumentException] {
+        SnapshotStore.mergeCommit(spark, tmp, 2L, 1L, "k",
+          d.select(col("k"), col("v"), lit("D").as("op"), lit(1L).as("seq")),
+          s"$tmp/r2")
+      }
+      assert(e.getMessage.contains("an empty version cannot be committed"))
+      assert(SnapshotStore.committedVersions(spark, tmp) == Seq(1L))
+      assert(!new java.io.File(s"$tmp/r2").exists())
+    }
+  }
+
   test("mergeCommit: the file-bounded upsert equals the relational " +
       "replay and refuses a malformed/empty changelog") {
     withStore { tmp =>
