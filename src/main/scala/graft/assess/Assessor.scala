@@ -3,7 +3,7 @@ package graft.assess
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.checks.Checks
+import graft.checks.{Check, CheckDsl, Checks}
 import graft.model.{Registry, Workload}
 
 /** Thresholds per requirement × workload. The reference's `meta.yaml`
@@ -34,9 +34,11 @@ object Thresholds {
   * roll up per factor ("automated assessments or dashboards",
   * reference `README.md:43-45`).
   *
-  * All per-check plans are pure DataFrame algebra unioned into ONE lazy
-  * plan — Catalyst sees the whole assessment at once (shared scans get
-  * reused via exchange reuse; execution is a single action).
+  * Fusion invariant: fractions that declare the same source run as ONE
+  * aggregate over it, and nothing is fused across sources. Each source
+  * group and each remaining check is its own small job on a shared pool;
+  * a union of every check into one plan loses to single-threaded Catalyst
+  * planning.
   */
 object Assessor {
 
@@ -46,56 +48,71 @@ object Assessor {
   val ScorecardTimeout: scala.concurrent.duration.FiniteDuration =
     scala.concurrent.duration.Duration(10, "min")
 
-  /** Per-requirement scorecard for a workload.
-    *
-    * Execution shape: the checks are INDEPENDENT single-row aggregates, so
-    * they run as concurrent small jobs (Spark schedules concurrent actions
-    * fine) and assemble into a LocalRelation — not as one 39-branch union
-    * plan, whose single-threaded Catalyst planning cost dominated the
-    * union formulation and scaled with nothing useful.
+  /** One check's scored row. */
+  private[graft] final case class Result(requirement: String, hits: Long,
+      population: Long, value: Double)
+
+  /** Every check's result. The fraction checks that declare an equal
+    * source run as one aggregate ([[CheckDsl.fractions]]); every other
+    * check runs its own plan. The groups run concurrently on a bounded
+    * pool under one deadline, and a failure names its group's requirement
+    * keys.
     */
-  def scorecard(spark: SparkSession, dir: String, workload: Workload): DataFrame = {
+  private[graft] def results(spark: SparkSession, dir: String,
+      checks: Seq[Check]): Seq[Result] = {
     import java.util.concurrent.Executors
     import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.duration._
 
-    val applicable = Registry.forWorkload(workload).map(_.key).toSet
-    val runs = Checks.all.filter(c => c.isScore && applicable.contains(c.name))
+    val key = (c: Check) => c.fraction.fold[Any](c.name)(_.source)
+    val groups = checks.map(key).distinct.map(k => checks.filter(key(_) == k))
+    def run(group: Seq[Check]): Seq[Result] = group.head.fraction match {
+      case Some(f) =>
+        val row = CheckDsl.fractions(f.source.df(spark, dir),
+          group.map(_.fraction.get.aggs(spark, dir))).collect().head
+        group.indices.map(i => Result(group(i).name, row.getLong(3 * i),
+          row.getLong(3 * i + 1), row.getDouble(3 * i + 2)))
+      case None =>
+        val r = group.head.run(spark, dir).collect().head
+        Seq(Result(group.head.name, r.getAs[Long]("hits"),
+          r.getAs[Long]("population"), r.getAs[Double]("value")))
+    }
     val pool = Executors.newFixedThreadPool(8)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    // Bounded await with per-check attribution: one hung check fails the
-    // assessment after the deadline (not never), and any failure names the
-    // requirement key instead of aborting the scorecard anonymously.
-    import scala.concurrent.duration._
     val deadline = System.nanoTime() + ScorecardTimeout.toNanos
-    val rows =
-      try runs.map(c => c.name -> Future {
-          val r = c.run(spark, dir).collect().head
-          (r.getAs[String]("requirement"), r.getAs[Double]("value"))
-        }).map { case (key, f) =>
-          val remaining = math.max(1L, deadline - System.nanoTime()).nanos
-          try Await.result(f, remaining)
-          catch {
-            case _: java.util.concurrent.TimeoutException =>
-              throw new RuntimeException(
-                s"scorecard check '$key' exceeded the $ScorecardTimeout assessment deadline")
-            case e: Throwable =>
-              throw new RuntimeException(s"scorecard check '$key' failed: ${e.getMessage}", e)
-          }
+    try groups.map(g => g -> Future(run(g))).flatMap { case (g, f) =>
+        val keys = g.map(c => s"'${c.name}'").mkString(", ")
+        val remaining = math.max(1L, deadline - System.nanoTime()).nanos
+        try Await.result(f, remaining)
+        catch {
+          case _: java.util.concurrent.TimeoutException =>
+            throw new RuntimeException(
+              s"scorecard check $keys exceeded the $ScorecardTimeout assessment deadline")
+          case e: Throwable =>
+            throw new RuntimeException(s"scorecard check $keys failed: ${e.getMessage}", e)
         }
-      finally pool.shutdown()
+      }
+    finally pool.shutdown()
+  }
 
+  /** Per-requirement scorecard for a workload: every applicable score
+    * check's result ([[results]]) against its threshold, as a LocalRelation
+    * already in (factor, requirement) order, so collecting it runs no job.
+    */
+  def scorecard(spark: SparkSession, dir: String, workload: Workload): DataFrame = {
+    val applicable = Registry.forWorkload(workload).map(_.key).toSet
+    val runs = Checks.all.filter(c => c.isScore && applicable.contains(c.name))
     val meta = Registry.byKey
-    val out = rows.map { case (key, value) =>
-      val r = meta(key)
-      val threshold = Thresholds.forReq(key, workload)
-      (key, r.factor.id, r.factor.name, workload.name, value, threshold,
-        value >= threshold, Registry.extensionKeys.contains(key))
-    }
+    val out = results(spark, dir, runs).map { r =>
+      val m = meta(r.requirement)
+      val threshold = Thresholds.forReq(r.requirement, workload)
+      (r.requirement, m.factor.id, m.factor.name, workload.name, r.value,
+        threshold, r.value >= threshold,
+        Registry.extensionKeys.contains(r.requirement))
+    }.sortBy(r => (r._2, r._1))
     spark.createDataFrame(out)
       .toDF("requirement", "factor", "factor_name", "workload", "value",
         "threshold", "passed", "extension")
-      .orderBy("factor", "requirement")
   }
 
   /** The REFERENCE-comparable rollup (ADVICE r10): same arithmetic as

@@ -27,7 +27,36 @@ final case class Check(
       * re-runs another headline query's plan, e.g. factor_rollup =
       * assessment_scorecard + a 5-row agg).
       */
-    inBench: Boolean = true)
+    inBench: Boolean = true,
+    /** The declared source and aggregates, set by [[CheckDsl.fraction]]. */
+    fraction: Option[Fraction] = None)
+
+/** The rows a fraction check counts: a catalog fixture, or a product table
+  * read through [[CheckDsl.table]]. Sources compare by value, so checks
+  * that declare the same fixture or table name declare the same source.
+  */
+sealed trait Source {
+  def df(spark: SparkSession, dir: String): DataFrame = this match {
+    case Source.Catalog(f) => CheckDsl.catalogOnly(f.df(spark))
+    case Source.Table(name) => CheckDsl.table(spark, dir, name)
+  }
+}
+
+object Source {
+  final case class Catalog(fixture: Fixture) extends Source
+  final case class Table(name: String) extends Source
+}
+
+/** A fraction check's shape: `hits` and `population` as aggregate Columns
+  * over one `source` (`count_if(cond)`, `count(lit(1))`). A hit that needs a
+  * matching row elsewhere is an IN/EXISTS predicate inside `count_if`, which
+  * Spark plans as an existence join, so no source row is duplicated. An
+  * EXISTS subquery must not name its columns like the outer columns it
+  * correlates with: Spark resolves such an `outer()` reference to the inner
+  * column, and `asset === col("asset").outer()` holds on every row.
+  */
+final case class Fraction(source: Source,
+    aggs: (SparkSession, String) => (Column, Column))
 
 object CheckDsl {
 
@@ -80,21 +109,51 @@ object CheckDsl {
       case _ => df
     }
 
-  /** hits/population → the uniform single-row result. Both inputs are
-    * single-row single-column LONG aggregates; the cross join is trivially
-    * broadcast (1×1) — no scale concern.
+  /** A fraction check of one declared source: `run` is one aggregate over
+    * it, which a scorecard fuses with the checks declaring an equal source.
+    */
+  def fraction(name: String, source: Source, oracle: String)(
+      aggs: (SparkSession, String) => (Column, Column)): Check =
+    Check(name, (spark, dir) => {
+        val (hits, population) = aggs(spark, dir)
+        fractionOf(name, source.df(spark, dir), hits, population)
+      }, Some(oracle), fraction = Some(Fraction(source, aggs)))
+
+  /** A catalog-only relation is metadata-small: read as one partition, an
+    * aggregate over it needs no exchange and runs as one one-task job.
+    */
+  def catalogOnly(df: DataFrame): DataFrame = df.coalesce(1)
+
+  /** One aggregate over `df` for every (hits, population) pair: a single
+    * row of `hits_i`, `population_i`, `value_i` per pair, in order.
+    */
+  def fractions(df: DataFrame, parts: Seq[(Column, Column)]): DataFrame = {
+    val aggs = parts.zipWithIndex.flatMap { case ((h, p), i) =>
+      Seq(h.as(s"hits_$i"), p.as(s"population_$i"))
+    }
+    df.agg(aggs.head, aggs.tail: _*).select(parts.indices.flatMap { i =>
+      Seq(col(s"hits_$i"), col(s"population_$i"),
+        valueExpr(col(s"hits_$i"), col(s"population_$i")).as(s"value_$i"))
+    }: _*)
+  }
+
+  /** The uniform single-row result of one aggregate over `df`. */
+  def fractionOf(req: String, df: DataFrame, hits: Column,
+      population: Column): DataFrame =
+    fractions(df, Seq(hits -> population)).select(lit(req).as("requirement"),
+      lit("ALL").as("scope"), col("hits_0").as("hits"),
+      col("population_0").as("population"), col("value_0").as("value"))
+
+  /** hits/population → the uniform single-row result, for a fraction whose
+    * hits and population are not aggregates over one source. Both inputs
+    * are single-row single-column LONG aggregates; the cross join is
+    * trivially broadcast (1×1) — no scale concern.
     */
   def fractionDf(spark: SparkSession, req: String, hits: DataFrame,
-      population: DataFrame, scope: String = "ALL"): DataFrame = {
-    val h = hits.toDF("hits")
-    val p = population.toDF("population")
-    h.crossJoin(p).select(
-      lit(req).as("requirement"),
-      lit(scope).as("scope"),
-      col("hits"),
-      col("population"),
-      valueExpr(col("hits"), col("population")))
-  }
+      population: DataFrame): DataFrame =
+    hits.toDF("hits").crossJoin(population.toDF("population")).select(
+      lit(req).as("requirement"), lit("ALL").as("scope"), col("hits"),
+      col("population"), valueExpr(col("hits"), col("population")))
 
   /** value = hits/population, vacuous→1.0, as a Column. Exact-arithmetic
     * discipline: both operands are integers, so the single IEEE division is
@@ -110,7 +169,7 @@ object CheckDsl {
 
   // ── oracle side ───────────────────────────────────────────────────────
 
-  /** Oracle mirror of `fractionDf`: `hitsQ`/`popQ` are complete scalar
+  /** Oracle mirror of a fraction check: `hitsQ`/`popQ` are complete scalar
     * SELECTs (e.g. "SELECT COUNT(*) FROM x WHERE ...").
     */
   def fractionSql(req: String, hitsQ: String, popQ: String,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.Fixtures._
 import graft.checks.CheckDsl._
+import graft.checks.Source.Catalog
 
 /** Factor 1 — Contextual: "Meaning is explicit and colocated with the data"
   * (reference `factors/1-contextual.md:3`; requirement stanzas
@@ -19,11 +20,10 @@ object Factor1 {
   /** #1 semantic_documentation (yaml:9-11): objects = tables ∪ columns. */
   val semanticDocumentation = Check("semantic_documentation",
     (spark, _) => {
-      val a = assets.df(spark).select(col("description"))
-      val c = columns.df(spark).select(col("description"))
-      val objects = a.unionAll(c)
-      fractionDf(spark, "semantic_documentation",
-        cnt(objects.filter(expr(docCond))), cnt(objects))
+      val objects = assets.df(spark).select(col("description"))
+        .unionAll(columns.df(spark).select(col("description")))
+      fractionOf("semantic_documentation", catalogOnly(objects),
+        count_if(expr(docCond)), count(lit(1)))
     },
     Some(fractionSql("semantic_documentation",
       s"SELECT COUNT(*) FROM (SELECT description FROM assets UNION ALL SELECT description FROM columns) WHERE $docCond",
@@ -49,9 +49,11 @@ object Factor1 {
           cols("asset") =!= keys("dst_asset"))
         .select(col("asset").as("src_asset"), col("column_name").as("src_column"),
           col("dst_asset"), col("dst_column"))
-      val declared = candidates.join(broadcast(relationships.df(spark)),
-        Seq("src_asset", "src_column", "dst_asset", "dst_column"), "left_semi")
-      fractionDf(spark, "relationship_declaration", cnt(declared), cnt(candidates))
+      val declared = struct(col("src_asset"), col("src_column"),
+        col("dst_asset"), col("dst_column")).isin(relationships.df(spark)
+        .select("src_asset", "src_column", "dst_asset", "dst_column"))
+      fractionOf("relationship_declaration", catalogOnly(candidates),
+        count_if(declared), count(lit(1)))
     },
     Some {
       val candSql =
@@ -70,81 +72,64 @@ object Factor1 {
     })
 
   /** #3 entity_identifier_declaration (yaml:17-19). */
-  val entityIdentifierDeclaration = Check("entity_identifier_declaration",
-    (spark, _) => {
-      val a = assets.df(spark)
-      val withKey = a.join(broadcast(keyDeclarations.df(spark)), Seq("asset"), "left_semi")
-      fractionDf(spark, "entity_identifier_declaration", cnt(withKey), cnt(a))
-    },
-    Some(fractionSql("entity_identifier_declaration",
+  val entityIdentifierDeclaration = fraction("entity_identifier_declaration",
+    Catalog(assets), fractionSql("entity_identifier_declaration",
       "SELECT COUNT(*) FROM assets a WHERE EXISTS (SELECT 1 FROM key_declarations k WHERE k.asset = a.asset)",
       "SELECT COUNT(*) FROM assets",
-      Seq(assets, keyDeclarations))))
+      Seq(assets, keyDeclarations))) { (spark, _) =>
+    (count_if(col("asset").isin(keyDeclarations.df(spark).select("asset"))),
+      count(lit(1)))
+  }
 
   /** #4 temporal_scope_declaration (yaml:21-23): declared valid-time window. */
-  val temporalScopeDeclaration = Check("temporal_scope_declaration",
-    (spark, _) => {
-      val a = assets.df(spark)
-      fractionDf(spark, "temporal_scope_declaration",
-        cnt(a.filter(col("valid_from").isNotNull)), cnt(a))
-    },
-    Some(fractionSql("temporal_scope_declaration",
+  val temporalScopeDeclaration = fraction("temporal_scope_declaration",
+    Catalog(assets), fractionSql("temporal_scope_declaration",
       "SELECT COUNT(*) FROM assets WHERE valid_from IS NOT NULL",
-      "SELECT COUNT(*) FROM assets", Seq(assets))))
+      "SELECT COUNT(*) FROM assets", Seq(assets))) { (_, _) =>
+    (count_if(col("valid_from").isNotNull), count(lit(1)))
+  }
 
   /** #5 schema_type_coverage (yaml:25-27). */
-  val schemaTypeCoverage = Check("schema_type_coverage",
-    (spark, _) => {
-      val c = columns.df(spark)
-      fractionDf(spark, "schema_type_coverage",
-        cnt(c.filter(col("declared"))), cnt(c))
-    },
-    Some(fractionSql("schema_type_coverage",
+  val schemaTypeCoverage = fraction("schema_type_coverage", Catalog(columns),
+    fractionSql("schema_type_coverage",
       "SELECT COUNT(*) FROM columns WHERE declared",
-      "SELECT COUNT(*) FROM columns", Seq(columns))))
+      "SELECT COUNT(*) FROM columns", Seq(columns))) { (_, _) =>
+    (count_if(col("declared")), count(lit(1)))
+  }
 
   /** #6 business_glossary_linkage (yaml:29-31): link must RESOLVE (dangling
     * term ids don't count).
     */
-  val businessGlossaryLinkage = Check("business_glossary_linkage",
-    (spark, _) => {
-      val c = columns.df(spark)
-      val g = glossary.df(spark)
-      val linked = c.join(broadcast(g),
-        c("glossary_term_id") === g("term_id"), "left_semi")
-      fractionDf(spark, "business_glossary_linkage", cnt(linked), cnt(c))
-    },
-    Some(fractionSql("business_glossary_linkage",
+  val businessGlossaryLinkage = fraction("business_glossary_linkage",
+    Catalog(columns), fractionSql("business_glossary_linkage",
       "SELECT COUNT(*) FROM columns c WHERE EXISTS (SELECT 1 FROM glossary g WHERE g.term_id = c.glossary_term_id)",
-      "SELECT COUNT(*) FROM columns", Seq(columns, glossary))))
+      "SELECT COUNT(*) FROM columns", Seq(columns, glossary))) { (spark, _) =>
+    (count_if(col("glossary_term_id").isin(glossary.df(spark).select("term_id"))),
+      count(lit(1)))
+  }
 
   /** #7 constraint_declaration (yaml:33-35): fields with ≥1 declared
     * constraint. (Constraint *validation* against data is the
     * `constraint_validation` extension query.)
     */
-  val constraintDeclaration = Check("constraint_declaration",
-    (spark, _) => {
-      val c = columns.df(spark)
-      val constrained = c.join(broadcast(constraints.df(spark)),
-        Seq("asset", "column_name"), "left_semi")
-      fractionDf(spark, "constraint_declaration", cnt(constrained), cnt(c))
-    },
-    Some(fractionSql("constraint_declaration",
+  val constraintDeclaration = fraction("constraint_declaration",
+    Catalog(columns), fractionSql("constraint_declaration",
       "SELECT COUNT(*) FROM columns c WHERE EXISTS (SELECT 1 FROM constraints x WHERE x.asset = c.asset AND x.column_name = c.column_name)",
-      "SELECT COUNT(*) FROM columns", Seq(columns, constraints))))
+      "SELECT COUNT(*) FROM columns", Seq(columns, constraints))) { (spark, _) =>
+    (count_if(struct(col("asset"), col("column_name"))
+      .isin(constraints.df(spark).select("asset", "column_name"))), count(lit(1)))
+  }
 
   /** #8 unit_of_measure_declaration (yaml:37-39): population = numeric
     * measure fields.
     */
-  val unitOfMeasureDeclaration = Check("unit_of_measure_declaration",
-    (spark, _) => {
-      val nums = columns.df(spark).filter(col("is_numeric"))
-      fractionDf(spark, "unit_of_measure_declaration",
-        cnt(nums.filter(col("unit").isNotNull)), cnt(nums))
-    },
-    Some(fractionSql("unit_of_measure_declaration",
+  val unitOfMeasureDeclaration = fraction("unit_of_measure_declaration",
+    Catalog(columns), fractionSql("unit_of_measure_declaration",
       "SELECT COUNT(*) FROM columns WHERE is_numeric AND unit IS NOT NULL",
-      "SELECT COUNT(*) FROM columns WHERE is_numeric", Seq(columns))))
+      "SELECT COUNT(*) FROM columns WHERE is_numeric", Seq(columns))) { (_, _) =>
+    (count_if(col("is_numeric") && col("unit").isNotNull),
+      count_if(col("is_numeric")))
+  }
 
   val all: Seq[Check] = Seq(semanticDocumentation, relationshipDeclaration,
     entityIdentifierDeclaration, temporalScopeDeclaration, schemaTypeCoverage,

@@ -1,10 +1,12 @@
 package graft.checks
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.catalog.Fixtures._
 import graft.checks.CheckDsl._
+import graft.checks.Source.{Catalog, Table}
 
 /** Factor 2 — Consumable: "served in the right format and at the right
   * latencies" (reference `factors/2-consumable.md:3`; stanzas
@@ -15,18 +17,23 @@ import graft.checks.CheckDsl._
   */
 object Factor2 {
 
+  /** An asset has an index artifact (a `collection`, `built_at` catalog)
+    * built no earlier than its last modification.
+    */
+  private def freshArtifact(index: DataFrame) =
+    index.where(col("collection") === col("asset").outer() &&
+      col("built_at") >= col("last_modified").outer()).exists()
+
   /** #9 access_optimization (yaml:42-44): large tables (bytes > 1 MB here;
     * a config knob in production) must declare clustering/layout keys.
     */
-  val accessOptimization = Check("access_optimization",
-    (spark, _) => {
-      val large = assets.df(spark).filter(col("bytes") > 1000000L)
-      fractionDf(spark, "access_optimization",
-        cnt(large.filter(size(col("layout_keys")) > 0)), cnt(large))
-    },
-    Some(fractionSql("access_optimization",
+  val accessOptimization = fraction("access_optimization", Catalog(assets),
+    fractionSql("access_optimization",
       "SELECT COUNT(*) FROM assets WHERE bytes > 1000000 AND len(layout_keys) > 0",
-      "SELECT COUNT(*) FROM assets WHERE bytes > 1000000", Seq(assets))))
+      "SELECT COUNT(*) FROM assets WHERE bytes > 1000000", Seq(assets))) { (_, _) =>
+    val large = col("bytes") > 1000000L
+    (count_if(large && size(col("layout_keys")) > 0), count_if(large))
+  }
 
   /** #10 search_optimization (yaml:46-48): population = text-bearing
     * tables; a hit needs the catalog flag AND a registered search-index
@@ -34,19 +41,14 @@ object Factor2 {
     * #15's vector_indexes precedent, VERDICT r8 #8): the flag alone no
     * longer scores, the InvertedIndex companion's catalog row must exist.
     */
-  val searchOptimization = Check("search_optimization",
-    (spark, _) => {
-      val tb = assets.df(spark).filter(col("text_bearing"))
-      val si = searchIndexes.df(spark)
-      val indexed = tb.filter(col("search_index")).join(broadcast(si),
-        tb("asset") === si("collection") &&
-          si("built_at") >= tb("last_modified"), "left_semi")
-      fractionDf(spark, "search_optimization", cnt(indexed), cnt(tb))
-    },
-    Some(fractionSql("search_optimization",
+  val searchOptimization = fraction("search_optimization", Catalog(assets),
+    fractionSql("search_optimization",
       "SELECT COUNT(*) FROM assets a WHERE a.text_bearing AND a.search_index AND EXISTS (SELECT 1 FROM search_indexes si WHERE si.collection = a.asset AND si.built_at >= a.last_modified)",
       "SELECT COUNT(*) FROM assets WHERE text_bearing",
-      Seq(assets, searchIndexes))))
+      Seq(assets, searchIndexes))) { (spark, _) =>
+    (count_if(col("text_bearing") && col("search_index") &&
+      freshArtifact(searchIndexes.df(spark))), count_if(col("text_bearing")))
+  }
 
   /** #11 serving_latency_compliance (yaml:50-52): p99 per endpoint vs SLA.
     * p99 is EXACT and engine-portable: smallest latency whose cume_dist
@@ -83,27 +85,23 @@ object Factor2 {
     * this is the one Factor-2 check that shuffles two big tables; both
     * sides are pre-bucketable on the id.
     */
-  val embeddingCoverage = Check("embedding_coverage",
-    (spark, dir) => {
-      val docs = table(spark, dir, "documents")
-      val embs = table(spark, dir, "embeddings")
-      val covered = docs.join(embs, docs("doc_id") === embs("vec_id"), "left_semi")
-      fractionDf(spark, "embedding_coverage", cnt(covered), cnt(docs))
-    },
-    Some(fractionSql("embedding_coverage",
+  val embeddingCoverage = fraction("embedding_coverage", Table("documents"),
+    fractionSql("embedding_coverage",
       "SELECT COUNT(*) FROM documents WHERE doc_id IN (SELECT vec_id FROM embeddings)",
-      "SELECT COUNT(*) FROM documents", Nil)))
+      "SELECT COUNT(*) FROM documents", Nil)) { (spark, dir) =>
+    (count_if(col("doc_id").isin(table(spark, dir, "embeddings").select("vec_id"))),
+      count(lit(1)))
+  }
 
   /** #13 feature_materialization_coverage (yaml:58-60): features present in
     * BOTH online and offline stores.
     */
   val featureMaterializationCoverage = Check("feature_materialization_coverage",
     (spark, _) => {
-      val fc = featureCatalog.df(spark)
-      val both = fc.groupBy("feature")
-        .agg(countDistinct("store").as("stores")).filter(col("stores") === 2)
-      fractionDf(spark, "feature_materialization_coverage",
-        cnt(both), cnt(fc.select("feature").distinct()))
+      val perFeature = featureCatalog.df(spark).groupBy("feature")
+        .agg(countDistinct("store").as("stores"))
+      fractionOf("feature_materialization_coverage", perFeature,
+        count_if(col("stores") === 2), count(lit(1)))
     },
     Some(fractionSql("feature_materialization_coverage",
       "SELECT COUNT(*) FROM (SELECT feature FROM feature_catalog GROUP BY feature HAVING COUNT(DISTINCT store) = 2)",
@@ -113,50 +111,38 @@ object Factor2 {
   /** #14 native_format_availability (yaml:62-64; formats per
     * `2-consumable.md:17`: "Native formats (Parquet, JSON, vectors)").
     */
-  val nativeFormatAvailability = Check("native_format_availability",
-    (spark, _) => {
-      val a = assets.df(spark)
-      fractionDf(spark, "native_format_availability",
-        cnt(a.filter(col("format").isin("parquet", "json", "vector"))), cnt(a))
-    },
-    Some(fractionSql("native_format_availability",
+  val nativeFormatAvailability = fraction("native_format_availability",
+    Catalog(assets), fractionSql("native_format_availability",
       "SELECT COUNT(*) FROM assets WHERE format IN ('parquet', 'json', 'vector')",
-      "SELECT COUNT(*) FROM assets", Seq(assets))))
+      "SELECT COUNT(*) FROM assets", Seq(assets))) { (_, _) =>
+    (count_if(col("format").isin("parquet", "json", "vector")), count(lit(1)))
+  }
 
   /** #15 vector_index_coverage (yaml:66-68): embedding collections with a
     * registered index artifact at least as fresh as the collection.
     */
-  val vectorIndexCoverage = Check("vector_index_coverage",
-    (spark, _) => {
-      val colls = assets.df(spark)
-        .filter(col("kind") === "collection" && col("format") === "vector")
-      val vi = vectorIndexes.df(spark)
-      val indexed = colls.join(broadcast(vi),
-        colls("asset") === vi("collection") &&
-          vi("built_at") >= colls("last_modified"), "left_semi")
-      fractionDf(spark, "vector_index_coverage", cnt(indexed), cnt(colls))
-    },
-    Some(fractionSql("vector_index_coverage",
+  val vectorIndexCoverage = fraction("vector_index_coverage", Catalog(assets),
+    fractionSql("vector_index_coverage",
       "SELECT COUNT(*) FROM assets a WHERE kind = 'collection' AND format = 'vector' AND EXISTS (SELECT 1 FROM vector_indexes vi WHERE vi.collection = a.asset AND vi.built_at >= a.last_modified)",
       "SELECT COUNT(*) FROM assets WHERE kind = 'collection' AND format = 'vector'",
-      Seq(assets, vectorIndexes))))
+      Seq(assets, vectorIndexes))) { (spark, _) =>
+    val colls = col("kind") === "collection" && col("format") === "vector"
+    (count_if(colls && freshArtifact(vectorIndexes.df(spark))), count_if(colls))
+  }
 
   /** #16 chunk_readiness (yaml:70-72): documents chunked with every chunk
     * within the context window. Unchunked documents count 0 (left join from
     * documents).
     */
-  val chunkReadiness = Check("chunk_readiness",
-    (spark, dir) => {
-      val docs = table(spark, dir, "documents")
-      val ok = chunks.df(spark).groupBy("doc_id")
-        .agg(max("chunk_tokens").as("mx"))
-        .filter(col("mx") <= CtxWindowTokens)
-      fractionDf(spark, "chunk_readiness",
-        cnt(docs.join(broadcast(ok), Seq("doc_id"), "left_semi")), cnt(docs))
-    },
-    Some(fractionSql("chunk_readiness",
+  val chunkReadiness = fraction("chunk_readiness", Table("documents"),
+    fractionSql("chunk_readiness",
       s"SELECT COUNT(*) FROM documents WHERE doc_id IN (SELECT doc_id FROM chunks GROUP BY doc_id HAVING MAX(chunk_tokens) <= $CtxWindowTokens)",
-      "SELECT COUNT(*) FROM documents", Seq(chunks))))
+      "SELECT COUNT(*) FROM documents", Seq(chunks))) { (spark, _) =>
+    val ok = chunks.df(spark).groupBy("doc_id")
+      .agg(max("chunk_tokens").as("mx"))
+      .filter(col("mx") <= CtxWindowTokens)
+    (count_if(col("doc_id").isin(ok.select("doc_id"))), count(lit(1)))
+  }
 
   /** #17 batch_throughput_sufficiency (yaml:74-76): latest run's measured
     * throughput vs required ("I/O bottlenecks cause expensive GPU idle
@@ -187,21 +173,19 @@ object Factor2 {
     })
 
   /** #18 point_lookup_availability (yaml:78-80): records of key-addressable
-    * stores whose key is non-null and unique. Grain = record.
+    * stores whose key is non-null and unique. Grain = record: one row per
+    * key of either store carries its record count, so the population is
+    * the sum of the counts and a hit is a key with exactly one record.
     */
   val pointLookupAvailability = Check("point_lookup_availability",
     (spark, dir) => {
-      val cust = table(spark, dir, "customer")
-      val custOk = cust.filter(col("c_custkey").isNotNull)
-        .groupBy("c_custkey").count().filter(col("count") === 1)
-      val onf = onlineFeatures.df(spark)
-      val onfOk = onf.groupBy("entity_id", "feature").count()
-        .filter(col("count") === 1)
-      val h = custOk.agg(count(lit(1)).as("a")).crossJoin(
-        onfOk.agg(count(lit(1)).as("b"))).select((col("a") + col("b")).as("hits"))
-      val p = cust.agg(count(lit(1)).as("a")).crossJoin(
-        onf.agg(count(lit(1)).as("b"))).select((col("a") + col("b")).as("population"))
-      fractionDf(spark, "point_lookup_availability", h, p)
+      val cust = table(spark, dir, "customer").groupBy("c_custkey").count()
+        .select((col("c_custkey").isNotNull && col("count") === 1).as("unique"),
+          col("count"))
+      val onf = onlineFeatures.df(spark).groupBy("entity_id", "feature").count()
+        .select((col("count") === 1).as("unique"), col("count"))
+      fractionOf("point_lookup_availability", cust.unionAll(onf),
+        count_if(col("unique")), coalesce(sum("count"), lit(0L)))
     },
     Some(fractionSql("point_lookup_availability",
       "SELECT (SELECT COUNT(*) FROM (SELECT c_custkey FROM customer WHERE c_custkey IS NOT NULL GROUP BY c_custkey HAVING COUNT(*) = 1)) + (SELECT COUNT(*) FROM (SELECT entity_id, feature FROM online_features GROUP BY entity_id, feature HAVING COUNT(*) = 1))",
@@ -219,10 +203,8 @@ object Factor2 {
       val x = extraVectors.df(spark)
         .agg(countDistinct(size(col("embedding"))).as("ndim"),
           max(size(col("embedding"))).as("dim"))
-      val colls = e.unionAll(x)
-      fractionDf(spark, "embedding_dimension_consistency",
-        cnt(colls.filter(col("ndim") === 1 && col("dim") === ModelDim)),
-        cnt(colls))
+      fractionOf("embedding_dimension_consistency", e.unionAll(x),
+        count_if(col("ndim") === 1 && col("dim") === ModelDim), count(lit(1)))
     },
     Some(fractionSql("embedding_dimension_consistency",
       s"SELECT COUNT(*) FROM (SELECT COUNT(DISTINCT len(embedding)) AS ndim, MAX(len(embedding)) AS dim FROM embeddings UNION ALL SELECT COUNT(DISTINCT len(embedding)), MAX(len(embedding)) FROM extra_vectors) WHERE ndim = 1 AND dim = $ModelDim",

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.catalog.Fixtures._
 import graft.checks.CheckDsl._
+import graft.checks.Source.Catalog
 
 /** Factor 3 — Current: "freshness enforced by infrastructure rather than
   * assumed by convention" (reference `factors/3-current.md:3`; stanzas
@@ -20,22 +21,20 @@ import graft.checks.CheckDsl._
 object Factor3 {
 
   /** #21 change_detection (yaml:91-93). */
-  val changeDetection = Check("change_detection",
-    (spark, _) => {
-      val a = assets.df(spark)
-      fractionDf(spark, "change_detection",
-        cnt(a.filter(col("cdc_enabled"))), cnt(a))
-    },
-    Some(fractionSql("change_detection",
+  val changeDetection = fraction("change_detection", Catalog(assets),
+    fractionSql("change_detection",
       "SELECT COUNT(*) FROM assets WHERE cdc_enabled",
-      "SELECT COUNT(*) FROM assets", Seq(assets))))
+      "SELECT COUNT(*) FROM assets", Seq(assets))) { (_, _) =>
+    (count_if(col("cdc_enabled")), count(lit(1)))
+  }
 
-  /** Per-asset latest event time, as a (asset, max_ts) union of three
-    * column-pruned aggregates over the timestamped tables.
+  /** Per-asset latest event time, as a (ts_asset, max_ts) union of three
+    * column-pruned aggregates over the timestamped tables: one row per
+    * asset.
     */
   private def latestTs(spark: SparkSession, dir: String): DataFrame = {
     def mx(t: String, c: String) = table(spark, dir, t)
-      .agg(max(col(c)).as("max_ts")).select(lit(t).as("asset"), col("max_ts"))
+      .agg(max(col(c)).as("max_ts")).select(lit(t).as("ts_asset"), col("max_ts"))
     mx("events", "ts").unionAll(mx("orders", "o_orderdate"))
       .unionAll(mx("lineitem", "l_shipdate"))
   }
@@ -49,20 +48,20 @@ object Factor3 {
 
   /** #22 data_freshness (yaml:95-97): population = assets WITH a declared
     * freshness SLA; fresh iff lag(asOf, max event ts) within the window.
+    * An SLA row matches at most one latest-time row, so counting the SLA
+    * rows with a fresh match counts the fresh join rows.
     */
-  val dataFreshness = Check("data_freshness",
-    (spark, dir) => {
-      val slas = sla.df(spark).filter(col("sla_kind") === "freshness")
-      val joined = latestTs(spark, dir).join(broadcast(slas), Seq("asset"))
-      val fresh = joined.filter(
-        unix_timestamp(lit(AsOf)) - unix_timestamp(col("max_ts")) <=
-          col("threshold") * 3600)
-      fractionDf(spark, "data_freshness", cnt(fresh), cnt(slas))
-    },
-    Some(fractionSql("data_freshness",
+  val dataFreshness = fraction("data_freshness", Catalog(sla),
+    fractionSql("data_freshness",
       s"SELECT COUNT(*) FROM latest_ts l JOIN sla s ON l.asset = s.asset AND s.sla_kind = 'freshness' WHERE date_diff('second', l.max_ts, $AsOfSql) <= s.threshold * 3600",
       "SELECT COUNT(*) FROM sla WHERE sla_kind = 'freshness'",
-      Seq(sla), Seq(latestTsCte))))
+      Seq(sla), Seq(latestTsCte))) { (spark, dir) =>
+    val freshness = col("sla_kind") === "freshness"
+    val fresh = latestTs(spark, dir).where(col("ts_asset") === col("asset").outer() &&
+      unix_timestamp(lit(AsOf)) - unix_timestamp(col("max_ts")) <=
+        col("threshold").outer() * 3600).exists()
+    (count_if(freshness && fresh), count_if(freshness))
+  }
 
   /** #23 propagation_latency_compliance (yaml:99-101): p95 of end-to-end run
     * duration per pipeline vs SLA (exact rank-based percentile, see #11).
@@ -125,8 +124,8 @@ object Factor3 {
         .select(col("entity_id"), col("feature"), col("value").as("vr"))
       val perFeature = b.join(r, Seq("entity_id", "feature"))
         .groupBy("feature").agg(max(abs(col("vb") - col("vr"))).as("md"))
-      fractionDf(spark, "training_serving_parity",
-        cnt(perFeature.filter(col("md") <= 1e-6)), cnt(perFeature))
+      fractionOf("training_serving_parity", perFeature,
+        count_if(col("md") <= 1e-6), count(lit(1)))
     },
     Some {
       val mdCte =
@@ -161,23 +160,20 @@ object Factor3 {
       Seq(featureCatalog, sla))))
 
   /** #27 temporal_referential_integrity (yaml:115-117): record-grain —
-    * non-null event timestamps within a sane window ending at asOf.
+    * non-null event timestamps within a sane window ending at asOf, in one
+    * aggregate over the three tables' timestamps, each cast to the type the
+    * comparison with a timestamp literal coerces it to.
     */
   val temporalReferentialIntegrity = Check("temporal_referential_integrity",
     (spark, dir) => {
       val lo = java.time.Instant.parse("1990-01-01T00:00:00Z")
-      def probe(t: String, c: String) = {
-        val d = table(spark, dir, t)
-        (cnt(d.filter(col(c).isNotNull && col(c) >= lit(lo) && col(c) <= lit(AsOf))), cnt(d))
-      }
-      val (h1, p1) = probe("events", "ts")
-      val (h2, p2) = probe("orders", "o_orderdate")
-      val (h3, p3) = probe("lineitem", "l_shipdate")
-      def add3(a: DataFrame, b: DataFrame, c: DataFrame, n: String) =
-        a.toDF("a").crossJoin(b.toDF("b")).crossJoin(c.toDF("c"))
-          .select((col("a") + col("b") + col("c")).as(n))
-      fractionDf(spark, "temporal_referential_integrity",
-        add3(h1, h2, h3, "hits"), add3(p1, p2, p3, "population"))
+      val ts = Seq("events" -> "ts", "orders" -> "o_orderdate",
+        "lineitem" -> "l_shipdate").map { case (t, c) =>
+        table(spark, dir, t).select(col(c).cast("timestamp").as("t"))
+      }.reduce(_ unionAll _)
+      fractionOf("temporal_referential_integrity", ts,
+        count_if(col("t").isNotNull && col("t") >= lit(lo) && col("t") <= lit(AsOf)),
+        count(lit(1)))
     },
     Some {
       val lo = "TIMESTAMP '1990-01-01 00:00:00'"
@@ -190,26 +186,21 @@ object Factor3 {
     })
 
   /** #28 schema_evolution_tracking (yaml:119-121). */
-  val schemaEvolutionTracking = Check("schema_evolution_tracking",
-    (spark, _) => {
-      val a = assets.df(spark)
-      val tracked = a.join(broadcast(schemaVersions.df(spark)), Seq("asset"), "left_semi")
-      fractionDf(spark, "schema_evolution_tracking", cnt(tracked), cnt(a))
-    },
-    Some(fractionSql("schema_evolution_tracking",
+  val schemaEvolutionTracking = fraction("schema_evolution_tracking",
+    Catalog(assets), fractionSql("schema_evolution_tracking",
       "SELECT COUNT(*) FROM assets a WHERE EXISTS (SELECT 1 FROM schema_versions v WHERE v.asset = a.asset)",
-      "SELECT COUNT(*) FROM assets", Seq(assets, schemaVersions))))
+      "SELECT COUNT(*) FROM assets", Seq(assets, schemaVersions))) { (spark, _) =>
+    (count_if(col("asset").isin(schemaVersions.df(spark).select("asset"))),
+      count(lit(1)))
+  }
 
   /** #29 incremental_update_coverage (yaml:123-125). */
-  val incrementalUpdateCoverage = Check("incremental_update_coverage",
-    (spark, _) => {
-      val p = pipelines.df(spark)
-      fractionDf(spark, "incremental_update_coverage",
-        cnt(p.filter(col("mode").isin("cdc", "streaming", "incremental"))), cnt(p))
-    },
-    Some(fractionSql("incremental_update_coverage",
+  val incrementalUpdateCoverage = fraction("incremental_update_coverage",
+    Catalog(pipelines), fractionSql("incremental_update_coverage",
       "SELECT COUNT(*) FROM pipelines WHERE mode IN ('cdc', 'streaming', 'incremental')",
-      "SELECT COUNT(*) FROM pipelines", Seq(pipelines))))
+      "SELECT COUNT(*) FROM pipelines", Seq(pipelines))) { (_, _) =>
+    (count_if(col("mode").isin("cdc", "streaming", "incremental")), count(lit(1)))
+  }
 
   val all: Seq[Check] = Seq(changeDetection, dataFreshness,
     propagationLatencyCompliance, pointInTimeCorrectness,

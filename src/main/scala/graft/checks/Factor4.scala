@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.Fixtures._
 import graft.checks.CheckDsl._
+import graft.checks.Source.Catalog
 import graft.substrate.Graph
 
 /** Factor 4 — Correlated: "traceable from source to every decision it
@@ -23,19 +24,14 @@ object Factor4 {
   /** #30 data_provenance (yaml:128-130): origin system + collection method
     * + upstream lineage all documented.
     */
-  val dataProvenance = Check("data_provenance",
-    (spark, _) => {
-      val a = assets.df(spark)
-      val le = lineageEdges.df(spark)
-      val withUpstream = a.join(broadcast(le.filter(col("grain") === "dataset")),
-        a("asset") === le("dst"), "left_semi")
-      val documented = withUpstream.filter(
-        col("origin_system").isNotNull && col("collection_method").isNotNull)
-      fractionDf(spark, "data_provenance", cnt(documented), cnt(a))
-    },
-    Some(fractionSql("data_provenance",
+  val dataProvenance = fraction("data_provenance", Catalog(assets),
+    fractionSql("data_provenance",
       "SELECT COUNT(*) FROM assets a WHERE origin_system IS NOT NULL AND collection_method IS NOT NULL AND EXISTS (SELECT 1 FROM lineage_edges e WHERE e.dst = a.asset AND e.grain = 'dataset')",
-      "SELECT COUNT(*) FROM assets", Seq(assets, lineageEdges))))
+      "SELECT COUNT(*) FROM assets", Seq(assets, lineageEdges))) { (spark, _) =>
+    (count_if(col("origin_system").isNotNull &&
+      col("collection_method").isNotNull &&
+      col("asset").isin(datasetEdges(spark).select("dst"))), count(lit(1)))
+  }
 
   /** #31 lineage_completeness (yaml:132-134): dataset-grain reachability
     * from a source-system node (transitive) AND at least one field-grain
@@ -66,66 +62,54 @@ object Factor4 {
     })
 
   /** #32 data_version_coverage (yaml:136-138): immutable version ids. */
-  val dataVersionCoverage = Check("data_version_coverage",
-    (spark, _) => {
-      val a = assets.df(spark)
-      fractionDf(spark, "data_version_coverage",
-        cnt(a.filter(col("version_id").isNotNull && col("immutable"))), cnt(a))
-    },
-    Some(fractionSql("data_version_coverage",
+  val dataVersionCoverage = fraction("data_version_coverage", Catalog(assets),
+    fractionSql("data_version_coverage",
       "SELECT COUNT(*) FROM assets WHERE version_id IS NOT NULL AND immutable",
-      "SELECT COUNT(*) FROM assets", Seq(assets))))
+      "SELECT COUNT(*) FROM assets", Seq(assets))) { (_, _) =>
+    (count_if(col("version_id").isNotNull && col("immutable")), count(lit(1)))
+  }
 
   /** #33 agent_attribution (yaml:140-142): runs are the modification log. */
-  val agentAttribution = Check("agent_attribution",
-    (spark, _) => {
-      val r = pipelineRuns.df(spark)
-      fractionDf(spark, "agent_attribution",
-        cnt(r.filter(col("agent").isNotNull)), cnt(r))
-    },
-    Some(fractionSql("agent_attribution",
+  val agentAttribution = fraction("agent_attribution", Catalog(pipelineRuns),
+    fractionSql("agent_attribution",
       "SELECT COUNT(*) FROM pipeline_runs WHERE agent IS NOT NULL",
-      "SELECT COUNT(*) FROM pipeline_runs", Seq(pipelineRuns))))
+      "SELECT COUNT(*) FROM pipeline_runs", Seq(pipelineRuns))) { (_, _) =>
+    (count_if(col("agent").isNotNull), count(lit(1)))
+  }
 
   /** #34 pipeline_execution_audit (yaml:144-146): inputs, parameters,
     * outputs, completion status all recorded.
     */
-  val pipelineExecutionAudit = Check("pipeline_execution_audit",
-    (spark, _) => {
-      val r = pipelineRuns.df(spark)
-      val complete = r.filter(size(col("inputs")) > 0 &&
-        col("params").isNotNull && size(col("outputs")) > 0 &&
-        col("status").isNotNull)
-      fractionDf(spark, "pipeline_execution_audit", cnt(complete), cnt(r))
-    },
-    Some(fractionSql("pipeline_execution_audit",
+  val pipelineExecutionAudit = fraction("pipeline_execution_audit",
+    Catalog(pipelineRuns), fractionSql("pipeline_execution_audit",
       "SELECT COUNT(*) FROM pipeline_runs WHERE len(inputs) > 0 AND params IS NOT NULL AND len(outputs) > 0 AND status IS NOT NULL",
-      "SELECT COUNT(*) FROM pipeline_runs", Seq(pipelineRuns))))
+      "SELECT COUNT(*) FROM pipeline_runs", Seq(pipelineRuns))) { (_, _) =>
+    (count_if(size(col("inputs")) > 0 && col("params").isNotNull &&
+      size(col("outputs")) > 0 && col("status").isNotNull), count(lit(1)))
+  }
 
   /** #35 dependency_graph_completeness (yaml:148-150): upstream AND
     * downstream fully enumerated.
     */
-  val dependencyGraphCompleteness = Check("dependency_graph_completeness",
-    (spark, _) => {
-      val a = assets.df(spark)
-      fractionDf(spark, "dependency_graph_completeness",
-        cnt(a.filter(col("upstream_enumerated") && col("downstream_enumerated"))),
-        cnt(a))
-    },
-    Some(fractionSql("dependency_graph_completeness",
+  val dependencyGraphCompleteness = fraction("dependency_graph_completeness",
+    Catalog(assets), fractionSql("dependency_graph_completeness",
       "SELECT COUNT(*) FROM assets WHERE upstream_enumerated AND downstream_enumerated",
-      "SELECT COUNT(*) FROM assets", Seq(assets))))
+      "SELECT COUNT(*) FROM assets", Seq(assets))) { (_, _) =>
+    (count_if(col("upstream_enumerated") && col("downstream_enumerated")),
+      count(lit(1)))
+  }
 
   /** #36 record_level_traceability (yaml:152-154): record grain on the
     * events stream — correlation id non-null AND unique. A column-pruned
-    * single-pass groupBy at any scale (map-side partial agg).
+    * single-pass groupBy at any scale (map-side partial agg); the records
+    * are the sum of the per-id counts.
     */
   val recordLevelTraceability = Check("record_level_traceability",
     (spark, dir) => {
-      val e = table(spark, dir, "events")
-      val traceable = e.filter(col("event_id").isNotNull)
-        .groupBy("event_id").count().filter(col("count") === 1)
-      fractionDf(spark, "record_level_traceability", cnt(traceable), cnt(e))
+      val perId = table(spark, dir, "events").groupBy("event_id").count()
+      fractionOf("record_level_traceability", perId,
+        count_if(col("event_id").isNotNull && col("count") === 1),
+        coalesce(sum("count"), lit(0L)))
     },
     Some(fractionSql("record_level_traceability",
       "SELECT COUNT(*) FROM (SELECT event_id FROM events WHERE event_id IS NOT NULL GROUP BY event_id HAVING COUNT(*) = 1)",
@@ -135,30 +119,23 @@ object Factor4 {
     * automatically enumerable — the dataset participates in the lineage
     * graph (its closure is computable; cycle-guarded by construction).
     */
-  val impactAnalysisCapability = Check("impact_analysis_capability",
-    (spark, _) => {
-      val a = assets.df(spark)
-      val de = datasetEdges(spark)
-      val nodes = de.select(col("src").as("node"))
-        .unionAll(de.select(col("dst").as("node"))).distinct()
-      val inGraph = a.join(broadcast(nodes), a("asset") === nodes("node"), "left_semi")
-      fractionDf(spark, "impact_analysis_capability", cnt(inGraph), cnt(a))
-    },
-    Some(fractionSql("impact_analysis_capability",
+  val impactAnalysisCapability = fraction("impact_analysis_capability",
+    Catalog(assets), fractionSql("impact_analysis_capability",
       "SELECT COUNT(*) FROM assets a WHERE EXISTS (SELECT 1 FROM (SELECT src AS node FROM lineage_edges WHERE grain = 'dataset' UNION SELECT dst FROM lineage_edges WHERE grain = 'dataset') n WHERE n.node = a.asset)",
-      "SELECT COUNT(*) FROM assets", Seq(assets, lineageEdges))))
+      "SELECT COUNT(*) FROM assets", Seq(assets, lineageEdges))) { (spark, _) =>
+    val de = datasetEdges(spark)
+    (count_if(col("asset").isin(de.select("src").unionAll(de.select("dst")))),
+      count(lit(1)))
+  }
 
   /** #38 transformation_documentation (yaml:160-162). */
-  val transformationDocumentation = Check("transformation_documentation",
-    (spark, _) => {
-      val t = transformations.df(spark)
-      val documented = t.filter(col("logic_doc").isNotNull &&
-        size(col("inputs")) > 0 && size(col("outputs")) > 0)
-      fractionDf(spark, "transformation_documentation", cnt(documented), cnt(t))
-    },
-    Some(fractionSql("transformation_documentation",
+  val transformationDocumentation = fraction("transformation_documentation",
+    Catalog(transformations), fractionSql("transformation_documentation",
       "SELECT COUNT(*) FROM transformations WHERE logic_doc IS NOT NULL AND len(inputs) > 0 AND len(outputs) > 0",
-      "SELECT COUNT(*) FROM transformations", Seq(transformations))))
+      "SELECT COUNT(*) FROM transformations", Seq(transformations))) { (_, _) =>
+    (count_if(col("logic_doc").isNotNull && size(col("inputs")) > 0 &&
+      size(col("outputs")) > 0), count(lit(1)))
+  }
 
   /** Extension operator `lineage_impact`: the FULL downstream transitive
     * closure as (asset, downstream) pairs — what #37 scores the existence

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.Fixtures._
 import graft.checks.CheckDsl._
+import graft.checks.Source.{Catalog, Table}
 
 /** Factor 5 — Compliant: "explicit ownership, enforced access boundaries,
   * and AI-specific safeguards" (reference `factors/5-compliant.md:3`;
@@ -40,9 +41,9 @@ object Factor5 {
       val objs = assets.df(spark).select(col("asset").as("object"))
         .unionAll(columns.df(spark).select(
           concat_ws(".", col("asset"), col("column_name")).as("object")))
-      val t = tags.df(spark).select("object").distinct()
-      val tagged = objs.join(broadcast(t), Seq("object"), "left_semi")
-      fractionDf(spark, "classification", cnt(tagged), cnt(objs))
+      fractionOf("classification", catalogOnly(objs),
+        count_if(col("object").isin(tags.df(spark).select("object"))),
+        count(lit(1)))
     },
     Some(fractionSql("classification",
       "SELECT COUNT(*) FROM (SELECT asset AS object FROM assets UNION ALL SELECT asset || '.' || column_name FROM columns) o WHERE EXISTS (SELECT 1 FROM tags t WHERE t.object = o.object)",
@@ -66,8 +67,8 @@ object Factor5 {
         .select("asset", "column_name")
       val pii = declared.unionAll(detected).distinct()
         .join(broadcast(cols), Seq("asset", "column_name"), "left")
-      fractionDf(spark, "field_masking",
-        cnt(pii.filter(col("masking_policy").isNotNull)), cnt(pii))
+      fractionOf("field_masking", pii,
+        count_if(col("masking_policy").isNotNull), count(lit(1)))
     },
     Some {
       val detectedSql = PiiProbes.map { case (t, c) =>
@@ -87,88 +88,59 @@ object Factor5 {
   /** #41 access_audit_coverage (yaml:173-175): access events captured in an
     * IMMUTABLE audit log.
     */
-  val accessAuditCoverage = Check("access_audit_coverage",
-    (spark, _) => {
-      val ev = accessEvents.df(spark)
-      val au = auditLog.df(spark).filter(col("immutable"))
-      val captured = ev.join(broadcast(au), Seq("event_id"), "left_semi")
-      fractionDf(spark, "access_audit_coverage", cnt(captured), cnt(ev))
-    },
-    Some(fractionSql("access_audit_coverage",
+  val accessAuditCoverage = fraction("access_audit_coverage",
+    Catalog(accessEvents), fractionSql("access_audit_coverage",
       "SELECT COUNT(*) FROM access_events e WHERE EXISTS (SELECT 1 FROM audit_log a WHERE a.event_id = e.event_id AND a.immutable)",
-      "SELECT COUNT(*) FROM access_events", Seq(accessEvents, auditLog))))
+      "SELECT COUNT(*) FROM access_events", Seq(accessEvents, auditLog))) { (spark, _) =>
+    (count_if(col("event_id").isin(
+      auditLog.df(spark).filter(col("immutable")).select("event_id"))),
+      count(lit(1)))
+  }
 
   /** #42 bias_testing_coverage (yaml:177-179): training datasets with a
     * bias-test record before AI consumption.
     */
-  val biasTestingCoverage = Check("bias_testing_coverage",
-    (spark, _) => {
-      val training = assets.df(spark).filter(col("training_data"))
-      val bt = biasTests.df(spark)
-      val tested = training.join(broadcast(bt),
-        training("asset") === bt("dataset"), "left_semi")
-      fractionDf(spark, "bias_testing_coverage", cnt(tested), cnt(training))
-    },
-    Some(fractionSql("bias_testing_coverage",
+  val biasTestingCoverage = fraction("bias_testing_coverage", Catalog(assets),
+    fractionSql("bias_testing_coverage",
       "SELECT COUNT(*) FROM assets a WHERE training_data AND EXISTS (SELECT 1 FROM bias_tests b WHERE b.dataset = a.asset)",
       "SELECT COUNT(*) FROM assets WHERE training_data",
-      Seq(assets, biasTests))))
+      Seq(assets, biasTests))) { (spark, _) =>
+    (count_if(col("training_data") &&
+      col("asset").isin(biasTests.df(spark).select("dataset"))),
+      count_if(col("training_data")))
+  }
 
   /** #43 purpose_limitation (yaml:181-183): declared purposes AND
     * enforcement.
     */
-  val purposeLimitation = Check("purpose_limitation",
-    (spark, _) => {
-      val p = accessPaths.df(spark)
-      fractionDf(spark, "purpose_limitation",
-        cnt(p.filter(size(col("purposes")) > 0 && col("enforced"))), cnt(p))
-    },
-    Some(fractionSql("purpose_limitation",
+  val purposeLimitation = fraction("purpose_limitation", Catalog(accessPaths),
+    fractionSql("purpose_limitation",
       "SELECT COUNT(*) FROM access_paths WHERE len(purposes) > 0 AND enforced",
-      "SELECT COUNT(*) FROM access_paths", Seq(accessPaths))))
+      "SELECT COUNT(*) FROM access_paths", Seq(accessPaths))) { (_, _) =>
+    (count_if(size(col("purposes")) > 0 && col("enforced")), count(lit(1)))
+  }
 
   /** #44 license_compliance (yaml:185-187): population = externally sourced
     * datasets; license must permit training and be unexpired at asOf.
     */
-  val licenseCompliance = Check("license_compliance",
-    (spark, _) => {
-      val ext = assets.df(spark).filter(col("origin") === "external")
-      val lic = licenses.df(spark)
-        .filter(col("permits_training") && col("expires") > lit(AsOf))
-      val ok = ext.join(broadcast(lic), Seq("asset"), "left_semi")
-      fractionDf(spark, "license_compliance", cnt(ok), cnt(ext))
-    },
-    Some(fractionSql("license_compliance",
+  val licenseCompliance = fraction("license_compliance", Catalog(assets),
+    fractionSql("license_compliance",
       s"SELECT COUNT(*) FROM assets a WHERE origin = 'external' AND EXISTS (SELECT 1 FROM licenses l WHERE l.asset = a.asset AND l.permits_training AND l.expires > $AsOfSql)",
       "SELECT COUNT(*) FROM assets WHERE origin = 'external'",
-      Seq(assets, licenses))))
+      Seq(assets, licenses))) { (spark, _) =>
+    val ext = col("origin") === "external"
+    val lic = licenses.df(spark)
+      .filter(col("permits_training") && col("expires") > lit(AsOf))
+    (count_if(ext && col("asset").isin(lic.select("asset"))), count_if(ext))
+  }
 
   /** #45 demographic_representation (yaml:189-191): per training dataset,
     * total-variation distance between the observed demographic distribution
     * and the declared target ≤ tolerance. Observed shares come from one
     * hash-agg pass over the data.
     */
-  val demographicRepresentation = Check("demographic_representation",
-    (spark, dir) => {
-      val docs = table(spark, dir, "documents")
-      val tot = docs.agg(count(lit(1)).as("total"))
-      val obs = docs.groupBy(col("lang").as("category"))
-        .agg(count(lit(1)).as("cnt"))
-        .crossJoin(broadcast(tot))
-        .select(lit("documents").as("dataset"), col("category"),
-          (col("cnt").cast("double") / col("total")).as("share"))
-      val tgt = populationDist.df(spark)
-        .select(col("dataset"), col("category"), col("target_share"))
-      val tvd = obs.join(tgt, Seq("dataset", "category"), "full_outer")
-        .groupBy("dataset")
-        .agg((sum(abs(coalesce(col("share"), lit(0.0)) -
-          coalesce(col("target_share"), lit(0.0)))) / 2).as("tvd"))
-      val training = assets.df(spark).filter(col("training_data"))
-      val ok = training.join(broadcast(tvd.filter(col("tvd") <= 0.1)),
-        training("asset") === tvd("dataset"), "left_semi")
-      fractionDf(spark, "demographic_representation", cnt(ok), cnt(training))
-    },
-    Some {
+  val demographicRepresentation = fraction("demographic_representation",
+    Catalog(assets), {
       val obsCte =
         """obs AS (SELECT 'documents' AS dataset, lang AS category,
           |COUNT(*) * 1.0 / (SELECT COUNT(*) FROM documents) AS share
@@ -183,24 +155,38 @@ object Factor5 {
         "SELECT COUNT(*) FROM assets a WHERE training_data AND EXISTS (SELECT 1 FROM tvd v WHERE v.dataset = a.asset AND v.tvd <= 0.1)",
         "SELECT COUNT(*) FROM assets WHERE training_data",
         Seq(assets, populationDist), Seq(obsCte, tvdCte))
-    })
+    }) { (spark, dir) =>
+    val docs = table(spark, dir, "documents")
+    val tot = docs.agg(count(lit(1)).as("total"))
+    val obs = docs.groupBy(col("lang").as("category"))
+      .agg(count(lit(1)).as("cnt"))
+      .crossJoin(broadcast(tot))
+      .select(lit("documents").as("dataset"), col("category"),
+        (col("cnt").cast("double") / col("total")).as("share"))
+    val tgt = populationDist.df(spark)
+      .select(col("dataset"), col("category"), col("target_share"))
+    val tvd = obs.join(tgt, Seq("dataset", "category"), "full_outer")
+      .groupBy("dataset")
+      .agg((sum(abs(coalesce(col("share"), lit(0.0)) -
+        coalesce(col("target_share"), lit(0.0)))) / 2).as("tvd"))
+    (count_if(col("training_data") &&
+      col("asset").isin(tvd.filter(col("tvd") <= 0.1).select("dataset"))),
+      count_if(col("training_data")))
+  }
 
   /** #46 consent_coverage (yaml:193-195): personal-data records (customer)
     * with a valid, unexpired, AI-scoped legal basis. Consent is recorded per
     * subject cohort; the join is a broadcast against the record stream.
     */
-  val consentCoverage = Check("consent_coverage",
-    (spark, dir) => {
-      val cust = table(spark, dir, "customer")
-      val valid = consent.df(spark).filter(col("basis").isNotNull &&
-        col("scope_ai") && col("expires_ts") > lit(AsOf))
-      val covered = cust.join(broadcast(valid),
-        cust("c_custkey") % 10 === valid("cohort"), "left_semi")
-      fractionDf(spark, "consent_coverage", cnt(covered), cnt(cust))
-    },
-    Some(fractionSql("consent_coverage",
+  val consentCoverage = fraction("consent_coverage", Table("customer"),
+    fractionSql("consent_coverage",
       s"SELECT COUNT(*) FROM customer c WHERE EXISTS (SELECT 1 FROM consent x WHERE x.cohort = c.c_custkey % 10 AND x.basis IS NOT NULL AND x.scope_ai AND x.expires_ts > $AsOfSql)",
-      "SELECT COUNT(*) FROM customer", Seq(consent))))
+      "SELECT COUNT(*) FROM customer", Seq(consent))) { (spark, _) =>
+    val valid = consent.df(spark).filter(col("basis").isNotNull &&
+      col("scope_ai") && col("expires_ts") > lit(AsOf))
+    (count_if((col("c_custkey") % 10).isin(valid.select("cohort"))),
+      count(lit(1)))
+  }
 
   /** #47 retention_policy (yaml:197-199): schedule declared AND enforced,
     * with a data probe where the asset has a known event-time column —

@@ -544,6 +544,13 @@ private[graft] object MetaIo {
     x.length < y.length
   }
 
+  /** Exact row count of one parquet file from its footer's block
+    * metadata — driver-side, no Spark job (what [[SnapshotStore
+    * .countAt]] subtracts per positional-delete sidecar file, r16).
+    */
+  def rowCount(conf: Configuration, file: String): Long =
+    footerStats(conf, file, Nil)._1
+
   /** Per-FILE statistics read from the parquet FOOTER, driver-side —
     * row count plus min/max for each requested column: the stats a
     * table format's commit records per data file (Iceberg manifests
@@ -569,13 +576,6 @@ private[graft] object MetaIo {
     * would understate the range). Row count is exact regardless: it
     * comes from block metadata, not column stats.
     */
-  /** Exact row count of one parquet file from its footer's block
-    * metadata — driver-side, no Spark job (what [[SnapshotStore
-    * .countAt]] subtracts per positional-delete sidecar file, r16).
-    */
-  def rowCount(conf: Configuration, file: String): Long =
-    footerStats(conf, file, Nil)._1
-
   def footerStats(conf: Configuration, file: String, cols: Seq[String])
       : (Long, Map[String, (Long, Long)], Map[String, (String, String)]) = {
     import scala.jdk.CollectionConverters._

@@ -9,7 +9,7 @@ class AssessorSpec extends SparkSpec {
     val sc = Assessor.scorecard(spark, sf, Workload.Serving).collect()
     val servingKeys = Registry.forWorkload(Workload.Serving).map(_.key).toSet
     assert(sc.map(_.getAs[String]("requirement")).toSet.subsetOf(servingKeys))
-    assert(sc.length == servingKeys.size) // all 43 serving checks implemented
+    assert(sc.length == servingKeys.size) // all 44 serving checks implemented
     assert(sc.forall { r =>
       val v = r.getAs[Double]("value"); v >= 0.0 && v <= 1.0
     })
