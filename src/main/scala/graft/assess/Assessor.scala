@@ -56,7 +56,8 @@ object Assessor {
     * source run as one aggregate ([[CheckDsl.fractions]]); every other
     * check runs its own plan. The groups run concurrently on a bounded
     * pool under one deadline, and a failure names its group's requirement
-    * keys.
+    * keys. The unfused checks are submitted first: they are the multi-job
+    * ones, and a fused group is one short aggregate that fills the tail.
     */
   private[graft] def results(spark: SparkSession, dir: String,
       checks: Seq[Check]): Seq[Result] = {
@@ -66,6 +67,7 @@ object Assessor {
 
     val key = (c: Check) => c.fraction.fold[Any](c.name)(_.source)
     val groups = checks.map(key).distinct.map(k => checks.filter(key(_) == k))
+      .sortBy(_.head.fraction.isDefined)
     def run(group: Seq[Check]): Seq[Result] = group.head.fraction match {
       case Some(f) =>
         val row = CheckDsl.fractions(f.source.df(spark, dir),

@@ -136,31 +136,34 @@ object DriftTier {
     * orders of magnitude from the bars; cross-engine float noise cannot
     * flip an indicator). Composes into BOTH workload scorecards through
     * the same oracle-union machinery as every reference check.
+    *
+    * One pass per table: each monitored table is scanned once with its
+    * rows tagged by half (`Drift.halves`), both halves' counts or means
+    * come from one keyed aggregate, and each PSI is one aggregate over
+    * the counts (`Drift.psiOfCounts`, the PSI invariant). The events
+    * edges come from the reference half's sample as in `numericPsi`.
+    * value = one aggregate over the three within-bar flags.
     */
   val distributionCurrency = Check("distribution_currency",
     (spark, dir) => {
       import graft.substrate.Drift
-      val d = table(spark, dir, "documents")
-      def tokHalf(m: Int) = d.filter(col("doc_id") % 2 === m)
-        .select(explode(tokens(col("text"))).as("token"))
-      val psiDoc = Drift.categoricalPsi(tokHalf(0), tokHalf(1), "token")
-        .agg(sum("contrib").as("psi_doc"))
-      val ev = table(spark, dir, "events").select(col("event_id"), col("value"))
-      def evHalf(m: Int) = ev.filter(col("event_id") % 2 === m)
-      val psiEv = Drift.numericPsi(evHalf(0), evHalf(1), "value", "event_id")
-        .agg(sum("contrib").as("psi_ev"))
-      val e = table(spark, dir, "embeddings")
-        .select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
-      def emHalf(m: Int) = e.filter(col("vec_id") % 2 === m)
-      val msEmb = Drift.embeddingMeanShift(emHalf(0), emHalf(1), "v")
-        .agg(avg("abs_shift").as("ms_emb"))
-      val hits = psiDoc.crossJoin(psiEv).crossJoin(msEmb).select(
-        (when(col("psi_doc") <= Drift.PsiBar, 1L).otherwise(0L) +
-          when(col("psi_ev") <= Drift.PsiBar, 1L).otherwise(0L) +
-          when(col("ms_emb") <= Drift.MeanShiftBar, 1L).otherwise(0L))
-          .as("hits"))
-      val pop = spark.range(1).select(lit(3L).as("population"))
-      fractionDf(spark, "distribution_currency", hits, pop)
+      val docs = Drift.halves(table(spark, dir, "documents"), "doc_id")
+        .select(col("_h"), explode(tokens(col("text"))).as("token"))
+      val ev = Drift.halves(table(spark, dir, "events"), "event_id")
+        .select(col("_h"), col("event_id"), col("value"))
+      val edges = Drift.decileEdges(ev.filter(col("_h") === 0), "value",
+        "event_id")
+      val emb = Drift.halves(table(spark, dir, "embeddings"), "vec_id")
+        .select(col("_h"), toDoubleArr(col("embedding")).as("v"))
+      val psiDoc = Drift.psiOfCounts(Drift.halfCounts(docs, col("token")))
+      val psiEv = Drift.psiOfCounts(
+        Drift.halfCounts(Drift.binned(ev, "value", edges), col("bin")))
+      val msEmb = Drift.halfMeanShift(emb, "v").agg(avg("abs_shift").as("ms"))
+      val within = psiDoc.select((col("psi") <= Drift.PsiBar).as("ok"))
+        .unionAll(psiEv.select((col("psi") <= Drift.PsiBar).as("ok")))
+        .unionAll(msEmb.select((col("ms") <= Drift.MeanShiftBar).as("ok")))
+      fractionOf("distribution_currency", within, count_if(col("ok")),
+        count(lit(1)))
     },
     Some {
       import graft.substrate.Drift

@@ -49,8 +49,8 @@ object Factor1 {
           cols("asset") =!= keys("dst_asset"))
         .select(col("asset").as("src_asset"), col("column_name").as("src_column"),
           col("dst_asset"), col("dst_column"))
-      val declared = struct(col("src_asset"), col("src_column"),
-        col("dst_asset"), col("dst_column")).isin(relationships.df(spark)
+      val declared = inCatalog(struct(col("src_asset"), col("src_column"),
+        col("dst_asset"), col("dst_column")), relationships.df(spark)
         .select("src_asset", "src_column", "dst_asset", "dst_column"))
       fractionOf("relationship_declaration", catalogOnly(candidates),
         count_if(declared), count(lit(1)))
@@ -77,7 +77,7 @@ object Factor1 {
       "SELECT COUNT(*) FROM assets a WHERE EXISTS (SELECT 1 FROM key_declarations k WHERE k.asset = a.asset)",
       "SELECT COUNT(*) FROM assets",
       Seq(assets, keyDeclarations))) { (spark, _) =>
-    (count_if(col("asset").isin(keyDeclarations.df(spark).select("asset"))),
+    (count_if(inCatalog(col("asset"), keyDeclarations.df(spark).select("asset"))),
       count(lit(1)))
   }
 
@@ -104,7 +104,8 @@ object Factor1 {
     Catalog(columns), fractionSql("business_glossary_linkage",
       "SELECT COUNT(*) FROM columns c WHERE EXISTS (SELECT 1 FROM glossary g WHERE g.term_id = c.glossary_term_id)",
       "SELECT COUNT(*) FROM columns", Seq(columns, glossary))) { (spark, _) =>
-    (count_if(col("glossary_term_id").isin(glossary.df(spark).select("term_id"))),
+    (count_if(inCatalog(col("glossary_term_id"),
+      glossary.df(spark).select("term_id"))),
       count(lit(1)))
   }
 
@@ -116,8 +117,8 @@ object Factor1 {
     Catalog(columns), fractionSql("constraint_declaration",
       "SELECT COUNT(*) FROM columns c WHERE EXISTS (SELECT 1 FROM constraints x WHERE x.asset = c.asset AND x.column_name = c.column_name)",
       "SELECT COUNT(*) FROM columns", Seq(columns, constraints))) { (spark, _) =>
-    (count_if(struct(col("asset"), col("column_name"))
-      .isin(constraints.df(spark).select("asset", "column_name"))), count(lit(1)))
+    (count_if(inCatalog(struct(col("asset"), col("column_name")),
+      constraints.df(spark).select("asset", "column_name"))), count(lit(1)))
   }
 
   /** #8 unit_of_measure_declaration (yaml:37-39): population = numeric

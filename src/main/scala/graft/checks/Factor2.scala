@@ -141,7 +141,7 @@ object Factor2 {
     val ok = chunks.df(spark).groupBy("doc_id")
       .agg(max("chunk_tokens").as("mx"))
       .filter(col("mx") <= CtxWindowTokens)
-    (count_if(col("doc_id").isin(ok.select("doc_id"))), count(lit(1)))
+    (count_if(inCatalog(col("doc_id"), ok.select("doc_id"))), count(lit(1)))
   }
 
   /** #17 batch_throughput_sufficiency (yaml:74-76): latest run's measured

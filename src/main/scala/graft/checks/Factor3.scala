@@ -190,7 +190,7 @@ object Factor3 {
     Catalog(assets), fractionSql("schema_evolution_tracking",
       "SELECT COUNT(*) FROM assets a WHERE EXISTS (SELECT 1 FROM schema_versions v WHERE v.asset = a.asset)",
       "SELECT COUNT(*) FROM assets", Seq(assets, schemaVersions))) { (spark, _) =>
-    (count_if(col("asset").isin(schemaVersions.df(spark).select("asset"))),
+    (count_if(inCatalog(col("asset"), schemaVersions.df(spark).select("asset"))),
       count(lit(1)))
   }
 

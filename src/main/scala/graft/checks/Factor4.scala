@@ -30,7 +30,7 @@ object Factor4 {
       "SELECT COUNT(*) FROM assets", Seq(assets, lineageEdges))) { (spark, _) =>
     (count_if(col("origin_system").isNotNull &&
       col("collection_method").isNotNull &&
-      col("asset").isin(datasetEdges(spark).select("dst"))), count(lit(1)))
+      inCatalog(col("asset"), datasetEdges(spark).select("dst"))), count(lit(1)))
   }
 
   /** #31 lineage_completeness (yaml:132-134): dataset-grain reachability
@@ -124,7 +124,7 @@ object Factor4 {
       "SELECT COUNT(*) FROM assets a WHERE EXISTS (SELECT 1 FROM (SELECT src AS node FROM lineage_edges WHERE grain = 'dataset' UNION SELECT dst FROM lineage_edges WHERE grain = 'dataset') n WHERE n.node = a.asset)",
       "SELECT COUNT(*) FROM assets", Seq(assets, lineageEdges))) { (spark, _) =>
     val de = datasetEdges(spark)
-    (count_if(col("asset").isin(de.select("src").unionAll(de.select("dst")))),
+    (count_if(inCatalog(col("asset"), de.select("src"), de.select("dst"))),
       count(lit(1)))
   }
 

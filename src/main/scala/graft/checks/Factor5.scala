@@ -42,7 +42,7 @@ object Factor5 {
         .unionAll(columns.df(spark).select(
           concat_ws(".", col("asset"), col("column_name")).as("object")))
       fractionOf("classification", catalogOnly(objs),
-        count_if(col("object").isin(tags.df(spark).select("object"))),
+        count_if(inCatalog(col("object"), tags.df(spark).select("object"))),
         count(lit(1)))
     },
     Some(fractionSql("classification",
@@ -66,9 +66,11 @@ object Factor5 {
       val declared = cols.filter(col("pii_declared"))
         .select("asset", "column_name")
       val pii = declared.unionAll(detected).distinct()
-        .join(broadcast(cols), Seq("asset", "column_name"), "left")
-      fractionOf("field_masking", pii,
-        count_if(col("masking_policy").isNotNull), count(lit(1)))
+      // (asset, column_name) is the columns catalog's key
+      val masked = cols.filter(col("masking_policy").isNotNull)
+        .select("asset", "column_name")
+      fractionOf("field_masking", pii, count_if(inCatalog(
+        struct(col("asset"), col("column_name")), masked)), count(lit(1)))
     },
     Some {
       val detectedSql = PiiProbes.map { case (t, c) =>
@@ -92,7 +94,7 @@ object Factor5 {
     Catalog(accessEvents), fractionSql("access_audit_coverage",
       "SELECT COUNT(*) FROM access_events e WHERE EXISTS (SELECT 1 FROM audit_log a WHERE a.event_id = e.event_id AND a.immutable)",
       "SELECT COUNT(*) FROM access_events", Seq(accessEvents, auditLog))) { (spark, _) =>
-    (count_if(col("event_id").isin(
+    (count_if(inCatalog(col("event_id"),
       auditLog.df(spark).filter(col("immutable")).select("event_id"))),
       count(lit(1)))
   }
@@ -106,7 +108,7 @@ object Factor5 {
       "SELECT COUNT(*) FROM assets WHERE training_data",
       Seq(assets, biasTests))) { (spark, _) =>
     (count_if(col("training_data") &&
-      col("asset").isin(biasTests.df(spark).select("dataset"))),
+      inCatalog(col("asset"), biasTests.df(spark).select("dataset"))),
       count_if(col("training_data")))
   }
 
@@ -131,7 +133,7 @@ object Factor5 {
     val ext = col("origin") === "external"
     val lic = licenses.df(spark)
       .filter(col("permits_training") && col("expires") > lit(AsOf))
-    (count_if(ext && col("asset").isin(lic.select("asset"))), count_if(ext))
+    (count_if(ext && inCatalog(col("asset"), lic.select("asset"))), count_if(ext))
   }
 
   /** #45 demographic_representation (yaml:189-191): per training dataset,
@@ -184,7 +186,7 @@ object Factor5 {
       "SELECT COUNT(*) FROM customer", Seq(consent))) { (spark, _) =>
     val valid = consent.df(spark).filter(col("basis").isNotNull &&
       col("scope_ai") && col("expires_ts") > lit(AsOf))
-    (count_if((col("c_custkey") % 10).isin(valid.select("cohort"))),
+    (count_if(inCatalog(col("c_custkey") % 10, valid.select("cohort"))),
       count(lit(1)))
   }
 
@@ -199,10 +201,11 @@ object Factor5 {
       val oldest = mn("events", "ts").unionAll(mn("orders", "o_orderdate"))
         .unionAll(mn("lineitem", "l_shipdate"))
       val probed = retention.df(spark).join(oldest, Seq("asset"), "left")
-      val ok = probed.filter(col("enforced") && (col("min_ts").isNull ||
-        unix_timestamp(lit(AsOf)) - unix_timestamp(col("min_ts")) <=
-          col("retention_days").cast("long") * 86400L))
-      fractionDf(spark, "retention_policy", cnt(ok), cnt(assets.df(spark)))
+      fractionOf("retention_policy", probed,
+        count_if(col("enforced") && (col("min_ts").isNull ||
+          unix_timestamp(lit(AsOf)) - unix_timestamp(col("min_ts")) <=
+            col("retention_days").cast("long") * 86400L)),
+        lit(assets.rows.length.toLong))
     },
     Some {
       val oldestCte =
@@ -233,17 +236,18 @@ object Factor5 {
     */
   val anonymizationEffectiveness = Check("anonymization_effectiveness",
     (spark, dir) => {
-      val risks = kAnonGroups(spark, dir).map { case (name, grouped) =>
-        val cfg = broadcast(anonConfig.df(spark).filter(col("dataset") === name))
-        grouped.crossJoin(cfg).agg(
-          first(col("dataset")).as("dataset"),
-          (sum(when(col("csize") < col("k"), col("csize")).otherwise(0L))
-            .cast("double") / sum(col("csize"))).as("risk"),
-          first(col("risk_threshold")).as("risk_threshold"))
-      }.reduce(_ unionAll _)
-      fractionDf(spark, "anonymization_effectiveness",
-        cnt(risks.filter(col("risk") <= col("risk_threshold"))),
-        cnt(anonConfig.df(spark)))
+      // one config row per dataset, read on the driver
+      val cfg = anonConfig.df(spark).collect()
+        .map(r => r.getAs[String]("dataset") -> r).toMap
+      val passes = kAnonGroups(spark, dir).toSeq.collect {
+        case (name, grouped) if cfg.contains(name) =>
+          val risk = sum(when(col("csize") < cfg(name).getAs[Int]("k"),
+            col("csize")).otherwise(0L)).cast("double") / sum(col("csize"))
+          grouped.agg((risk <= cfg(name).getAs[Double]("risk_threshold"))
+            .as("ok"))
+      }
+      fractionOf("anonymization_effectiveness", passes.reduce(_ unionAll _),
+        count_if(col("ok")), lit(anonConfig.rows.length.toLong))
     },
     Some {
       def riskSql(name: String, qi: String, tbl: String) =

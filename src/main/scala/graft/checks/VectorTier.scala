@@ -162,21 +162,21 @@ object VectorTier {
     */
   val retrievalRecallCompliance = Check("retrieval_recall_compliance",
     (spark, dir) => {
+      // both top-k sets are unique per (qid, cid), so the left join keeps
+      // one row per exact neighbor and `hit` marks the ones ANN found; the
+      // ANN side (two ids per result) is smaller than the query batch
+      // exactTopK already broadcasts
       val exact = exactEuclideanTopK(spark, dir, K)
-      val approx = annTopK(spark, dir, K).select("qid", "cid")
-      val hitsPerQuery = exact.join(approx, Seq("qid", "cid"), "left_semi")
-        .groupBy("qid").agg(count(lit(1)).as("overlap"))
-      val nQueries = exact.select("qid").distinct()
-      val avgRecall = nQueries.join(hitsPerQuery, Seq("qid"), "left")
-        .select(coalesce(col("overlap"), lit(0L)).as("overlap"))
-        .agg((sum("overlap").cast("double") / (count(lit(1)) * K)).as("recall"))
-      val target = sla.df(spark)
-        .filter(col("sla_kind") === "recall").select("asset", "threshold")
+      val approx = annTopK(spark, dir, K)
+        .select(col("qid"), col("cid"), lit(true).as("hit"))
+      val recall = exact.join(broadcast(approx), Seq("qid", "cid"), "left")
+        .agg((count_if(col("hit")).cast("double") /
+          (countDistinct(col("qid")) * K)).as("recall"))
       // one indexed collection (embeddings); population = collections with
       // a recall SLA + registered index
-      val met = avgRecall.crossJoin(broadcast(target))
-        .filter(col("recall") >= col("threshold"))
-      fractionDf(spark, "retrieval_recall_compliance", cnt(met), cnt(target))
+      fractionOf("retrieval_recall_compliance",
+        sla.df(spark).filter(col("sla_kind") === "recall"),
+        count_if(recall.scalar() >= col("threshold")), count(lit(1)))
     },
     Some(fractionSql("retrieval_recall_compliance",
       "SELECT COUNT(*) FROM brp_recall r JOIN sla s ON s.sla_kind = 'recall' WHERE r.recall >= s.threshold",

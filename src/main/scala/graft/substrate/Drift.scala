@@ -1,6 +1,6 @@
 package graft.substrate
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distribution-drift monitoring between two corpus snapshots — the
@@ -17,6 +17,14 @@ import org.apache.spark.sql.functions._
   * on the aggregate table alone. Deterministic end-to-end (counts are
   * integers; the smoothing and log arithmetic is mirrored in the
   * oracle SQL).
+  *
+  * PSI invariant: with a = n_cur + 1, b = n_ref + 1 per key and A = Σa,
+  * B = Σb over the union vocabulary, p_cur = a/A and p_ref = b/B, so
+  *   Σ contrib = Σ (a/A − b/B)·(ln(a/b) + ln(B/A))
+  *             = Σ a·ln(a/b) / A − Σ b·ln(a/b) / B,
+  * because Σ (a/A − b/B) = 0 cancels the ln(B/A) term. [[psiOfCounts]]
+  * computes the right-hand side as one aggregate over a counts table;
+  * the per-key monitors return the left-hand side's terms.
   */
 object Drift {
 
@@ -97,23 +105,77 @@ object Drift {
     */
   def numericPsi(ref: DataFrame, cur: DataFrame, vCol: String,
       tieCol: String, sampleMod: Int = 20, nBins: Int = 10): DataFrame = {
+    val edges = decileEdges(ref, vCol, tieCol, sampleMod, nBins)
+    categoricalPsi(binned(ref.select(vCol), vCol, edges),
+      binned(cur.select(vCol), vCol, edges), "bin")
+  }
+
+  /** The fixed bin edges of [[numericPsi]]: one row, `edges` = the sorted
+    * rank-selected elements of the `tieCol % sampleMod == 0` sample of
+    * `ref`.
+    */
+  def decileEdges(ref: DataFrame, vCol: String, tieCol: String,
+      sampleMod: Int = 20, nBins: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    // n and the ranks come from the one single-partition window pass
     val samp = ref.filter(col(tieCol) % sampleMod === 0)
       .select(col(vCol).as("v"), col(tieCol).as("tie"))
-    val n = samp.agg(count(lit(1)).cast("long").as("n"))
     val w = Window.orderBy(col("v").asc, col("tie").asc)
-    val edges = samp.crossJoin(broadcast(n))
+    samp.withColumn("n", count(lit(1)).over(Window.partitionBy()))
       .withColumn("rn", row_number().over(w).cast("long"))
       .withColumn("k", explode(sequence(lit(1), lit(nBins - 1))))
       .filter(col("rn") === ceil(col("n") * col("k") / nBins).cast("long"))
-      .select(col("v").as("edge"))
-    val edgeArr = edges.agg(sort_array(collect_list(col("edge"))).as("edges"))
-    def binned(df: DataFrame) = df.select(col(vCol).as("v"))
-      .crossJoin(broadcast(edgeArr))
-      .select(expr("aggregate(edges, 0L, (acc, e) -> acc + IF(v > e, 1L, 0L))")
-        .as("bin"))
-    categoricalPsi(binned(ref), binned(cur), "bin")
+      .agg(sort_array(collect_list(col("v"))).as("edges"))
   }
+
+  /** `df` plus `bin` = the number of `edges` below `vCol` (a map-side fold
+    * over the broadcast edge array).
+    */
+  def binned(df: DataFrame, vCol: String, edges: DataFrame): DataFrame =
+    df.crossJoin(broadcast(edges)).withColumn("bin", aggregate(col("edges"),
+      lit(0L), (acc, e) => acc + when(col(vCol) > e, 1L).otherwise(0L)))
+      .drop("edges")
+
+  /** Both halves of a deterministic even/odd split in one scan: `df` plus
+    * `_h` = `idCol % 2`, keeping only `_h ∈ {0, 1}` — exactly the rows the
+    * filters `idCol % 2 = 0` (half 0, the reference) and `idCol % 2 = 1`
+    * (half 1, the current snapshot) select, so a null or negative odd id
+    * is in neither half.
+    */
+  def halves(df: DataFrame, idCol: String): DataFrame =
+    df.withColumn("_h", col(idCol) % 2).filter(col("_h").isin(0, 1))
+
+  /** Per-key counts of both [[halves]] as one aggregate: (key, n_ref,
+    * n_cur) — the counts table [[categoricalPsi]] builds from two scans
+    * and a full outer join, for a non-null `key`.
+    */
+  def halfCounts(tagged: DataFrame, key: Column): DataFrame =
+    tagged.groupBy(key.as("key")).agg(
+      count_if(col("_h") === 0).as("n_ref"), count_if(col("_h") === 1).as("n_cur"))
+
+  /** The PSI of a counts table (key, n_ref, n_cur) as ONE aggregate `psi`:
+    * the right-hand side of the PSI invariant (object doc), equal to
+    * [[categoricalPsiFromCounts]]'s Σ contrib up to float rounding.
+    */
+  def psiOfCounts(counts: DataFrame): DataFrame = {
+    val a = col("n_cur") + 1.0
+    val b = col("n_ref") + 1.0
+    val l = log(a / b)
+    counts.agg((sum(a * l) / sum(a) - sum(b * l) / sum(b)).as("psi"))
+  }
+
+  /** [[embeddingMeanShift]] between both [[halves]] of one scan: (dim,
+    * mean_ref, mean_cur, abs_shift) from one dim-keyed aggregate of
+    * conditional averages. A dim only one half has gets a null shift,
+    * where the two-scan form's inner join drops it.
+    */
+  def halfMeanShift(tagged: DataFrame, vCol: String): DataFrame =
+    tagged.select(col("_h"), posexplode(col(vCol)).as(Seq("dim", "x")))
+      .groupBy(col("dim").cast("long").as("dim"))
+      .agg(avg(when(col("_h") === 0, col("x"))).as("mean_ref"),
+        avg(when(col("_h") === 1, col("x"))).as("mean_cur"))
+      .select(col("dim"), col("mean_ref"), col("mean_cur"),
+        abs(col("mean_cur") - col("mean_ref")).as("abs_shift"))
 
   /** Per-dimension mean shift between two snapshots of an embedding
     * column (array<double> in `vCol`) — the first-moment drift monitor

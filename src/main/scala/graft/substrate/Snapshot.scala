@@ -148,14 +148,17 @@ object SnapshotStore {
     val claimed = log.retryAtNext(conf, base, maxAttempts) { (head, v) =>
       require(head.nonEmpty,
         s"appendCommit needs a committed base version under $base")
-      if (batchTag.exists(t => batchTagCommitted(spark, base, t)))
+      val e = edit(spark, base, v, head.get, "an append", listedHead = true)
+      // the head answers most tag checks; older versions are walked only
+      // when it does not carry the tag
+      def olderTagged(t: String) = committedVersions(spark, base)
+        .filter(_ < head.get).reverse
+        .exists(u => tagged(MetaIo.groups(conf, mdir(base, u)), t))
+      if (batchTag.exists(t => tagged(e.groups, t) || olderTagged(t)))
         unchanged = head
-      else {
-        val e = edit(spark, base, v, head.get, "an append")
-        if (parquetPaths(conf, newDirs).forall(e.files)) unchanged = head
-        else e.addFiles(newDirs, statsCols, inherit = false, addedV = true,
-          batchTag = batchTag).commit(reclaimAdded = false)
-      }
+      else if (parquetPaths(conf, newDirs).forall(e.files)) unchanged = head
+      else e.addFiles(newDirs, statsCols, inherit = false, addedV = true,
+        batchTag = batchTag).commit(reclaimAdded = false)
     }
     unchanged.getOrElse(claimed)
   }
@@ -176,11 +179,13 @@ object SnapshotStore {
   def batchTagCommitted(spark: SparkSession, base: String,
       tag: String): Boolean = {
     val conf = spark.sparkContext.hadoopConfiguration
-    committedVersions(spark, base).reverse.exists { v =>
-      MetaIo.groups(conf, mdir(base, v))
-        .exists(g => MetaIo.optString(g, "batch_tag").contains(tag))
-    }
+    committedVersions(spark, base).reverse
+      .exists(v => tagged(MetaIo.groups(conf, mdir(base, v)), tag))
   }
+
+  /** True when one of a manifest's rows carries `batch_tag` = `tag`. */
+  private def tagged(gs: Seq[Group], tag: String): Boolean =
+    gs.exists(g => MetaIo.optString(g, "batch_tag").contains(tag))
 
   /** Versions with a completed commit marker, ascending — a
     * metadata-scale directory listing ([[CommitLog.versions]]).
@@ -209,10 +214,10 @@ object SnapshotStore {
     */
   private def versionGroups(spark: SparkSession, base: String,
       version: Long): Seq[Group] = {
-    require(committedVersions(spark, base).contains(version),
+    val conf = spark.sparkContext.hadoopConfiguration
+    require(log.isCommitted(conf, base, version),
       s"snapshot version $version has no completed commit under $base")
-    MetaIo.groups(spark.sparkContext.hadoopConfiguration,
-      mdir(base, version))
+    MetaIo.groups(conf, mdir(base, version))
   }
 
   /** The sidecar kinds a manifest row can pin: `delete` (equality,
@@ -777,8 +782,10 @@ object SnapshotStore {
     *     deleted, so a retry with fresh dirs leaves no orphaned data.
     */
   private def edit(spark: SparkSession, base: String, version: Long,
-      from: Long, what: String): Edit = {
-    val committed = committedVersions(spark, base)
+      from: Long, what: String, listedHead: Boolean = false): Edit = {
+    // with `listedHead`, `from` is the head the caller just listed
+    val committed =
+      if (listedHead) Seq(from) else committedVersions(spark, base)
     require(committed.contains(from),
       s"v=$from is not a committed version under $base")
     if (committed.last != from)

@@ -63,6 +63,50 @@ class DriftSpec extends SparkSpec {
     assert(shifted.map(_.getAs[Double]("contrib")).sum > 1.0)
   }
 
+  test("halfCounts: one tagged scan gives categoricalPsi's per-key counts; null and negative odd ids are in neither half") {
+    val obs = Seq[(java.lang.Long, String)]((0L, "a"), (1L, "a"), (2L, "b"),
+      (3L, "c"), (4L, "a"), (-2L, "c"), (-3L, "d"), (null, "e"), (7L, "b"),
+      (9L, "f")).toDF("id", "k")
+    val one = Drift.halfCounts(Drift.halves(obs, "id"), col("k"))
+      .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+    val two = Drift.categoricalPsi(obs.filter(col("id") % 2 === 0),
+      obs.filter(col("id") % 2 === 1), "k")
+      .select("key", "n_ref", "n_cur").as[(String, Long, Long)]
+      .collect().sortBy(_._1).toSeq
+    assert(one == two)
+    assert(!one.exists(r => r._1 == "d" || r._1 == "e"), s"$one")
+    assert(one.find(_._1 == "c").contains(("c", 1L, 1L)), s"$one")
+  }
+
+  test("psiOfCounts: the one-aggregate PSI equals the sum of contributions on a skewed case") {
+    val counts = (0 until 60).map(i => (s"k$i", i.toLong * i * i,
+      if (i % 7 == 0) 0L else (60L - i) * 3)).toDF("key", "n_ref", "n_cur")
+    val psi = Drift.psiOfCounts(counts).head().getDouble(0)
+    val contrib = Drift.categoricalPsiFromCounts(
+      counts.select("key", "n_ref"), counts.select("key", "n_cur"))
+      .agg(sum("contrib")).head().getDouble(0)
+    assert(contrib > 1.0, s"not a skewed case: $contrib")
+    assert(math.abs(psi - contrib) <= 1e-12 * contrib, s"$psi vs $contrib")
+  }
+
+  test("halfMeanShift: the conditional per-dim means equal embeddingMeanShift over the two halves") {
+    val rnd = new scala.util.Random(7)
+    val rows = (-5L until 200L).map(i =>
+      (i, Array.fill(8)(rnd.nextDouble() + (if (i % 2 == 0) 0.0 else 0.3))))
+    val e = rows.toDF("id", "v")
+    val one = Drift.halfMeanShift(Drift.halves(e, "id"), "v")
+      .orderBy("dim").as[(Long, Double, Double, Double)].collect().toSeq
+    val two = Drift.embeddingMeanShift(e.filter(col("id") % 2 === 0),
+      e.filter(col("id") % 2 === 1), "v")
+      .orderBy("dim").as[(Long, Double, Double, Double)].collect().toSeq
+    assert(one.map(_._1) == two.map(_._1))
+    one.zip(two).foreach { case (a, b) =>
+      Seq(a._2 -> b._2, a._3 -> b._3, a._4 -> b._4).foreach { case (x, y) =>
+        assert(math.abs(x - y) <= 1e-12 * math.max(1.0, math.abs(y)), s"$a vs $b")
+      }
+    }
+  }
+
   /** The aged-vs-fresh recall pipeline of `index_refresh_decision`,
     * parameterized over the planted shift — shift = 0 is the CONTROL the
     * registered entry cannot carry (one entry, one corpus).

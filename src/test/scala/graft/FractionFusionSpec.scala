@@ -34,12 +34,22 @@ class FractionFusionSpec extends SparkSpec {
     }
   }
 
-  test("the Serving scorecard starts at most 150 Spark jobs") {
+  test("the Serving scorecard starts at most 120 Spark jobs") {
     val (rows, jobs) = jobsDuring(
       Assessor.scorecard(spark, sf, Workload.Serving).collect())
     assert(rows.length == scored(Workload.Serving).size)
-    assert(jobs <= 150, s"the Serving scorecard started $jobs jobs")
+    assert(jobs <= 120, s"the Serving scorecard started $jobs jobs")
   }
+
+  Seq("distribution_currency" -> 10, "retrieval_recall_compliance" -> 13)
+    .foreach { case (name, budget) =>
+      test(s"$name alone starts at most $budget Spark jobs") {
+        val c = Checks.all.find(_.name == name).get
+        val (row, jobs) = jobsDuring(c.run(spark, sf).collect().head)
+        assert(row.getAs[Long]("hits") == row.getAs[Long]("population"), row)
+        assert(jobs <= budget, s"$name started $jobs jobs")
+      }
+    }
 
   test("a check that throws inside a fused group fails the scorecard and names the group's keys") {
     val checks = scored(Workload.Serving)
