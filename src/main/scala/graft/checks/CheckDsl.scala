@@ -159,17 +159,6 @@ object CheckDsl {
       lit("ALL").as("scope"), col("hits_0").as("hits"),
       col("population_0").as("population"), col("value_0").as("value"))
 
-  /** hits/population → the uniform single-row result, for a fraction whose
-    * hits and population are not aggregates over one source. Both inputs
-    * are single-row single-column LONG aggregates; the cross join is
-    * trivially broadcast (1×1) — no scale concern.
-    */
-  def fractionDf(spark: SparkSession, req: String, hits: DataFrame,
-      population: DataFrame): DataFrame =
-    hits.toDF("hits").crossJoin(population.toDF("population")).select(
-      lit(req).as("requirement"), lit("ALL").as("scope"), col("hits"),
-      col("population"), valueExpr(col("hits"), col("population")))
-
   /** value = hits/population, vacuous→1.0, as a Column. Exact-arithmetic
     * discipline: both operands are integers, so the single IEEE division is
     * bit-identical between Spark and DuckDB (no summation-order hazards).

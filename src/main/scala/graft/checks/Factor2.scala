@@ -62,10 +62,10 @@ object Factor2 {
       val p99 = lat.withColumn("cd", cume_dist().over(w))
         .filter(col("cd") >= 0.99)
         .groupBy("endpoint").agg(min("latency_ms").as("p99"))
-      val ok = p99.join(broadcast(endpointSla.df(spark)), Seq("endpoint"))
-        .filter(col("p99") <= col("sla_ms"))
-      fractionDf(spark, "serving_latency_compliance",
-        cnt(ok), cnt(endpointSla.df(spark)))
+      // p99 is unique per endpoint: every SLA row stays exactly once
+      fractionOf("serving_latency_compliance",
+        endpointSla.df(spark).join(broadcast(p99), Seq("endpoint"), "left"),
+        count_if(col("p99") <= col("sla_ms")), count(lit(1)))
     },
     Some {
       val p99Cte =
@@ -156,9 +156,10 @@ object Factor2 {
         .select("pipeline", "measured_mbps")
       val training = pipelines.df(spark)
         .filter(col("kind") === "training" && col("required_mbps").isNotNull)
-      val ok = training.join(latest, Seq("pipeline"))
-        .filter(col("measured_mbps") >= col("required_mbps"))
-      fractionDf(spark, "batch_throughput_sufficiency", cnt(ok), cnt(training))
+      // one latest run per pipeline: every training row stays exactly once
+      fractionOf("batch_throughput_sufficiency",
+        training.join(broadcast(latest), Seq("pipeline"), "left"),
+        count_if(col("measured_mbps") >= col("required_mbps")), count(lit(1)))
     },
     Some {
       val latestCte =

@@ -74,10 +74,10 @@ object Factor3 {
       val p95 = runs.withColumn("cd", cume_dist().over(w))
         .filter(col("cd") >= 0.95)
         .groupBy("pipeline").agg(min("dur").as("p95"))
-      val ok = p95.join(broadcast(pipelines.df(spark)), Seq("pipeline"))
-        .filter(col("p95") <= col("latency_sla_sec"))
-      fractionDf(spark, "propagation_latency_compliance",
-        cnt(ok), cnt(pipelines.df(spark)))
+      // p95 is unique per pipeline: every pipeline row stays exactly once
+      fractionOf("propagation_latency_compliance",
+        pipelines.df(spark).join(broadcast(p95), Seq("pipeline"), "left"),
+        count_if(col("p95") <= col("latency_sla_sec")), count(lit(1)))
     },
     Some {
       val p95Cte =
@@ -102,10 +102,11 @@ object Factor3 {
     (spark, _) => {
       val latest = featureValues.df(spark).groupBy("entity_id")
         .agg(max("feature_ts").as("latest_ts"))
-      val lbl = labels.df(spark)
-      val clean = lbl.join(broadcast(latest), Seq("entity_id"), "left")
-        .filter(col("latest_ts").isNull || col("latest_ts") <= col("label_ts"))
-      fractionDf(spark, "point_in_time_correctness", cnt(clean), cnt(lbl))
+      // latest is unique per entity: every label row stays exactly once
+      fractionOf("point_in_time_correctness",
+        labels.df(spark).join(broadcast(latest), Seq("entity_id"), "left"),
+        count_if(col("latest_ts").isNull ||
+          col("latest_ts") <= col("label_ts")), count(lit(1)))
     },
     Some(fractionSql("point_in_time_correctness",
       "SELECT COUNT(*) FROM labels l LEFT JOIN (SELECT entity_id, MAX(feature_ts) AS latest_ts FROM feature_values GROUP BY entity_id) f ON l.entity_id = f.entity_id WHERE f.latest_ts IS NULL OR f.latest_ts <= l.label_ts",
@@ -145,14 +146,19 @@ object Factor3 {
     */
   val featureRefreshCompliance = Check("feature_refresh_compliance",
     (spark, _) => {
-      val online = featureCatalog.df(spark).filter(col("store") === "online")
-      val tol = sla.df(spark)
+      // the tolerance rows are catalog data, read on the driver; a row
+      // counts once per tolerance it meets — the oracle's cross join (a
+      // null tolerance meets none)
+      val tols = sla.df(spark)
         .filter(col("asset") === "online_features" && col("sla_kind") === "staleness")
-        .select(col("threshold"))
-      val fresh = online.crossJoin(broadcast(tol)).filter(
-        unix_timestamp(lit(AsOf)) - unix_timestamp(col("last_refresh_ts")) <=
-          col("threshold") * 3600)
-      fractionDf(spark, "feature_refresh_compliance", cnt(fresh), cnt(online))
+        .select(col("threshold")).collect()
+        .filterNot(_.isNullAt(0)).map(_.getDouble(0))
+      val age =
+        unix_timestamp(lit(AsOf)) - unix_timestamp(col("last_refresh_ts"))
+      fractionOf("feature_refresh_compliance",
+        featureCatalog.df(spark).filter(col("store") === "online"),
+        tols.map(t => count_if(age <= lit(t) * 3600))
+          .foldLeft(lit(0L))(_ + _), count(lit(1)))
     },
     Some(fractionSql("feature_refresh_compliance",
       s"SELECT COUNT(*) FROM feature_catalog f, (SELECT threshold FROM sla WHERE asset = 'online_features' AND sla_kind = 'staleness') t WHERE f.store = 'online' AND date_diff('second', f.last_refresh_ts, $AsOfSql) <= t.threshold * 3600",

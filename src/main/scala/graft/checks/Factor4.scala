@@ -39,15 +39,18 @@ object Factor4 {
     */
   val lineageCompleteness = Check("lineage_completeness",
     (spark, _) => {
-      val a = assets.df(spark)
+      // both right sides are unique per node: every asset stays once
       val reach = Graph.reachable(datasetEdges(spark),
-        lineageSources.df(spark))
+        lineageSources.df(spark)).select(col("node").as("asset"),
+        lit(true).as("reached"))
       val fieldDst = lineageEdges.df(spark).filter(col("grain") === "field")
-        .select(col("dst").as("node")).distinct()
-      val complete = a
-        .join(broadcast(reach), a("asset") === reach("node"), "left_semi")
-        .join(broadcast(fieldDst), a("asset") === fieldDst("node"), "left_semi")
-      fractionDf(spark, "lineage_completeness", cnt(complete), cnt(a))
+        .select(col("dst").as("asset")).distinct()
+        .withColumn("has_field", lit(true))
+      fractionOf("lineage_completeness", assets.df(spark)
+          .join(broadcast(reach), Seq("asset"), "left")
+          .join(broadcast(fieldDst), Seq("asset"), "left"),
+        count_if(col("reached").isNotNull && col("has_field").isNotNull),
+        count(lit(1)))
     },
     Some {
       val reachCte =

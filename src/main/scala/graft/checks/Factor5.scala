@@ -65,11 +65,16 @@ object Factor5 {
       val cols = columns.df(spark)
       val declared = cols.filter(col("pii_declared"))
         .select("asset", "column_name")
-      val pii = declared.unionAll(detected).distinct()
+      // declared ∪ detected is a handful of rows: de-duplicated on the
+      // driver (the declared set is catalog data, collected with no job)
+      val pii = spark.createDataFrame(
+        java.util.Arrays.asList(
+          (declared.collect() ++ detected.collect()).distinct: _*),
+        declared.schema)
       // (asset, column_name) is the columns catalog's key
       val masked = cols.filter(col("masking_policy").isNotNull)
         .select("asset", "column_name")
-      fractionOf("field_masking", pii, count_if(inCatalog(
+      fractionOf("field_masking", catalogOnly(pii), count_if(inCatalog(
         struct(col("asset"), col("column_name")), masked)), count(lit(1)))
     },
     Some {

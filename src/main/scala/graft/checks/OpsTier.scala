@@ -1001,7 +1001,7 @@ object OpsTier {
   /** File-level incremental consumption over the SAME snapshot store
     * lifecycle (`snapshotFixture`): a downstream consumer pinned to v1
     * catches up to v2 by reading ONLY the files v2 added
-    * (SnapshotStore.changedFiles — after an append commit that is
+    * (SnapshotStore.readChanged — after an append commit that is
     * exactly the delta, O(|delta|) bytes instead of a table re-scan;
     * the manifest diff itself is O(#files) metadata rows). The 2→3 row
     * is the HONEST caveat pinned as data: a compaction commit rewrites
@@ -1016,9 +1016,8 @@ object OpsTier {
     (spark, dir) => {
       import graft.substrate.SnapshotStore
       val tmp = snapshotStatsStore(spark, dir)
-      val manifest = SnapshotStore.manifest(spark, tmp)
       val rows = Seq((1L, 2L), (2L, 3L)).map { case (a, b) =>
-        snapAgg(SnapshotStore.readChanged(spark, manifest, a, b), b)
+        snapAgg(SnapshotStore.readChanged(spark, tmp, a, b), b)
           .withColumnRenamed("version", "to_version")
           .select(lit(a).as("from_version"), col("to_version"),
             col("n_rows"), col("sum_qty_i"), col("sum_price_i"))
@@ -1079,7 +1078,7 @@ object OpsTier {
         .toString
       try {
         SnapshotStore.commit(spark, tmp, 0L,
-          SnapshotStore.manifestFor(spark, 0L, Seq(s"$data/d1")))
+          SnapshotStore.manifestForStats(spark, 0L, Seq(s"$data/d1"), Nil))
         val gate = new java.util.concurrent.CyclicBarrier(2)
         val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
         // an append commit's rows = the CURRENT latest's files + the
@@ -1093,7 +1092,8 @@ object OpsTier {
           SnapshotStore.manifest(spark, tmp)
             .filter(col("version") === latest)
             .select(lit(v).as("version"), col("file"))
-            .unionByName(SnapshotStore.manifestFor(spark, v, Seq(delta)))
+            .unionByName(SnapshotStore.manifestForStats(spark, v,
+              Seq(delta), Nil).select("version", "file"))
         }
         val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
         val (va, vb) = try {
@@ -1308,13 +1308,13 @@ object OpsTier {
             .select("o_orderkey", "o_totalprice"),
           s"$t/d1", "o_orderkey", numFiles = 2)
         SnapshotStore.commit(spark, t, 1L,
-          SnapshotStore.manifestFor(spark, 1L, Seq(s"$t/d1")))
+          SnapshotStore.manifestForStats(spark, 1L, Seq(s"$t/d1"), Nil))
         Layout.writeClustered(
           orders.filter(col("o_orderkey") % 2 === 1)
             .select("o_orderkey", "o_totalprice", "o_orderpriority"),
           s"$t/d2", "o_orderkey", numFiles = 2)
-        SnapshotStore.commit(spark, t, 2L,
-          SnapshotStore.manifestFor(spark, 2L, Seq(s"$t/d1", s"$t/d2")))
+        SnapshotStore.commit(spark, t, 2L, SnapshotStore.manifestForStats(
+          spark, 2L, Seq(s"$t/d1", s"$t/d2"), Nil))
       }
       require(!SnapshotStore.readAt(spark, tmp, 1L)
         .schema.fieldNames.contains("o_orderpriority"),

@@ -421,15 +421,15 @@ object PipelineTier {
         Layout.writeClustered(sigs(base), s"$tmp/s1", "doc_id",
           numFiles = 4)
         SnapshotStore.commit(spark, tmp, 1L,
-          SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/s1")))
+          SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/s1"), Nil))
         // v2: APPEND commit — the wave's signatures land as new files,
         // every v1 file pinned untouched
         val wave = d.filter(col("doc_id") % 10 === 7 &&
           col("doc_id") < DedupStreamCap).select("doc_id", "text")
         Layout.writeClustered(sigs(wave), s"$tmp/s2", "doc_id",
           numFiles = 2)
-        SnapshotStore.commit(spark, tmp, 2L,
-          SnapshotStore.manifestFor(spark, 2L, Seq(s"$tmp/s1", s"$tmp/s2")))
+        SnapshotStore.commit(spark, tmp, 2L, SnapshotStore.manifestForStats(
+          spark, 2L, Seq(s"$tmp/s1", s"$tmp/s2"), Nil))
         // v3: DELETE commit — rewrite ONLY the files holding the
         // forgotten docs' rows (the doc_id clustering makes a
         // range-local batch a file-level prune)
@@ -462,8 +462,8 @@ object PipelineTier {
         SnapshotStore.commit(spark, tmp, 3L,
           shared.toDF("file")
             .select(lit(3L).as("version"), col("file"))
-            .unionByName(
-              SnapshotStore.manifestFor(spark, 3L, Seq(s"$tmp/s3"))))
+            .unionByName(SnapshotStore.manifestForStats(spark, 3L,
+              Seq(s"$tmp/s3"), Nil).select("version", "file")))
         // final state, resolved ONCE from the PERSISTED v3 manifest
         // (schema comes off the same DataFrame — a second readAt would
         // repeat the whole manifest resolution, code-review r12)

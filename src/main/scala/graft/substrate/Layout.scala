@@ -179,11 +179,10 @@ object Layout {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // part is the FULLY QUALIFIED directory URI, not the caller's raw
-    // string: a manifest row built from this listing
-    // (SnapshotStore.manifestFor concatenates part/file) must resolve
-    // against the filesystem it was listed on when read back from
-    // another session/default-FS — on an object store a scheme-stripped
-    // row loses the bucket (VERDICT r12 what's-wrong #1)
+    // string: a path built from this listing (part/file) must resolve
+    // against the filesystem it was listed on when read from another
+    // session or default FS — on an object store a scheme-stripped path
+    // loses the bucket
     val qpart = fs.makeQualified(p).toString
     fs.listStatus(p).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))

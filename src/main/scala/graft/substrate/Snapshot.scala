@@ -194,11 +194,12 @@ object SnapshotStore {
     log.versions(spark.sparkContext.hadoopConfiguration, base)
 
   /** The durable manifest TABLE: every committed version's rows, read
-    * back from the store — what [[readAt]]/[[changedFiles]]/[[vacuum]]
-    * consume in a session that did NOT build the manifest. Versions that
-    * committed plain rows and versions with stats columns read as ONE
-    * table (stats null on the plain rows), served as a LocalRelation so
-    * manifest algebra over it never schedules a scan job.
+    * back from the store for inspection and for building the rows of a
+    * later [[commit]]. Reads, diffs and retention never take it: each
+    * resolves its version from the committed manifest itself. Versions
+    * that committed plain rows and versions with stats columns read as
+    * ONE table (stats null on the plain rows), served as a LocalRelation
+    * so manifest algebra over it never schedules a scan job.
     */
   def manifest(spark: SparkSession, base: String): DataFrame = {
     val vs = committedVersions(spark, base)
@@ -401,8 +402,11 @@ object SnapshotStore {
     readWithDeletes(spark, gs, files, mergeSchema)
   }
 
-  /** [[manifestFor]] extended with PER-FILE STATISTICS — row count plus
-    * min/max bounds for each column in `statsCols`, read from the parquet
+  /** Manifest rows pinning `version` to the *.parquet files currently
+    * under `paths` (full qualified path per row, so the manifest stays
+    * valid when read from elsewhere), with PER-FILE STATISTICS — row
+    * count plus min/max bounds for each column in `statsCols` (none
+    * when empty), read from the parquet
     * FOOTERS driver-side on a bounded pool (the writer already computed
     * them: one footer read per file, never a cluster job — how Iceberg
     * fills its manifest bounds). Columns: (version, file, row_count,
@@ -413,8 +417,9 @@ object SnapshotStore {
     * unsupported type, an all-saturated over-long max, a row group with
     * no non-null values): null means UNKNOWN, and planning keeps unknown
     * files, so stats only ever prune files they positively exonerate.
-    * Same list-once discipline as [[manifestFor]]: commit the returned
-    * rows immediately; files added later belong to later versions.
+    * List once: commit the returned rows immediately; files added to a
+    * directory later belong to later versions. Selecting `version, file`
+    * gives a plain commit's rows.
     */
   def manifestForStats(spark: SparkSession, version: Long,
       paths: Seq[String], statsCols: Seq[String]): DataFrame = {
@@ -1299,7 +1304,7 @@ object SnapshotStore {
   /** COUNT(*) of `version` answered from the manifest's row counts —
     * zero data files opened (the metadata-only aggregate every table
     * format serves from its manifests). Fails loudly when any file lacks
-    * a committed row_count (a plain [[manifestFor]] commit): a partial
+    * a committed row_count (a plain `(version, file)` commit): a partial
     * sum would silently undercount.
     */
   def countAt(spark: SparkSession, base: String, version: Long): Long = {
@@ -1322,18 +1327,18 @@ object SnapshotStore {
     require(rows.nonEmpty, s"snapshot version $version unknown or empty")
     require(rows.forall(_._2.isDefined),
       s"snapshot version $version has files without committed row " +
-        "counts (plain manifestFor commit) — count via readAt instead")
+        "counts (a plain version, file commit) — count via readAt instead")
     val conf = spark.sparkContext.hadoopConfiguration
     val hidden = posFiles.map(f => MetaIo.rowCount(conf, f)).sum
     rows.map(_._2.get).sum - hidden
   }
 
-  /** EXECUTE retention on the PERSISTED store — [[vacuum]]'s anti-join
-    * algebra, acted on: the two-phase drop run back to back ([[retire]]
-    * decommits every version outside `keep` atomically, then
-    * [[purgeRetired]] deletes the data files no kept manifest
-    * references). A file shared between a dropped and a kept version
-    * survives by construction. Returns the deleted data-file paths.
+  /** EXECUTE retention on the PERSISTED store: the two-phase drop run
+    * back to back ([[retire]] decommits every version outside `keep`
+    * atomically, then [[purgeRetired]] deletes the data files no kept
+    * manifest references). A file shared between a dropped and a kept
+    * version survives by construction. Returns the deleted data-file
+    * paths.
     */
   def vacuumExecute(spark: SparkSession, base: String,
       keep: Seq[Long]): Seq[String] = {
@@ -1438,117 +1443,29 @@ object SnapshotStore {
     vacuumExecute(spark, base, keep)
   }
 
-  /** Manifest rows pinning `version` to the *.parquet files currently
-    * under `paths` (full path per row — the manifest must stay valid if
-    * read from elsewhere). List-once discipline: the caller commits the
-    * returned rows immediately; files added to a directory later belong
-    * to LATER versions (the Layout.compact plan/member-list contract).
+  /** The FILE-LEVEL incremental read between two committed versions:
+    * a scan of exactly the data files `toV` pins and `fromV` does not —
+    * after an APPEND the appended files, after a rewrite the whole
+    * rewritten set (row-level consumers want [[readChangesBetween]]).
+    * Both file lists resolve driver-side from the committed manifests,
+    * so building the frame runs no Spark job. Refuses when `toV` has a
+    * pending sidecar — it hides rows across the whole table, which a
+    * file-level delta cannot apply — and when nothing changed: an empty
+    * path list cannot produce a schema'd scan.
     */
-  def manifestFor(spark: SparkSession, version: Long,
-      paths: Seq[String]): DataFrame =
-    paths.map(p => Layout.listFiles(spark, p)).reduce(_ unionByName _)
-      .select(lit(version).as("version"),
-        concat_ws("/", col("part"), col("file")).as("file"))
-
-  /** Manifest rows that pin DATA files — sidecar rows are commit
-    * metadata, not scannable data; manifests without a `kind` column pass
-    * through unchanged.
-    */
-  private def dataRows(manifest: DataFrame): DataFrame =
-    if (manifest.columns.contains("kind"))
-      manifest.filter(col("kind").isNull ||
-        !col("kind").isin(SidecarKinds.toSeq: _*))
-    else manifest
-
-  /** The table as of `version`: resolve its file list (metadata-scale
-    * collect) and scan exactly those files. Fails loudly on an unknown
-    * or empty version — an empty scan would silently read as an empty
-    * table.
-    */
-  def readAt(spark: SparkSession, manifest: DataFrame,
-      version: Long): DataFrame = {
-    val rows = manifest.filter(col("version") === version)
-    val dRows = dataRows(rows)
-    val files = dRows
-      .select("file").distinct().collect().map(_.getString(0))
-    require(files.nonEmpty, s"snapshot version $version unknown or empty")
-    // pending sidecars apply here too: dropping a sidecar row from the
-    // file list without applying it would silently SERVE forgotten rows
-    val deletes: Seq[PendingDelete] =
-      if (!manifest.columns.contains("kind") ||
-          !manifest.columns.contains("delete_key")) Nil
-      else {
-        val hasDv = manifest.columns.contains("delete_v")
-        rows.filter(col("kind").isin("delete", "merge_delete"))
-          .select(col("delete_key"),
-            (if (hasDv) col("delete_v") else lit(null).cast("long"))
-              .as("delete_v"), col("file"))
-          .distinct().collect()
-          .groupBy(r => (r.getString(0),
-            if (r.isNullAt(1)) None else Some(r.getLong(1)))).view
-          .mapValues(_.map(_.getString(2)).distinct.sorted.toSeq)
-          .toSeq.sortBy(_._1)
-          .map { case ((k, sv), fs) =>
-            PendingDelete(k.split(",").toSeq, sv, fs) }
-      }
-    val addedV: Map[String, Long] =
-      if (!manifest.columns.contains("added_v")) Map.empty
-      else dRows.filter(col("added_v").isNotNull)
-        .select("file", "added_v").collect()
-        .groupBy(r => PathNorm(r.getString(0))).view
-        .mapValues(_.map(_.getLong(1)).min).toMap
-    val posFiles: Seq[String] =
-      if (!manifest.columns.contains("kind")) Nil
-      else rows.filter(col("kind") === "pos_delete")
-        .select("file").distinct().collect()
-        .map(_.getString(0)).toIndexedSeq.sorted
-    readCore(spark, deletes, addedV, files.toIndexedSeq,
-      mergeSchema = false, posFiles)
-  }
-
-  /** Files referenced by NO version in `keep` — the deletable set after
-    * dropping every other version. Anti-join semantics make shared files
-    * safe by construction: one retained reference keeps a file alive.
-    */
-  def vacuum(manifest: DataFrame, keep: Seq[Long]): DataFrame =
-    manifest.select("file").distinct()
-      .join(manifest.filter(col("version").isin(keep: _*)).select("file"),
-        Seq("file"), "left_anti")
-
-  /** Files in `toV` that `fromV` does not reference — the file-level
-    * incremental set: after an APPEND exactly the delta's files; after a
-    * rewrite the whole rewritten set (row-level consumers want
-    * [[readChangesBetween]]).
-    */
-  def changedFiles(manifest: DataFrame, fromV: Long, toV: Long): DataFrame =
-    dataRows(manifest).filter(col("version") === toV).select("file")
-      .join(dataRows(manifest).filter(col("version") === fromV)
-          .select("file"),
-        Seq("file"), "left_anti")
-
-  /** Scan of exactly [[changedFiles]]' paths. Fails loudly when nothing
-    * changed — an empty path list cannot produce a schema'd scan; a
-    * no-change window is for the caller to short-circuit on
-    * changedFiles' count.
-    */
-  def readChanged(spark: SparkSession, manifest: DataFrame,
-      fromV: Long, toV: Long): DataFrame = {
-    // a file-level delta CANNOT apply sidecars correctly (a toV sidecar
-    // hides rows across the WHOLE table, not just changed files) —
-    // refuse instead of silently serving forgotten rows; the row-level
-    // [[readChangesBetween]] composes appends, deletes and merges
-    if (manifest.columns.contains("kind"))
-      require(manifest.filter(col("version") === toV &&
-          col("kind").isin(SidecarKinds.toSeq: _*)).isEmpty,
-        s"version $toV has pending merge-on-read deletes — the " +
-          "file-level delta cannot apply them; materialize first " +
-          "(materializeCommit), consume through readAt, or use the " +
-          "row-level readChangesBetween")
-    val files = changedFiles(manifest, fromV, toV)
-      .collect().map(_.getString(0))
+  def readChanged(spark: SparkSession, base: String, fromV: Long,
+      toV: Long): DataFrame = {
+    val to = versionGroups(spark, base, toV)
+    require(!to.exists(isDeleteRow),
+      s"version $toV has pending merge-on-read deletes — the " +
+        "file-level delta cannot apply them; materialize first " +
+        "(materializeCommit), consume through readAt, or use the " +
+        "row-level readChangesBetween")
+    val before = dataFilesOf(versionGroups(spark, base, fromV)).toSet
+    val files = dataFilesOf(to).filterNot(before)
     require(files.nonEmpty,
       s"no files changed between versions $fromV and $toV")
-    MetaIo.readParquet(spark, files.toIndexedSeq, mergeSchema = false)
+    MetaIo.readParquet(spark, files, mergeSchema = false)
   }
 
   /** ROW-LEVEL CHANGE DATA FEED (the Delta-CDF / Iceberg-changelog

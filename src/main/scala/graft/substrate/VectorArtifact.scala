@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   *   - `manifest/`  (file, cell) rows pinning this version's COMPLETE
   *     code-file set — rows may point into EARLIER versions' `codes/`
   *     dirs (file sharing: the Iceberg/Delta manifest discipline,
-  *     `SnapshotStore.manifestFor`'s geometry applied to the index
-  *     artifact). [[load]] resolves codes from the manifest when
-  *     present, the bare `codes/` dir otherwise (legacy).
+  *     the SnapshotStore manifest's geometry applied to the index
+  *     artifact). [[load]] resolves codes only through the manifest;
+  *     every publish form writes one.
   *   - `meta/`      one row (version, dim, m, k, source_version,
   *     corpus_base, corpus_version) — source_version is the publish's
   *     OWN-ANCESTRY provenance (the version whose files a derived
@@ -268,69 +268,36 @@ object VectorArtifact {
     require(!cellsDf.isEmpty,
       "publishIncremental with no changed cells — re-point readers at " +
         s"v=$fromVersion instead of publishing an identical version")
-    // the ancestry gate stays RELATIONAL here (the Seq form's
-    // requireClusteredAncestor collects the manifest to the driver —
-    // exactly what this overload exists to avoid): committed ancestor,
-    // manifest present, zero cell-less rows, strictly-forward version
-    require(version > fromVersion,
-      s"derived publish must move the version FORWARD: v=$version from " +
-        s"v=$fromVersion — file sharing points strictly backward")
     require(versions(spark, base).contains(fromVersion),
       s"v=$fromVersion is not a committed version under $base")
-    requireHeadAncestor(spark, base, fromVersion, "a derived publish")
-    val prevManifest = new org.apache.hadoop.fs.Path(
-      s"$base/v=$fromVersion/manifest")
-    require(prevManifest
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(prevManifest),
-      s"v=$fromVersion has no manifest under $base (legacy layout) — " +
-        "a derived publish needs saveClustered ancestry")
-    // manifest = O(#files) commit metadata: read driver-side (r17,
-    // MetaIo) and serve as a LocalRelation — the broadcast joins below
-    // stay relational, but no scan job is scheduled for metadata
-    val prevAll = {
-      val (s, r) = MetaIo.readRows(
-        spark.sparkContext.hadoopConfiguration, prevManifest.toString)
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(r.asJava, s)
-    }
-    val hasKind = prevAll.columns.contains("kind")
-    // the cluster gate checks DATA rows only — sidecar rows are
-    // cell-less by design (r15)
-    val prevData =
-      if (hasKind) prevAll.filter(col("kind").isNull ||
-        col("kind") =!= "delete")
-      else prevAll
-    require(prevData.filter(col("cell").isNull).isEmpty,
-      s"v=$fromVersion is not cell-clustered (manifest has cell-less " +
-        "files) — a derived publish needs saveClustered ancestry")
+    // the ancestor's manifest is O(#files) commit metadata, read
+    // driver-side by the ancestry gate; as a LocalRelation the broadcast
+    // joins below stay relational with no scan job for metadata
+    val prev = requireClusteredAncestor(spark, base, version, fromVersion)
+    val sidecars = pendingSidecarFiles(spark, base, fromVersion)
     val corpus = corpusOf(spark, base, fromVersion)
     requireUnreferenced(spark, base, version)
     stagedPublish(spark, base, version) { (stage, finalize) =>
       writeSkinny(spark, stage, centroids, cb)
       writeCellFiles(spark, stage, changedCodes)
       import spark.implicits._
-      val freshDf = listCellFiles(spark, s"$stage/codes")
-        .map { case (f, c) => (finalize(f), c.map(Long.box).orNull:
-          java.lang.Long) }
-        .toDF("file", "cell")
+      def cellRows(rows: Seq[(String, Option[Long])]): DataFrame =
+        rows.map { case (f, c) =>
+          (f, c.map(Long.box).orNull: java.lang.Long) }.toDF("file", "cell")
+      val freshDf = cellRows(listCellFiles(spark, s"$stage/codes")
+        .map { case (f, c) => (finalize(f), c) })
       val stray = freshDf.join(broadcast(cellsDf), Seq("cell"),
         "left_anti").count()
       require(stray == 0,
         s"changedCodes wrote $stray file(s) for cells outside " +
           "changedCells — the shared files would double-count them")
-      // pending sidecars carry VERBATIM (r15), like the Seq form
-      val carried =
-        if (!hasKind) freshDf.limit(0)
-          .select(col("file"), col("cell"))
-          .withColumn("kind", lit(null).cast("string"))
-        else prevAll.filter(col("kind") === "delete")
-          .select("file", "cell", "kind")
-      prevData.join(broadcast(cellsDf), Seq("cell"), "left_anti")
+      // pending sidecars carry VERBATIM, like the Seq form
+      cellRows(prev).join(broadcast(cellsDf), Seq("cell"), "left_anti")
         .select("file", "cell")
-        .unionByName(freshDf.select("file", "cell"))
+        .unionByName(freshDf)
         .withColumn("kind", lit(null).cast("string"))
-        .unionByName(carried)
+        .unionByName(cellRows(sidecars.map(_ -> None))
+          .withColumn("kind", lit("delete")))
         .coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$stage/manifest")
       writeMeta(spark, stage, version, dim, cb, Some(fromVersion), corpus)
@@ -387,14 +354,6 @@ object VectorArtifact {
       .filter(_._2 > maxFilesPerCell).keys.toSeq.sorted
   }
 
-  /** The shared ancestry gate of every derived publish: `fromVersion`
-    * must hold a non-empty, cell-clustered manifest (an EMPTY manifest
-    * would pass a bare forall vacuously and a typo'd / legacy /
-    * never-committed ancestor would silently publish a version holding
-    * ONLY the changed cells — ADVICE r12 medium), and `version >
-    * fromVersion`: manifests may only pin files of EARLIER versions, the
-    * ordering [[requireUnreferenced]]'s descendants-only sweep relies on.
-    */
   /** Every derived publish must derive from the CURRENT HEAD (r14 —
     * the SnapshotStore.requireFromHead twin): a rewrite derived from an
     * older committed version carries that ancestor's manifest and
@@ -413,6 +372,14 @@ object VectorArtifact {
           "the current head")
   }
 
+  /** The shared ancestry gate of every derived publish: `fromVersion`
+    * must hold a non-empty, cell-clustered manifest (an EMPTY manifest
+    * would pass a bare forall vacuously, and a typo'd or never-committed
+    * ancestor would silently publish a version holding ONLY the changed
+    * cells), and `version > fromVersion`: manifests may only pin files of
+    * EARLIER versions, the ordering [[requireUnreferenced]]'s
+    * descendants-only sweep relies on. Returns the ancestor's data rows.
+    */
   private def requireClusteredAncestor(spark: SparkSession, base: String,
       version: Long, fromVersion: Long): Seq[(String, Option[Long])] = {
     require(version > fromVersion,
@@ -421,9 +388,8 @@ object VectorArtifact {
     requireHeadAncestor(spark, base, fromVersion, "a derived publish")
     val prev = readManifest(spark, base, fromVersion)
     require(prev.nonEmpty,
-      s"v=$fromVersion has no manifest under $base (not committed, or " +
-        "legacy manifest-less layout) — a derived publish needs " +
-        "saveClustered ancestry")
+      s"v=$fromVersion has no manifest under $base (not committed) — " +
+        "a derived publish needs saveClustered ancestry")
     require(prev.forall(_._2.isDefined),
       s"v=$fromVersion is not cell-clustered (manifest has cell-less " +
         "files) — a derived publish needs saveClustered ancestry")
@@ -762,10 +728,10 @@ object VectorArtifact {
         f, c.map(Long.box).orNull, k.orNull) })
 
   /** A committed version's DATA manifest rows, driver-side
-    * (metadata-scale: O(#files)). Empty Seq when the version predates
-    * manifests (legacy layout — its codes are its own directory).
-    * Delete sidecar rows are excluded — use [[readManifestFull]] where
-    * sidecars matter (pins, carries, the read paths).
+    * (metadata-scale: O(#files)). Empty when `v=N` has no manifest (never
+    * published). Delete sidecar rows are excluded — use
+    * [[readManifestFull]] where sidecars matter (pins, carries, the read
+    * paths).
     */
   def readManifest(spark: SparkSession, base: String,
       version: Long): Seq[(String, Option[Long])] =
@@ -917,20 +883,20 @@ object VectorArtifact {
       out
     }
     val centroids = MetaIo.readTable(spark, s"$dir/centroids")
-    // codes resolve through the version's MANIFEST when present (files
-    // may live under earlier versions' dirs — the sharing contract);
-    // a manifest-less version is legacy layout: its own codes dir.
-    // Pending MoR sidecars apply as a broadcast anti-join (r15) —
-    // every load serves the LOGICAL index, never the raw files
+    // codes resolve only through the version's MANIFEST (files may live
+    // under earlier versions' dirs — the sharing contract). Pending MoR
+    // sidecars apply as a broadcast anti-join — every load serves the
+    // LOGICAL index, never the raw files
     val mfFull = readManifestFull(spark, base, version)
     val dataFiles = mfFull
       .collect { case (f, _, k) if !k.contains("delete") => f }
+    require(dataFiles.nonEmpty,
+      s"v=$version under $base has no manifest rows pinning code files " +
+        "— a version is read only through its manifest")
     val delFiles = mfFull
       .collect { case (f, _, k) if k.contains("delete") => f }
     val codes = applySidecars(spark, delFiles,
-      if (mfFull.nonEmpty)
-        MetaIo.readParquet(spark, dataFiles, mergeSchema = false)
-      else spark.read.parquet(s"$dir/codes"))
+      MetaIo.readParquet(spark, dataFiles, mergeSchema = false))
     Loaded(num("version"), num("dim").toInt,
       centroids, cb, codes,
       MetaIo.optLong(meta, "source_version"),
@@ -976,20 +942,6 @@ object VectorArtifact {
     load(spark, base, vs.last)
   }
 
-  /** Retention on the index artifact itself (the SnapshotStore.vacuum
-    * discipline applied to versions): drop every published version
-    * except the newest `keepLatest`, returning what was removed.
-    * Refuses to remove everything — a serving tier must always have a
-    * version to dereference. Driver-side metadata deletes; a dropped
-    * version's code files SURVIVE while any retained version's manifest
-    * pins them (the anti-join guarantee file sharing demands — an
-    * incremental v=N+1 keeps reading the v=N files it shares after v=N
-    * itself is vacuumed). Pinned consumers of a dropped version fail
-    * loudly at load (missing meta), the same contract as a vacuumed
-    * snapshot. Anchor: "defined and ENFORCED data retention and
-    * deletion schedules" (`factors/requirements.yaml:197-199`) applied
-    * to the artifact store.
-    */
   /** Phase 1 of the TWO-PHASE drop (VERDICT r11 next #8 — the grace
     * contract real table formats give pinned readers): RETIRE every
     * version except the newest `keepLatest` by deleting only its meta
@@ -1049,13 +1001,26 @@ object VectorArtifact {
     }
   }
 
+  /** Retention on the index artifact itself: drop every published
+    * version except the newest `keepLatest`, returning what was removed.
+    * Refuses to remove everything — a serving tier must always have a
+    * version to dereference. A dropped version's code files SURVIVE
+    * while any retained version's manifest pins them (file sharing
+    * demands it: an incremental v=N+1 keeps reading the v=N files it
+    * shares after v=N itself is vacuumed). Pinned consumers of a dropped
+    * version fail loudly at load (missing meta), the same contract as a
+    * vacuumed snapshot. Anchor: "defined and ENFORCED data retention and
+    * deletion schedules" (`factors/requirements.yaml:197-199`) applied
+    * to the artifact store.
+    *
+    * The no-grace form IS the two-phase drop run back to back —
+    * [[retire]] decommits atomically, then [[purgeRetired]] reclaims
+    * every decommitted or orphaned version's unshared files — so there
+    * is one retention body, and the immediate and grace-windowed forms
+    * can never disagree on which files a retained version still pins.
+    */
   def vacuum(spark: SparkSession, base: String,
       keepLatest: Int): Seq[Long] = {
-    // the no-grace form IS the two-phase drop run back to back
-    // (code-review r12: one retention body, not two copies to keep in
-    // sync) — retire decommits atomically, purgeRetired reclaims every
-    // decommitted/orphaned version's unshared files behind the
-    // retained-manifest anti-join
     val drop = retire(spark, base, keepLatest)
     purgeRetired(spark, base)
     drop

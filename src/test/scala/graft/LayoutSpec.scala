@@ -543,7 +543,7 @@ class LayoutSpec extends SparkSpec {
       val df = spark.range(100)
         .select(col("id").as("k"), (col("id") % 7).as("v"))
       Layout.writeClustered(df, s"$tmp/d1", "k", numFiles = 2)
-      val m1 = SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/d1"))
+      val m1 = SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Nil)
       SnapshotStore.commit(spark, tmp, 1L, m1)
       assert(SnapshotStore.committedVersions(spark, tmp) == Seq(1L))
       // reads resolve from the PERSISTED manifest — drop every session
@@ -564,7 +564,7 @@ class LayoutSpec extends SparkSpec {
       }
       // repair = re-commit the same (uncommitted) version
       SnapshotStore.commit(spark, tmp, 2L,
-        SnapshotStore.manifestFor(spark, 2L, Seq(s"$tmp/d1")))
+        SnapshotStore.manifestForStats(spark, 2L, Seq(s"$tmp/d1"), Nil))
       assert(SnapshotStore.committedVersions(spark, tmp) == Seq(1L, 2L))
       // versions are immutable: re-committing a COMMITTED version fails
       intercept[IllegalArgumentException] {
@@ -596,7 +596,7 @@ class LayoutSpec extends SparkSpec {
       val df = spark.range(100)
         .select(col("id").as("k"), (col("id") % 7).as("v"))
       Layout.writeClustered(df, s"$tmp/d1", "k", numFiles = 2)
-      val m1 = SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/d1"))
+      val m1 = SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Nil)
         .localCheckpoint(true)
       import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
       val pool = Executors.newFixedThreadPool(2)
@@ -645,7 +645,7 @@ class LayoutSpec extends SparkSpec {
         .select(col("id").as("k"), (col("id") % 7).as("v"))
       Layout.writeClustered(df, s"$tmp/d1", "k", numFiles = 2)
       SnapshotStore.commit(spark, tmp, 1L,
-        SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/d1")))
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Nil))
       assert(SnapshotStore.manifest(spark, tmp).select("file")
         .as[String].collect().forall(_.startsWith("file:")),
         "manifest rows must be fully-qualified URIs")
@@ -669,15 +669,16 @@ class LayoutSpec extends SparkSpec {
       Layout.writeClustered(df.filter(col("k") < 300), s"$tmp/d1", "k",
         numFiles = 2)
       SnapshotStore.commit(spark, tmp, 1L,
-        SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/d1")))
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Nil))
       Layout.writeClustered(df.filter(col("k") >= 300), s"$tmp/d2", "k",
         numFiles = 1)
       SnapshotStore.commit(spark, tmp, 2L,
-        SnapshotStore.manifestFor(spark, 2L, Seq(s"$tmp/d1", s"$tmp/d2")))
+        SnapshotStore.manifestForStats(spark, 2L,
+          Seq(s"$tmp/d1", s"$tmp/d2"), Nil))
       Layout.writeClustered(SnapshotStore.readAt(spark, tmp, 2L),
         s"$tmp/d3", "k", numFiles = 1)
       SnapshotStore.commit(spark, tmp, 3L,
-        SnapshotStore.manifestFor(spark, 3L, Seq(s"$tmp/d3")))
+        SnapshotStore.manifestForStats(spark, 3L, Seq(s"$tmp/d3"), Nil))
       // keeping v2 and v3: v1's files are ALL shared with v2 → only the
       // manifest commit vanishes, no data file may be deleted
       assert(SnapshotStore.vacuumExecute(spark, tmp, Seq(2L, 3L)).isEmpty)
@@ -722,7 +723,7 @@ class LayoutSpec extends SparkSpec {
         .select(col("id").as("k"), (col("id") % 7).as("v"))
       Layout.writeClustered(df, s"$tmp/d1", "k", numFiles = 4)
       SnapshotStore.commit(spark, tmp, 1L,
-        SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/d1")))
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Nil))
       // delete commit: k < 10 forgotten — rewrite only the files whose
       // rows intersect (the clustering bounds it to one file)
       val v1 = SnapshotStore.readAt(spark, tmp, 1L)
@@ -743,7 +744,8 @@ class LayoutSpec extends SparkSpec {
       SnapshotStore.commit(spark, tmp, 2L,
         untouched.toDF("file")
           .select(lit(2L).as("version"), col("file"))
-          .unionByName(SnapshotStore.manifestFor(spark, 2L, Seq(s"$tmp/d2"))))
+          .unionByName(SnapshotStore.manifestForStats(spark, 2L,
+            Seq(s"$tmp/d2"), Nil).select("version", "file")))
       // forward reads forget; time travel still serves history
       assert(SnapshotStore.readAt(spark, tmp, 2L)
         .filter(col("k") < 10).isEmpty)
@@ -767,7 +769,6 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("snapshot store: time travel survives compaction; vacuum names exactly the dropped-only files") {
-    import spark.implicits._
     import graft.substrate.SnapshotStore
     val tmp = java.nio.file.Files.createTempDirectory("graft_snapspec")
       .toString
@@ -776,56 +777,50 @@ class LayoutSpec extends SparkSpec {
         .select(col("id").as("k"), (col("id") % 7).as("v"))
       val head = df.filter(col("k") < 600)
       Layout.writeClustered(head, s"$tmp/d1", "k", numFiles = 3)
-      val m1 = SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/d1"))
+      SnapshotStore.commit(spark, tmp, 1L,
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Nil))
       Layout.writeClustered(df.filter(col("k") >= 600), s"$tmp/d2", "k",
         numFiles = 2)
-      val m12 = m1.unionByName(
-          SnapshotStore.manifestFor(spark, 2L, Seq(s"$tmp/d1", s"$tmp/d2")))
-        .localCheckpoint(true)
+      SnapshotStore.commit(spark, tmp, 2L,
+        SnapshotStore.manifestForStats(spark, 2L,
+          Seq(s"$tmp/d1", s"$tmp/d2"), Nil))
       // v3 = compaction commit: v2's rows rewritten into one file
-      Layout.writeClustered(SnapshotStore.readAt(spark, m12, 2L),
+      Layout.writeClustered(SnapshotStore.readAt(spark, tmp, 2L),
         s"$tmp/d3", "k", numFiles = 1)
-      val manifest = m12
-        .unionByName(SnapshotStore.manifestFor(spark, 3L, Seq(s"$tmp/d3")))
-        .localCheckpoint(true)
+      SnapshotStore.commit(spark, tmp, 3L,
+        SnapshotStore.manifestForStats(spark, 3L, Seq(s"$tmp/d3"), Nil))
       // v1 answers from its original files, untouched by later commits
-      val v1 = SnapshotStore.readAt(spark, manifest, 1L)
+      val v1 = SnapshotStore.readAt(spark, tmp, 1L)
       assert(v1.exceptAll(head).isEmpty && head.exceptAll(v1).isEmpty)
       // the rewrite is read-equivalent: v3 == v2 row-for-row
-      val v2 = SnapshotStore.readAt(spark, manifest, 2L)
-      val v3 = SnapshotStore.readAt(spark, manifest, 3L)
+      val v2 = SnapshotStore.readAt(spark, tmp, 2L)
+      val v3 = SnapshotStore.readAt(spark, tmp, 3L)
       assert(v3.exceptAll(v2).isEmpty && v2.exceptAll(v3).isEmpty)
-      // shared-file safety: dropping only v2 deletes nothing of d1
-      // (v1 still references it) — only d2's files become deletable
-      val afterDropV2 = SnapshotStore.vacuum(manifest, Seq(1L, 3L))
-        .as[String].collect()
-      assert(afterDropV2.nonEmpty && afterDropV2.forall(_.contains("/d2/")))
-      // retention end-to-end: drop v1+v2, physically delete their
-      // exclusive files, and the retained version still reads complete
-      val dropped = SnapshotStore.vacuum(manifest, Seq(3L))
-        .as[String].collect()
-      assert(dropped.forall(f => f.contains("/d1/") || f.contains("/d2/")))
-      dropped.foreach(f => // rows are qualified URIs — File needs the path
-        assert(new java.io.File(new java.net.URI(f).getPath).delete(), f))
-      assert(SnapshotStore.readAt(spark, manifest, 3L).count() == 1000L)
-      // unknown version fails loudly, never an empty table
-      intercept[IllegalArgumentException] {
-        SnapshotStore.readAt(spark, manifest, 9L)
-      }
       // file-level diff: append commit → exactly the delta's files;
       // compaction commit → the whole rewritten set; same version →
       // nothing changed and readChanged refuses rather than scanning
-      // nothing (readChanged itself runs against the PRE-vacuum files
-      // in the oracled entry — here d1/d2 were just deleted, so assert
-      // the manifest algebra only)
-      val app = SnapshotStore.changedFiles(manifest, 1L, 2L)
-        .as[String].collect()
-      assert(app.nonEmpty && app.forall(_.contains("/d2/")))
-      val rew = SnapshotStore.changedFiles(manifest, 2L, 3L)
-        .as[String].collect()
-      assert(rew.nonEmpty && rew.forall(_.contains("/d3/")))
+      // nothing
+      val app = SnapshotStore.readChanged(spark, tmp, 1L, 2L).inputFiles
+      assert(app.length == 2 && app.forall(_.contains("/d2/")))
+      val rew = SnapshotStore.readChanged(spark, tmp, 2L, 3L).inputFiles
+      assert(rew.length == 1 && rew.forall(_.contains("/d3/")))
       intercept[IllegalArgumentException] {
-        SnapshotStore.readChanged(spark, manifest, 2L, 2L)
+        SnapshotStore.readChanged(spark, tmp, 2L, 2L)
+      }
+      // shared-file safety: dropping only v2 deletes nothing of d1
+      // (v1 still references it) — only d2's files are reclaimed
+      val afterDropV2 = SnapshotStore.vacuumExecute(spark, tmp, Seq(1L, 3L))
+      assert(afterDropV2.size == 2 && afterDropV2.forall(_.contains("/d2/")))
+      // retention end-to-end: drop v1 too, its exclusive files go, and
+      // the retained version still reads complete
+      val dropped = SnapshotStore.vacuumExecute(spark, tmp, Seq(3L))
+      assert(dropped.size == 3 && dropped.forall(_.contains("/d1/")))
+      dropped.foreach(f => // rows are qualified URIs — File needs the path
+        assert(!new java.io.File(new java.net.URI(f).getPath).exists(), f))
+      assert(SnapshotStore.readAt(spark, tmp, 3L).count() == 1000L)
+      // unknown version fails loudly, never an empty table
+      intercept[IllegalArgumentException] {
+        SnapshotStore.readAt(spark, tmp, 9L)
       }
     } finally {
       import scala.reflect.io.Directory
@@ -847,7 +842,7 @@ class LayoutSpec extends SparkSpec {
         .select(col("id").as("k"), (col("id") % 7).as("v"))
       Layout.writeClustered(df, s"$tmp/d1", "k", numFiles = 2)
       SnapshotStore.commit(spark, tmp, 0L,
-        SnapshotStore.manifestFor(spark, 0L, Seq(s"$tmp/d1")))
+        SnapshotStore.manifestForStats(spark, 0L, Seq(s"$tmp/d1"), Nil))
       Layout.writeClustered(df.select(col("k") + 100 as "k", col("v")),
         s"$tmp/d2", "k", numFiles = 1)
       import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
@@ -859,7 +854,7 @@ class LayoutSpec extends SparkSpec {
           def call(): Long = SnapshotStore.commitNext(spark, tmp) { v =>
             attempts.incrementAndGet()
             if (v == 1L) gate.await(60, TimeUnit.SECONDS)
-            SnapshotStore.manifestFor(spark, v, dirs)
+            SnapshotStore.manifestForStats(spark, v, dirs, Nil)
           }
         })
       val (fa, fb) = (committer(Seq(s"$tmp/d1", s"$tmp/d2")),
@@ -898,12 +893,13 @@ class LayoutSpec extends SparkSpec {
       Layout.writeClustered(df.filter(col("k") < 300), s"$tmp/d1", "k",
         numFiles = 2)
       SnapshotStore.commit(spark, tmp, 1L,
-        SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/d1")))
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Nil))
       Layout.writeClustered(df.filter(col("k") >= 300), s"$tmp/d2", "k",
         numFiles = 1)
       // v2 shares d1's files with v1 and adds d2's
       SnapshotStore.commit(spark, tmp, 2L,
-        SnapshotStore.manifestFor(spark, 2L, Seq(s"$tmp/d1", s"$tmp/d2")))
+        SnapshotStore.manifestForStats(spark, 2L,
+          Seq(s"$tmp/d1", s"$tmp/d2"), Nil))
       // an in-flight reader resolves v1's file list BEFORE the retire
       val inFlight = SnapshotStore.readAt(spark, tmp, 1L)
       // the HEAD id is never re-mintable: retention refuses to drop the
@@ -932,7 +928,7 @@ class LayoutSpec extends SparkSpec {
       Layout.writeClustered(SnapshotStore.readAt(spark, tmp, 2L),
         s"$tmp/d3", "k", numFiles = 1)
       SnapshotStore.commit(spark, tmp, 3L,
-        SnapshotStore.manifestFor(spark, 3L, Seq(s"$tmp/d3")))
+        SnapshotStore.manifestForStats(spark, 3L, Seq(s"$tmp/d3"), Nil))
       SnapshotStore.retire(spark, tmp, keep = Seq(3L))
       val purged = SnapshotStore.purgeRetired(spark, tmp)
       assert(purged.size == 3,
@@ -973,17 +969,17 @@ class LayoutSpec extends SparkSpec {
       Layout.writeClustered(df.filter(col("k") < 100), s"$tmp/d1", "k",
         numFiles = 1)
       SnapshotStore.commit(spark, tmp, 1L,
-        SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/d1")))
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Nil))
       Layout.writeClustered(df.filter(col("k") >= 100), s"$tmp/d2", "k",
         numFiles = 1)
       SnapshotStore.commit(spark, tmp, 2L,
-        SnapshotStore.manifestFor(spark, 2L, Seq(s"$tmp/d2")))
+        SnapshotStore.manifestForStats(spark, 2L, Seq(s"$tmp/d2"), Nil))
       assert(SnapshotStore.retire(spark, tmp, keep = Seq(2L)) == Seq(1L))
       // a replayed commit intent at the dropped id must NOT be treated
       // as orphan repair — the id is dead
       val e = intercept[IllegalArgumentException] {
         SnapshotStore.commit(spark, tmp, 1L,
-          SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/d2")))
+          SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d2"), Nil))
       }
       assert(e.getMessage.contains("monotonic"))
       assert(SnapshotStore.committedVersions(spark, tmp) == Seq(2L))

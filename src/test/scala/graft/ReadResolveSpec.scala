@@ -77,6 +77,52 @@ class ReadResolveSpec extends SparkSpec {
     }
   }
 
+  test("readChanged resolves from the committed manifests: an append " +
+      "window reads exactly the appended files with no Spark job, a " +
+      "compaction window the rewritten set, and an empty or sidecar " +
+      "window refuses") {
+    withStore { tmp =>
+      import spark.implicits._
+      def kv(r: Range) = r.map(i => (i.toLong, (i % 7).toLong)).toDF("k", "v")
+      def names(df: DataFrame) =
+        df.inputFiles.map(new org.apache.hadoop.fs.Path(_).getName).toSet
+      def written(dir: String) = new java.io.File(dir).listFiles()
+        .map(_.getName).filter(_.endsWith(".parquet")).toSet
+      Layout.writeClustered(kv(0 until 100), s"$tmp/d1", "k", numFiles = 3)
+      SnapshotStore.commit(spark, tmp, 1L,
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"),
+          Seq("k")))
+      Layout.writeClustered(kv(100 until 130), s"$tmp/w2", "k",
+        numFiles = 2)
+      assert(SnapshotStore.appendCommit(spark, tmp, Seq(s"$tmp/w2"),
+        Seq("k")) == 2L)
+      val appended = resolved("readChanged")(
+        SnapshotStore.readChanged(spark, tmp, 1L, 2L))
+      assert(names(appended) == written(s"$tmp/w2"))
+      assert(sameRows(appended, kv(100 until 130)))
+      // a compaction rewrites every file: the window is the new set
+      Layout.writeClustered(SnapshotStore.readAt(spark, tmp, 2L),
+        s"$tmp/d3", "k", numFiles = 2)
+      SnapshotStore.commit(spark, tmp, 3L,
+        SnapshotStore.manifestForStats(spark, 3L, Seq(s"$tmp/d3"),
+          Seq("k")))
+      val rewritten = SnapshotStore.readChanged(spark, tmp, 2L, 3L)
+      assert(names(rewritten) == written(s"$tmp/d3"))
+      assert(sameRows(rewritten, kv(0 until 130)))
+      val empty = intercept[IllegalArgumentException] {
+        SnapshotStore.readChanged(spark, tmp, 3L, 3L)
+      }
+      assert(empty.getMessage.contains("no files changed"))
+      // a pending sidecar hides rows across the whole table
+      SnapshotStore.deleteCommitMor(spark, tmp, 4L, 3L, "k",
+        Seq(5L).toDF("k"), s"$tmp/del4")
+      val pending = intercept[IllegalArgumentException] {
+        SnapshotStore.readChanged(spark, tmp, 3L, 4L)
+      }
+      assert(pending.getMessage.contains("merge-on-read"))
+    }
+  }
+
   test("appendCommit over an already-written batch dir starts no Spark " +
       "job: its manifest is driver-side metadata") {
     withStore { tmp =>

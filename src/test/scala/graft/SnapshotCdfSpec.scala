@@ -199,8 +199,7 @@ class SnapshotCdfSpec extends SparkSpec {
       // the file-level delta REFUSES under pending deletes; the
       // row-level feed serves the same window
       intercept[IllegalArgumentException] {
-        SnapshotStore.readChanged(spark,
-          SnapshotStore.manifest(spark, tmp), 2L, 3L)
+        SnapshotStore.readChanged(spark, tmp, 2L, 3L)
       }
       val cdf = SnapshotStore.readChangesBetween(spark, tmp, 1L, 5L, "k")
       val byStep = cdf.groupBy("_commit_version", "_change_type")

@@ -80,7 +80,8 @@ class SnapshotStatsSpec extends SparkSpec {
     withStore { tmp =>
       Layout.writeClustered(li, s"$tmp/d1", "l_orderkey", numFiles = 3)
       SnapshotStore.commit(spark, tmp, 1L,
-        SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/d1")))
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Nil)
+          .select("version", "file"))
       val (surv, total) =
         SnapshotStore.filesWhere(spark, tmp, 1L, "l_orderkey", -10L, -1L)
       assert(surv.size == total,
@@ -101,7 +102,8 @@ class SnapshotStatsSpec extends SparkSpec {
       Layout.writeClustered(li.filter(col("l_orderkey") % 2 === 0),
         s"$tmp/d1", "l_orderkey", numFiles = 2)
       SnapshotStore.commit(spark, tmp, 1L,
-        SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/d1")))
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Nil)
+          .select("version", "file"))
       Layout.writeClustered(li.filter(col("l_orderkey") % 2 === 1),
         s"$tmp/d2", "l_orderkey", numFiles = 2)
       SnapshotStore.commit(spark, tmp, 2L,
@@ -270,13 +272,14 @@ class SnapshotStatsSpec extends SparkSpec {
           .select("o_orderkey", "o_totalprice"),
         s"$tmp/d1", "o_orderkey", numFiles = 2)
       SnapshotStore.commit(spark, tmp, 1L,
-        SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/d1")))
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Nil))
       Layout.writeClustered(
         orders.filter(col("o_orderkey") % 2 === 1)
           .select("o_orderkey", "o_totalprice", "o_orderpriority"),
         s"$tmp/d2", "o_orderkey", numFiles = 2)
       SnapshotStore.commit(spark, tmp, 2L,
-        SnapshotStore.manifestFor(spark, 2L, Seq(s"$tmp/d1", s"$tmp/d2")))
+        SnapshotStore.manifestForStats(spark, 2L,
+          Seq(s"$tmp/d1", s"$tmp/d2"), Nil))
       // v2's manifest has no bounds (plain commit) → every file is a
       // conservative hit; the rewrite must still carry the new column
       val (rw, total) = SnapshotStore.deleteCommit(spark, tmp, 3L, 2L,
@@ -304,13 +307,14 @@ class SnapshotStatsSpec extends SparkSpec {
           .select("o_orderkey", "o_totalprice"),
         s"$tmp/d1", "o_orderkey", numFiles = 2)
       SnapshotStore.commit(spark, tmp, 1L,
-        SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/d1")))
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Nil))
       Layout.writeClustered(
         orders.filter(col("o_orderkey") % 2 === 1)
           .select("o_orderkey", "o_totalprice", "o_orderpriority"),
         s"$tmp/d2", "o_orderkey", numFiles = 2)
       SnapshotStore.commit(spark, tmp, 2L,
-        SnapshotStore.manifestFor(spark, 2L, Seq(s"$tmp/d1", s"$tmp/d2")))
+        SnapshotStore.manifestForStats(spark, 2L,
+          Seq(s"$tmp/d1", s"$tmp/d2"), Nil))
       assert(!SnapshotStore.readAt(spark, tmp, 1L)
         .schema.fieldNames.contains("o_orderpriority"))
       val merged = SnapshotStore.readAt(spark, tmp, 2L, mergeSchema = true)
@@ -358,7 +362,8 @@ class SnapshotStatsSpec extends SparkSpec {
         "an impossible string range must exonerate every file")
       // a plain commit has no string bounds: unknown, all files kept
       SnapshotStore.commit(spark, tmp, 2L,
-        SnapshotStore.manifestFor(spark, 2L, Seq(s"$tmp/d1")))
+        SnapshotStore.manifestForStats(spark, 2L, Seq(s"$tmp/d1"), Nil)
+          .select("version", "file"))
       val (all, t2) =
         SnapshotStore.filesWhereStr(spark, tmp, 2L, "source", v, v)
       assert(all.size == t2)
@@ -563,15 +568,9 @@ class SnapshotStatsSpec extends SparkSpec {
       assert(m4.filter(col("kind") === "delete").count() == 0L)
       assert(m4.filter(col("min_l_orderkey").isNull).count() == 0L,
         "the materialized files must carry rebuilt bounds")
-      // the manifest-DataFrame read path applies sidecars too
-      // (code-review r14: it used to drop the sidecar row from the
-      // file list WITHOUT applying it — silently serving forgotten
-      // rows), and the file-level delta refuses under pending deletes
-      val mdf = SnapshotStore.manifest(spark, tmp)
-      assert(SnapshotStore.readAt(spark, mdf, 3L).count() == expect3,
-        "the manifest-DataFrame readAt must apply pending sidecars")
+      // the file-level delta refuses under pending deletes
       val eChg = intercept[IllegalArgumentException] {
-        SnapshotStore.readChanged(spark, mdf, 1L, 3L)
+        SnapshotStore.readChanged(spark, tmp, 1L, 3L)
       }
       assert(eChg.getMessage.contains("merge-on-read"))
       // vacuum reclaims the sidecars and the pre-delete files
@@ -746,14 +745,15 @@ class SnapshotStatsSpec extends SparkSpec {
           .select("o_orderkey", "o_totalprice"),
         s"$tmp/d1", "o_orderkey", numFiles = 2)
       SnapshotStore.commit(spark, tmp, 1L,
-        SnapshotStore.manifestFor(spark, 1L, Seq(s"$tmp/d1")))
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"), Nil))
       // evolution: the delta carries a NEW key column `nid`
       val odd = orders.filter(col("o_orderkey") % 2 === 1)
         .select(col("o_orderkey"), col("o_totalprice"),
           col("o_orderkey").as("nid"))
       Layout.writeClustered(odd, s"$tmp/d2", "o_orderkey", numFiles = 2)
       SnapshotStore.commit(spark, tmp, 2L,
-        SnapshotStore.manifestFor(spark, 2L, Seq(s"$tmp/d1", s"$tmp/d2")))
+        SnapshotStore.manifestForStats(spark, 2L,
+          Seq(s"$tmp/d1", s"$tmp/d2"), Nil))
       val keys = odd.filter(col("nid") % 5 === 0).select("nid")
       val nDel = keys.distinct().count()
       assert(nDel > 0)
@@ -800,7 +800,7 @@ class SnapshotStatsSpec extends SparkSpec {
       Layout.writeClustered(SnapshotStore.readAt(spark, tmp, 1L),
         s"$tmp/d2", "l_orderkey", numFiles = 1)
       SnapshotStore.commit(spark, tmp, 2L,
-        SnapshotStore.manifestFor(spark, 2L, Seq(s"$tmp/d2")))
+        SnapshotStore.manifestForStats(spark, 2L, Seq(s"$tmp/d2"), Nil))
       val reclaimed = SnapshotStore.vacuumExecute(spark, tmp, Seq(2L))
       assert(reclaimed.size == 3,
         s"v1's exclusive files must be reclaimed, got $reclaimed")

@@ -52,6 +52,28 @@ class VectorArtifactSpec extends SparkSpec {
     }
   }
 
+  test("load reads a version only through its manifest: a manifest-less " +
+      "version fails loudly and names the version") {
+    withTmp { tmp =>
+      val e = corpus.localCheckpoint(true)
+      val cents = IvfPq.servingCentroids(e, centroidMod = 7)
+      val cb = PqIndex.codebookArrays(
+        PqIndex.codebooks(e, "vec_id", "v", dim = Dim))
+      VectorArtifact.save(spark, tmp, 4L, Dim, cents, cb,
+        PqIndex.encode(e, "vec_id", "v", cb, dim = Dim))
+      assert(VectorArtifact.load(spark, tmp, 4L).codes.count() == 200L)
+      // the code files are still on disk under v=4/codes; only the
+      // manifest that pins them is gone
+      import scala.reflect.io.Directory
+      assert(new Directory(new java.io.File(s"$tmp/v=4/manifest"))
+        .deleteRecursively())
+      val ex = intercept[IllegalArgumentException] {
+        VectorArtifact.load(spark, tmp, 4L)
+      }
+      assert(ex.getMessage.contains("v=4"), ex.getMessage)
+    }
+  }
+
   test("a space-bearing base survives publish, retire, and purge on " +
       "the artifact store") {
     // VERDICT r13 what's-wrong #1: the purge pass's pinned-set
@@ -918,13 +940,14 @@ class VectorArtifactSpec extends SparkSpec {
         .select(col("vec_id"), col("v")), s"$corpusBase/d1", "vec_id",
         numFiles = 2)
       SnapshotStore.commit(spark, corpusBase, 1L,
-        SnapshotStore.manifestFor(spark, 1L, Seq(s"$corpusBase/d1")))
+        SnapshotStore.manifestForStats(spark, 1L,
+          Seq(s"$corpusBase/d1"), Nil))
       Layout.writeClustered(e.filter(col("vec_id") >= 150)
         .select(col("vec_id"), col("v")), s"$corpusBase/d2", "vec_id",
         numFiles = 1)
       SnapshotStore.commit(spark, corpusBase, 2L,
-        SnapshotStore.manifestFor(spark, 2L,
-          Seq(s"$corpusBase/d1", s"$corpusBase/d2")))
+        SnapshotStore.manifestForStats(spark, 2L,
+          Seq(s"$corpusBase/d1", s"$corpusBase/d2"), Nil))
       // train the index ON corpus v1 and stamp the citation
       val train = SnapshotStore.readAt(spark, corpusBase, 1L)
       val cents = IvfPq.servingCentroids(train, centroidMod = 7)
