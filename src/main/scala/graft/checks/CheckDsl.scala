@@ -122,17 +122,15 @@ object CheckDsl {
   /** `x IN rels` for an uncorrelated semi-join against catalog rows: the
     * rows are collected on the driver (a projected or filtered catalog
     * fixture is a LocalRelation, which collects with no job) and become a
-    * literal IN-list, so no broadcast job runs. A row with a null never
-    * matches under SQL equality and is dropped, which keeps a struct
-    * `x` (whose IN compares null fields as equal) at EXISTS semantics; a
-    * multi-column row becomes a struct with the relation's field names.
+    * literal IN-list ([[graft.substrate.KeySet.literals]]), so no
+    * broadcast job runs. A row with a null never matches under SQL
+    * equality and is dropped, which keeps a struct `x` (whose IN compares
+    * null fields as equal) at EXISTS semantics; a multi-column row
+    * becomes a struct with the relation's field names.
     */
   def inCatalog(x: Column, rels: DataFrame*): Column =
-    x.isin(rels.flatMap(_.collect()).filterNot(_.anyNull).map { r =>
-      if (r.length == 1) r.get(0)
-      else struct(r.schema.fieldNames.toSeq.zipWithIndex.map { case (n, i) =>
-        lit(r.get(i)).as(n) }: _*)
-    }: _*)
+    x.isin(rels.flatMap(r =>
+      graft.substrate.KeySet.literals(r.schema, r.collect().toSeq)): _*)
 
   /** A catalog-only relation is metadata-small: read as one partition, an
     * aggregate over it needs no exchange and runs as one one-task job.

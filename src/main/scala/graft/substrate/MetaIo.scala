@@ -117,19 +117,56 @@ private[graft] object MetaIo {
       : (org.apache.parquet.schema.MessageType, Seq[Group]) = {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+    try rowsFrom(reader)
+    finally reader.close()
+  }
+
+  /** An open file's footer schema and every row it holds. */
+  private def rowsFrom(reader: org.apache.parquet.hadoop.ParquetFileReader)
+      : (org.apache.parquet.schema.MessageType, Seq[Group]) = {
+    val schema = reader.getFooter.getFileMetaData.getSchema
+    val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+    val rows = Iterator.continually(reader.readNextRowGroup())
+      .takeWhile(_ != null).flatMap { store =>
+        val rr = io.getRecordReader(store,
+          new org.apache.parquet.example.data.simple.convert
+            .GroupRecordConverter(schema))
+        Iterator.fill(store.getRowCount.toInt)(rr.read())
+      }.toVector
+    (schema, rows)
+  }
+
+  /** The most rows one driver-side read or write of metadata rows may
+    * hold (4M): far past any manifest's file count, and past any pending
+    * sidecar a merge-on-read store keeps between maintenance windows.
+    */
+  val DriverRowCap: Int = 1 << 22
+
+  /** Every row of the parquet `files` as Spark (schema, rows) under one
+    * merged schema ([[readRowsMerged]]), read on the driver with no Spark
+    * job. The footers come first: when their row counts sum past `cap`
+    * the read fails with `tooMany(count)` before any row is read. None
+    * when a column lies outside the metadata type universe — the caller
+    * reads such files through Spark ([[readParquet]]).
+    */
+  def readCapped(conf: Configuration, files: Seq[String], cap: Long)(
+      tooMany: Long => String)
+      : Option[(org.apache.spark.sql.types.StructType,
+        Seq[org.apache.spark.sql.Row])] = {
+    import scala.jdk.CollectionConverters._
+    val readers = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.parquet.hadoop.ParquetFileReader]
     try {
-      val schema = reader.getFooter.getFileMetaData.getSchema
-      val io = new org.apache.parquet.io.ColumnIOFactory()
-        .getColumnIO(schema)
-      val rows = Iterator.continually(reader.readNextRowGroup())
-        .takeWhile(_ != null).flatMap { store =>
-          val rr = io.getRecordReader(store,
-            new org.apache.parquet.example.data.simple.convert
-              .GroupRecordConverter(schema))
-          Iterator.fill(store.getRowCount.toInt)(rr.read())
-        }.toVector
-      (schema, rows)
-    } finally reader.close()
+      files.foreach(f => readers += org.apache.parquet.hadoop.ParquetFileReader
+        .open(org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new Path(f), conf)))
+      val n = readers.map(_.getFooter.getBlocks.asScala.map(_.getRowCount)
+        .sum).sum
+      require(n <= cap, tooMany(n))
+      if (!readers.forall(_.getFooter.getFileMetaData.getSchema.getFields
+          .asScala.forall(sparkType(_).isRight))) None
+      else Some(rowsOf(readers.map(rowsFrom).toSeq, files.mkString(",")))
+    } finally readers.foreach(_.close())
   }
 
   /** All rows of every `*.parquet` file directly under `dir`, as
@@ -337,6 +374,13 @@ private[graft] object MetaIo {
     }
     val pt = t.asPrimitiveType()
     pt.getPrimitiveTypeName match {
+      // an annotated integral column (DATE, DECIMAL, TIME, TIMESTAMP, a
+      // narrow or unsigned INT) does not hold plain INT/LONG values
+      case PrimitiveTypeName.INT64 | PrimitiveTypeName.INT32
+          if pt.getLogicalTypeAnnotation != null =>
+        Left(s"metadata field ${t.getName} is ${pt.getPrimitiveTypeName} " +
+          s"annotated ${pt.getLogicalTypeAnnotation} — outside the metadata " +
+          "type universe; read it with Spark")
       case PrimitiveTypeName.INT64 => Right(LongType)
       case PrimitiveTypeName.INT32 => Right(IntegerType)
       case PrimitiveTypeName.BINARY

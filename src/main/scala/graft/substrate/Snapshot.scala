@@ -77,8 +77,8 @@ object SnapshotStore {
   private def claimRows(spark: SparkSession, base: String, version: Long,
       schema: StructType, rows: Seq[Row]): Unit = {
     // a pathological DATA-scale frame must fail loudly instead of
-    // ballooning the driver; 4M rows is far past any real file count
-    require(rows.length <= (1 << 22),
+    // ballooning the driver
+    require(rows.length <= MetaIo.DriverRowCap,
       s"commit() was handed ${rows.length} manifest rows for " +
         s"v=$version under $base — manifests are O(#files) metadata; " +
         "a row count this size means a data frame was passed by mistake")
@@ -275,13 +275,16 @@ object SnapshotStore {
   /** The pending POSITIONAL sidecar files of a version's manifest
     * groups ([[deleteCommitPos]]) — each sidecar parquet holds exact
     * (_graft_file, _graft_pos) rows; all pending positional sidecars
-    * apply as ONE anti-join (positions are disjoint across commits by
+    * apply as ONE key set (positions are disjoint across commits by
     * construction: each build scans the LOGICAL table, so an already-
     * hidden row can never be matched twice).
     */
   private def posDeletesOfGroups(gs: Seq[Group]): Seq[String] =
     gs.filter(g => MetaIo.optString(g, "kind").contains("pos_delete"))
       .flatMap(g => MetaIo.optString(g, "file")).distinct.sorted
+
+  /** The helper columns a positional sidecar's rows name. */
+  private val PosCols = Seq("_graft_file", "_graft_pos")
 
   /** The per-file `added_v` stamps of a version's DATA rows (normalized
     * spelling) — the sequence numbers that scope a merge sidecar,
@@ -298,34 +301,73 @@ object SnapshotStore {
       } yield (PathNorm(f), v))
       .groupBy(_._1).view.mapValues(_.map(_._2).min).toMap
 
+  /** The distinct `cols` tuples of one sidecar's `files`, read on the
+    * driver through [[MetaIo.readCapped]] with no Spark job. The footer
+    * row counts are checked against `cap` before any row is read: past
+    * it the read fails and names [[materializeCommit]], which folds the
+    * pending deletes into data files. A key column outside the metadata
+    * type universe (DATE, DECIMAL, TIME, TIMESTAMP) is collected through
+    * Spark instead, so it keeps its own type.
+    */
+  private[graft] def sidecarKeys(spark: SparkSession, files: Seq[String],
+      cols: Seq[String], cap: Long = MetaIo.DriverRowCap): KeySet =
+    MetaIo.readCapped(spark.sparkContext.hadoopConfiguration, files, cap)(
+      n => s"the pending sidecar ${files.mkString(", ")} holds $n rows, " +
+        s"past the $cap rows a read applies as a driver-side key set — " +
+        "materialize the pending deletes first (materializeCommit)") match {
+      case Some((schema, rows)) =>
+        val at = cols.map(schema.fieldIndex)
+        KeySet(StructType(at.map(schema(_))),
+          rows.map(r => Row.fromSeq(at.map(r.get))).distinct)
+      case None =>
+        val df = MetaIo.readParquet(spark, files, mergeSchema = false)
+          .select(cols.map(col): _*).distinct()
+        KeySet(df.schema, df.collect().toSeq)
+    }
+
+  /** The key sets of one read, each sidecar's read once however many
+    * era scans, steps or candidate frames apply it.
+    */
+  private final class SidecarKeys(spark: SparkSession) {
+    private val read =
+      scala.collection.mutable.Map.empty[(Seq[String], Seq[String]), KeySet]
+    def apply(files: Seq[String], cols: Seq[String]): KeySet =
+      read.getOrElseUpdate((files, cols), sidecarKeys(spark, files, cols))
+  }
+
   /** The shared READ CORE under pending sidecars: scan `files` (the
     * version's data files, possibly pruned) and apply every pending
-    * sidecar as a BROADCAST anti-join at its scope — sidecars are O(batch)
-    * by construction, so the joins never shuffle the scan. A row whose
-    * key is NULL (in ANY column of a composite key) survives: a key set
-    * cannot name it. The scan splits into ERAS grouped by the SET of
-    * sidecars that apply (O(pending sidecars) scans however long the
-    * append chain): a merge sidecar skips files added at or after its
+    * sidecar as a KEY-SET FILTER at its scope. Each sidecar's keys are
+    * read once per read on the driver ([[sidecarKeys]], capped at
+    * [[MetaIo.DriverRowCap]] rows from the footers) and applied as one
+    * `InSet`, so no join, broadcast or extra job runs:
+    *  - single key: `k IS NULL OR NOT k IN set`;
+    *  - composite key: any key column null, `OR NOT struct(keys) IN set`;
+    *  - positional: `NOT struct(_graft_file, _graft_pos) IN set`.
+    * A row whose key is NULL (in ANY column of a composite key) survives:
+    * a key set cannot name it. The scan splits into ERAS grouped by the
+    * SET of sidecars that apply (O(pending sidecars) scans however long
+    * the append chain): a merge sidecar skips files added at or after its
     * commit, so its own images and later appends serve while superseded
     * images hide. An era whose files predate a sidecar's key column skips
-    * that anti-join — its rows cannot carry the key.
+    * that filter — its rows cannot carry the key.
     */
-  private def readCore(spark: SparkSession, deletes: Seq[PendingDelete],
-      addedV: Map[String, Long], files: Seq[String],
-      mergeSchema: Boolean, posFiles: Seq[String] = Nil,
+  private def readCore(spark: SparkSession, keys: SidecarKeys,
+      deletes: Seq[PendingDelete], addedV: Map[String, Long],
+      files: Seq[String], mergeSchema: Boolean, posFiles: Seq[String] = Nil,
       keepPos: Boolean = false): DataFrame = {
     val merge = mergeFor(mergeSchema, deletes.nonEmpty)
     if (deletes.isEmpty && posFiles.isEmpty && !keepPos)
       return MetaIo.readParquet(spark, files, merge)
-    // positional sidecars name exact (file, row_index) pairs, applied by
-    // ONE broadcast anti-join on helper columns every era scan carries
-    // (kept when keepPos — deleteCommitPos reads positions from them)
+    // positional sidecars name exact (file, row_index) pairs, matched on
+    // helper columns every era scan carries (kept when keepPos —
+    // deleteCommitPos reads positions from them)
     def withPos(df: DataFrame): DataFrame =
       if (posFiles.isEmpty && !keepPos) df
       else {
         // loud, not silent: a data column named like the positional
         // helpers would be clobbered by the stamp and dropped after the
-        // anti-join — corrupted reads under a green plan
+        // filter — corrupted reads under a green plan
         require(!df.columns.contains("_graft_file") &&
             !df.columns.contains("_graft_pos"),
           "the positional-delete read path reserves the _graft_file " +
@@ -344,27 +386,25 @@ object SnapshotStore {
         MetaIo.readParquet(spark, fs, merge))) {
         (df, d) =>
           if (!d.keys.forall(df.columns.contains)) df
-          else df.join(
-            broadcast(MetaIo.readParquet(spark, d.files, mergeSchema = false)
-              .select(d.keys.map(col): _*).distinct()),
-            d.keys, "left_anti")
+          else df.filter(keys(d.files, d.keys).excludes(df, d.keys))
       }
     }.reduce(_.unionByName(_, allowMissingColumns = true))
     val applied =
       if (posFiles.isEmpty) scan
-      else scan.join(
-        broadcast(MetaIo.readParquet(spark, posFiles, mergeSchema = false)
-          .select("_graft_file", "_graft_pos").distinct()),
-        Seq("_graft_file", "_graft_pos"), "left_anti")
+      else scan.filter(keys(posFiles, PosCols).excludes(scan, PosCols))
     if (keepPos || posFiles.isEmpty) applied
-    else applied.drop("_graft_file", "_graft_pos")
+    else applied.drop(PosCols: _*)
   }
 
-  /** [[readCore]] straight off a version's manifest groups. */
+  /** [[readCore]] straight off a version's manifest groups: each pending
+    * sidecar's keys read once on the driver (capped at
+    * [[MetaIo.DriverRowCap]] rows) and applied as a key-set filter, a
+    * null key surviving.
+    */
   private def readWithDeletes(spark: SparkSession, gs: Seq[Group],
       files: Seq[String], mergeSchema: Boolean): DataFrame =
-    readCore(spark, deletesOfGroups(gs), addedVOfGroups(gs), files,
-      mergeSchema, posDeletesOfGroups(gs))
+    readCore(spark, new SidecarKeys(spark), deletesOfGroups(gs),
+      addedVOfGroups(gs), files, mergeSchema, posDeletesOfGroups(gs))
 
   /** The scan's mergeSchema. Invariant: a read under pending deletes
     * sees every column any of its files carries — a sidecar may key on a
@@ -811,6 +851,8 @@ object SnapshotStore {
 
     private lazy val ancestorRows = MetaIo.rowsOf(ancestor, mdir(base, from))
 
+    private lazy val keys = new SidecarKeys(spark)
+
     /** The ancestor's manifest rows. */
     val groups: Seq[Group] = ancestor.flatMap(_._2)
 
@@ -837,7 +879,7 @@ object SnapshotStore {
     /** The ancestor's logical rows in `files` ([[readCore]]). */
     def read(files: Seq[String], mergeSchema: Boolean,
         keepPos: Boolean): DataFrame =
-      readCore(spark, deletesOfGroups(groups), addedVOfGroups(groups),
+      readCore(spark, keys, deletesOfGroups(groups), addedVOfGroups(groups),
         files, mergeSchema, posDeletesOfGroups(groups), keepPos)
 
     /** The ancestor's whole logical table — what `readAt` serves. */
@@ -1025,8 +1067,8 @@ object SnapshotStore {
 
   /** [[deleteCommitMor]] on a COMPOSITE key: the sidecar holds the
     * batch's distinct key TUPLES (a tuple with NULL in any column is
-    * dropped — a key set cannot name it and the read-side anti-join could
-    * not match it), and `delete_key` the comma-joined column list.
+    * dropped — a key set cannot name it and the read-side key-set filter
+    * keeps null-keyed rows), and `delete_key` the comma-joined column list.
     */
   def deleteCommitMor(spark: SparkSession, base: String, version: Long,
       fromVersion: Long, keyCols: Seq[String], keys: DataFrame,
@@ -1058,8 +1100,8 @@ object SnapshotStore {
   private[graft] var sidecarTargetKeysPerFile: Long = 4L * 1024 * 1024
 
   /** A version's committed per-file [min, max] bounds on `c`,
-    * normalized-path keyed — the driver-side metadata
-    * [[pruneByKeyCoverage]] consumes (O(#files) rows).
+    * normalized-path keyed — the driver-side metadata [[filesCovering]]
+    * and [[pruneByKeyCoverage]] consume (O(#files) rows).
     */
   private def boundsOfGroups(gs: Seq[Group], c: String)
       : Map[String, Seq[(Option[Long], Option[Long])]] =
@@ -1068,8 +1110,27 @@ object SnapshotStore {
         (MetaIo.optLong(g, s"min_$c"), MetaIo.optLong(g, s"max_$c"))))
     }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
 
-  /** DISTRIBUTED coverage prune — the key batch never leaves the
-    * executors. Two aggregates: the leading key's global [min, max], then
+  /** The `candidates` whose committed [min, max] bounds ([[boundsOfGroups]])
+    * contain one of the ascending `keys` — one binary search per bounds
+    * row, exact for a key batch already on the driver. A file with no
+    * bounds row, or with an unknown bound, is kept.
+    */
+  private def filesCovering(
+      bounds: Map[String, Seq[(Option[Long], Option[Long])]],
+      candidates: Seq[String], keys: Array[Long]): Seq[String] =
+    candidates.filter { f =>
+      val rs = bounds.getOrElse(PathNorm(f), Nil)
+      rs.isEmpty || rs.exists {
+        case (Some(lo), Some(hi)) =>
+          val i = java.util.Arrays.binarySearch(keys, lo)
+          val at = if (i >= 0) i else -i - 1
+          at < keys.length && keys(at) <= hi
+        case _ => true // unknown bounds: keep
+      }
+    }
+
+  /** DISTRIBUTED coverage prune of a caller's key batch
+    * ([[deleteCommitPos]]) — the batch never leaves the executors. Two aggregates: the leading key's global [min, max], then
     * the OCCUPIED BINS of a fixed grid over that span — at most nBins
     * longs (min 1024, cap 2^20, sized to the candidate count) reach the
     * driver. A candidate survives when an occupied bin overlaps its
@@ -1221,14 +1282,9 @@ object SnapshotStore {
     require(keys.nonEmpty, "mergeCommit needs a non-empty changelog")
     require(e.dataFiles.nonEmpty,
       s"snapshot version $fromVersion unknown or empty")
-    val bounds = boundsOfGroups(e.groups, c)
-    val hitFiles = e.dataFiles.sorted.filter(f => bounds(PathNorm(f)).exists {
-      case (Some(lo), Some(hi)) =>
-        val i = java.util.Arrays.binarySearch(keys, lo)
-        val at = if (i >= 0) i else -i - 1
-        at < keys.length && keys(at) <= hi
-      case _ => true // unknown bounds: rewrite conservatively
-    })
+    // unknown bounds rewrite conservatively
+    val hitFiles =
+      filesCovering(boundsOfGroups(e.groups, c), e.dataFiles.sorted, keys)
     // the merge's base = the HIT files only (an exonerated file provably
     // holds no changelog key, so no update or delete can touch it); an
     // all-miss plan still needs the schema
@@ -1479,10 +1535,14 @@ object SnapshotStore {
     * Composition, step by step (v-1 → v), all from manifest metadata:
     * the OLD candidates are v-1's logical rows in files v REMOVED, plus —
     * when v committed a new sidecar — v-1's logical rows in CARRIED files
-    * the sidecar hides (an equality sidecar's keys bounds-prune the
-    * carried files, so a clustered store scans O(matching range) files;
-    * a positional sidecar names its files). The NEW candidates are v's
-    * logical rows in files v ADDED. A keyed full-outer diff classifies:
+    * the sidecar hides. Every sidecar's keys are read once per call on
+    * the driver and applied as key-set filters under [[readCore]]'s null
+    * discipline and cap: a new equality sidecar keeps the carried files
+    * whose bounds contain one of its keys (one binary search per file, so
+    * a clustered store scans O(matching range) files) and their rows
+    * whose key is IN its set; a new positional sidecar's rows name its
+    * files and the (file, position) pairs to keep. The NEW candidates are
+    * v's logical rows in files v ADDED. A keyed full-outer diff classifies:
     * only new → insert; only old → delete; a non-key change → pre- and
     * postimage; identical → nothing (so a compaction emits no event).
     *
@@ -1509,6 +1569,9 @@ object SnapshotStore {
     require(committed.contains(fromV) && committed.contains(toV),
       s"versions $fromV and $toV must both be committed under $base")
     val steps = committed.filter(v => v > fromV && v <= toV)
+    // one driver-side read per sidecar for the whole window: a pending
+    // sidecar applies to every step until materialized
+    val keys = new SidecarKeys(spark)
     val frames = steps.flatMap { v =>
       val prevV = committed.takeWhile(_ < v).last
       val gsP = versionGroups(spark, base, prevV)
@@ -1553,52 +1616,48 @@ object SnapshotStore {
         val addedVP = addedVOfGroups(gsP)
         val oldFromRemoved =
           if (removed.isEmpty) None
-          else Some(readCore(spark, delsP, addedVP, removed,
+          else Some(readCore(spark, keys, delsP, addedVP, removed,
             mergeSchema = true, posP))
-        // carried rows a NEW sidecar hides: bounds-prune the carried
-        // files against the key batch when the domain allows, then
-        // semi-join the logical v-1 rows to the sidecar keys
+        // carried rows a NEW sidecar hides: the carried files whose
+        // bounds contain one of its keys (an integral leading key; any
+        // other keeps every carried file), their logical v-1 rows
+        // filtered to the sidecar's key set
         val oldFromCarried = newSidecars.headOption.flatMap { d =>
-          val keys = MetaIo.readParquet(spark, d.files, mergeSchema = false)
-            .select(d.keys.map(col): _*).distinct()
-          val hit = pruneByKeyCoverage(spark, keys, d.keys.head,
-            boundsOfGroups(gsP, d.keys.head), carried)
+          val ks = keys(d.files, d.keys)
+          val hit = ks.sortedLeading.fold(carried)(filesCovering(
+            boundsOfGroups(gsP, d.keys.head), carried, _))
           if (hit.isEmpty) None
           else {
-            val scan = readCore(spark, delsP, addedVP, hit,
+            val scan = readCore(spark, keys, delsP, addedVP, hit,
               mergeSchema = true, posP)
             // carried files that entirely predate the sidecar's key
             // column(s) cannot hold matching rows (the null discipline)
             if (!d.keys.forall(scan.columns.contains)) None
-            else Some(scan.join(broadcast(keys), d.keys, "semi"))
+            else Some(scan.filter(ks.includes(scan, d.keys)))
           }
         }
-        // carried rows a NEW positional sidecar hides: the sidecar
-        // itself names the exact files (no coverage prune needed) —
-        // scan those carried files' v-1 logical rows with positions
-        // kept and semi-join the (file, position) pairs
+        // carried rows a NEW positional sidecar hides: its rows name the
+        // exact files (no coverage prune needed) — those carried files'
+        // v-1 logical rows with positions kept, filtered to its pairs
         val oldFromPos =
           if (newPos.isEmpty) None
           else {
-            val sidecar =
-              MetaIo.readParquet(spark, newPos, mergeSchema = false)
-                .select("_graft_file", "_graft_pos")
-            val namedNorm = sidecar.select("_graft_file").distinct()
-              .collect().map(r => PathNorm(r.getString(0))).toSet
-            val hitFiles = carried.filter(f => namedNorm(PathNorm(f)))
+            val ks = keys(newPos, PosCols)
+            val named = ks.rows.map(r => PathNorm(r.getString(0))).toSet
+            val hitFiles = carried.filter(f => named(PathNorm(f)))
             if (hitFiles.isEmpty) None
-            else Some(readCore(spark, delsP, addedVP, hitFiles,
+            else {
+              val scan = readCore(spark, keys, delsP, addedVP, hitFiles,
                 mergeSchema = true, posP, keepPos = true)
-              .join(broadcast(sidecar),
-                Seq("_graft_file", "_graft_pos"), "semi")
-              .drop("_graft_file", "_graft_pos"))
+              Some(scan.filter(ks.includes(scan, PosCols)).drop(PosCols: _*))
+            }
           }
         val oldCand = (oldFromRemoved.toSeq ++ oldFromCarried.toSeq ++
             oldFromPos.toSeq)
           .reduceOption(_.unionByName(_, allowMissingColumns = true))
         val newCand =
           if (added.isEmpty) None
-          else Some(readCore(spark, delsV, addedVOfGroups(gsV), added,
+          else Some(readCore(spark, keys, delsV, addedVOfGroups(gsV), added,
             mergeSchema = true, posV))
         if (oldCand.isEmpty && newCand.isEmpty) None
         else {

@@ -220,7 +220,8 @@ object VectorArtifact {
     require(changedCells.nonEmpty,
       "publishIncremental with no changed cells — re-point readers at " +
         s"v=$fromVersion instead of publishing an identical version")
-    val prev = requireClusteredAncestor(spark, base, version, fromVersion)
+    val full = requireClusteredAncestor(spark, base, version, fromVersion)
+    val prev = dataRows(full)
     val corpus = corpusOf(spark, base, fromVersion) // frozen cb → inherit
     requireUnreferenced(spark, base, version) // fail fast, pre-stage
     stagedPublish(spark, base, version) { (stage, finalize) =>
@@ -238,7 +239,7 @@ object VectorArtifact {
       val shared = prev.filter(_._2.exists(c => !changedSet.contains(c)))
       val sidecars =
         if (dropPendingSidecars) Nil
-        else carriedSidecarRows(spark, base, fromVersion)
+        else carriedSidecarRows(full)
       writeManifestFull(spark, stage,
         (shared ++ fresh).map { case (f, c) => (f, c, None) } ++ sidecars)
       writeMeta(spark, stage, version, dim, cb, Some(fromVersion), corpus)
@@ -273,8 +274,9 @@ object VectorArtifact {
     // the ancestor's manifest is O(#files) commit metadata, read
     // driver-side by the ancestry gate; as a LocalRelation the broadcast
     // joins below stay relational with no scan job for metadata
-    val prev = requireClusteredAncestor(spark, base, version, fromVersion)
-    val sidecars = pendingSidecarFiles(spark, base, fromVersion)
+    val full = requireClusteredAncestor(spark, base, version, fromVersion)
+    val prev = dataRows(full)
+    val sidecars = pendingSidecarFiles(full)
     val corpus = corpusOf(spark, base, fromVersion)
     requireUnreferenced(spark, base, version)
     stagedPublish(spark, base, version) { (stage, finalize) =>
@@ -378,22 +380,25 @@ object VectorArtifact {
     * ancestor would silently publish a version holding ONLY the changed
     * cells), and `version > fromVersion`: manifests may only pin files of
     * EARLIER versions, the ordering [[requireUnreferenced]]'s
-    * descendants-only sweep relies on. Returns the ancestor's data rows.
+    * descendants-only sweep relies on. Returns every row of the
+    * ancestor's manifest, sidecars included, so a publish reads it once.
     */
   private def requireClusteredAncestor(spark: SparkSession, base: String,
-      version: Long, fromVersion: Long): Seq[(String, Option[Long])] = {
+      version: Long, fromVersion: Long)
+      : Seq[(String, Option[Long], Option[String])] = {
     require(version > fromVersion,
       s"derived publish must move the version FORWARD: v=$version from " +
         s"v=$fromVersion — file sharing points strictly backward")
     requireHeadAncestor(spark, base, fromVersion, "a derived publish")
-    val prev = readManifest(spark, base, fromVersion)
+    val full = readManifestFull(spark, base, fromVersion)
+    val prev = dataRows(full)
     require(prev.nonEmpty,
       s"v=$fromVersion has no manifest under $base (not committed) — " +
         "a derived publish needs saveClustered ancestry")
     require(prev.forall(_._2.isDefined),
       s"v=$fromVersion is not cell-clustered (manifest has cell-less " +
         "files) — a derived publish needs saveClustered ancestry")
-    prev
+    full
   }
 
   /** APPEND publish — the durable write-side of streaming ingest
@@ -409,7 +414,7 @@ object VectorArtifact {
   def appendPublish(spark: SparkSession, base: String, version: Long,
       fromVersion: Long, dim: Int, centroids: DataFrame,
       cb: Array[Array[Array[Double]]], newCodes: DataFrame): Unit = {
-    val prev = requireClusteredAncestor(spark, base, version, fromVersion)
+    val full = requireClusteredAncestor(spark, base, version, fromVersion)
     val corpus = corpusOf(spark, base, fromVersion) // frozen cb → inherit
     requireUnreferenced(spark, base, version) // fail fast, pre-stage
     stagedPublish(spark, base, version) { (stage, finalize) =>
@@ -421,10 +426,10 @@ object VectorArtifact {
       // logical index, appended rows included, until a materializing
       // compact re-admits the namespace.
       writeManifestFull(spark, stage,
-        (prev ++ listCellFiles(spark, s"$stage/codes")
+        (dataRows(full) ++ listCellFiles(spark, s"$stage/codes")
           .map { case (f, c) => (finalize(f), c) })
           .map { case (f, c) => (f, c, None) } ++
-          carriedSidecarRows(spark, base, fromVersion))
+          carriedSidecarRows(full))
       writeMeta(spark, stage, version, dim, cb, Some(fromVersion), corpus)
     }
   }
@@ -456,7 +461,7 @@ object VectorArtifact {
       fromVersion: Long, deleteIds: DataFrame): Long = {
     require(deleteIds.columns.contains("vec_id"),
       "deletePublishMor needs a `vec_id` column on deleteIds")
-    val prev = requireClusteredAncestor(spark, base, version, fromVersion)
+    val full = requireClusteredAncestor(spark, base, version, fromVersion)
     val corpus = corpusOf(spark, base, fromVersion)
     val loaded = load(spark, base, fromVersion) // frozen skinny tables
     val del = deleteIds.select("vec_id").filter(col("vec_id").isNotNull)
@@ -479,8 +484,8 @@ object VectorArtifact {
       // ancestor data rows verbatim + its pending sidecars (chained
       // MoR deletes compose) + this batch's sidecar
       writeManifestFull(spark, stage,
-        prev.map { case (f, c) => (f, c, None) } ++
-          carriedSidecarRows(spark, base, fromVersion) ++ sidecar)
+        dataRows(full).map { case (f, c) => (f, c, None) } ++
+          carriedSidecarRows(full) ++ sidecar)
       writeMeta(spark, stage, version, loaded.dim, loaded.cb,
         Some(fromVersion), corpus)
     }
@@ -551,7 +556,8 @@ object VectorArtifact {
     */
   def compactPublish(spark: SparkSession, base: String, version: Long,
       fromVersion: Long, onlyCells: Option[Seq[Long]] = None): Unit = {
-    val prev = requireClusteredAncestor(spark, base, version, fromVersion)
+    val full = requireClusteredAncestor(spark, base, version, fromVersion)
+    val prev = dataRows(full)
     val filesPerCell = prev.flatMap(_._2)
       .groupBy(identity).view.mapValues(_.size)
     val multi = filesPerCell.filter(_._2 > 1).keys.toSeq.sorted
@@ -565,7 +571,7 @@ object VectorArtifact {
     // only when the rewrite covered every affected cell — a scoped
     // OPTIMIZE (onlyCells excluding an affected cell) carries them
     // forward, correct and idempotent.
-    val pending = pendingSidecarFiles(spark, base, fromVersion)
+    val pending = pendingSidecarFiles(full)
     val affected: Seq[Long] =
       if (pending.isEmpty) Nil
       else {
@@ -735,8 +741,12 @@ object VectorArtifact {
     */
   def readManifest(spark: SparkSession, base: String,
       version: Long): Seq[(String, Option[Long])] =
-    readManifestFull(spark, base, version)
-      .collect { case (f, c, k) if !k.contains("delete") => (f, c) }
+    dataRows(readManifestFull(spark, base, version))
+
+  /** The data rows of a full manifest: (file, cell), sidecars excluded. */
+  private def dataRows(full: Seq[(String, Option[Long], Option[String])])
+      : Seq[(String, Option[Long])] =
+    full.collect { case (f, c, k) if !k.contains("delete") => (f, c) }
 
   /** Every manifest row incl. its kind: (file, cell, kind). */
   def readManifestFull(spark: SparkSession, base: String,
@@ -750,24 +760,23 @@ object VectorArtifact {
         MetaIo.optLong(g, "cell"), MetaIo.optString(g, "kind")))
   }
 
-  /** The pending MoR delete sidecar FILES of a committed version —
-    * empty for a store that never took a [[deletePublishMor]], or one
+  /** The pending MoR delete sidecar FILES of a version's full manifest
+    * — empty for a store that never took a [[deletePublishMor]], or one
     * whose sidecars a [[compactPublish]] has materialized.
     */
-  private def pendingSidecarFiles(spark: SparkSession, base: String,
-      version: Long): Seq[String] =
-    readManifestFull(spark, base, version)
-      .collect { case (f, _, k) if k.contains("delete") => f }
+  private def pendingSidecarFiles(
+      full: Seq[(String, Option[Long], Option[String])]): Seq[String] =
+    full.collect { case (f, _, k) if k.contains("delete") => f }
 
   /** Carried sidecar rows for a derived publish's manifest — every
     * derived publish pins its ancestor's pending sidecars VERBATIM
     * (dropping one would silently resurrect forgotten rows), except the
     * materializing compact ([[compactPublish]] with full coverage).
     */
-  private def carriedSidecarRows(spark: SparkSession, base: String,
-      fromVersion: Long): Seq[(String, Option[Long], Option[String])] =
-    pendingSidecarFiles(spark, base, fromVersion)
-      .map(f => (f, None, Some("delete")))
+  private def carriedSidecarRows(
+      full: Seq[(String, Option[Long], Option[String])])
+      : Seq[(String, Option[Long], Option[String])] =
+    pendingSidecarFiles(full).map(f => (f, None, Some("delete")))
 
   /** Apply a version's pending MoR sidecars to a codes scan: ONE
     * broadcast anti-join on vec_id — the sidecars are O(batch) by
@@ -888,14 +897,11 @@ object VectorArtifact {
     // sidecars apply as a broadcast anti-join — every load serves the
     // LOGICAL index, never the raw files
     val mfFull = readManifestFull(spark, base, version)
-    val dataFiles = mfFull
-      .collect { case (f, _, k) if !k.contains("delete") => f }
+    val dataFiles = dataRows(mfFull).map(_._1)
     require(dataFiles.nonEmpty,
       s"v=$version under $base has no manifest rows pinning code files " +
         "— a version is read only through its manifest")
-    val delFiles = mfFull
-      .collect { case (f, _, k) if k.contains("delete") => f }
-    val codes = applySidecars(spark, delFiles,
+    val codes = applySidecars(spark, pendingSidecarFiles(mfFull),
       MetaIo.readParquet(spark, dataFiles, mergeSchema = false))
     Loaded(num("version"), num("dim").toInt,
       centroids, cb, codes,
@@ -917,7 +923,8 @@ object VectorArtifact {
     */
   def codesForCells(spark: SparkSession, base: String, version: Long,
       cells: Seq[Long]): DataFrame = {
-    val mf = readManifest(spark, base, version)
+    val full = readManifestFull(spark, base, version)
+    val mf = dataRows(full)
     require(mf.nonEmpty, s"v=$version has no manifest — cell pruning " +
       "needs saveClustered/publishIncremental ancestry")
     require(mf.forall(_._2.isDefined),
@@ -928,7 +935,7 @@ object VectorArtifact {
       s"none of cells $cells have files in v=$version")
     // the pruned serve applies pending MoR sidecars too (r15): a probed
     // ADC read must never rank a forgotten vector
-    applySidecars(spark, pendingSidecarFiles(spark, base, version),
+    applySidecars(spark, pendingSidecarFiles(full),
       MetaIo.readParquet(spark, files, mergeSchema = false))
   }
 

@@ -1,7 +1,8 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, InSet, Literal}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.DataType
 
 /** Bridge between graft's native Catalyst expressions and the public Column
   * API (Spark 4 hides Expression↔Column conversion behind
@@ -11,6 +12,21 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftColumn {
   def of(e: Expression): Column = ExpressionUtils.column(e)
   def expressionOf(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A literal of type `t` holding the external value `v` (a `Row` for a
+    * struct type), converted the way `createDataFrame` converts it.
+    */
+  def literal(v: Any, t: DataType): Column = of(Literal.create(v, t))
+
+  /** `x IN literals` as one `InSet`, built directly: below
+    * `OptimizeIn`'s threshold an `In` stays an inlined chain of
+    * comparisons, while an `InSet` references its value set from the
+    * generated code, so two plans differing only in the set compile to
+    * the same class. No type coercion runs: `x` must already have the
+    * literals' type.
+    */
+  def inSet(x: Column, literals: Seq[Column]): Column =
+    of(InSet(expressionOf(x), literals.map(expressionOf(_).eval()).toSet))
 
   /** Register graft's SQL functions on an ALREADY-RUNNING session (the
     * SparkSessionExtensions path only applies at session construction).

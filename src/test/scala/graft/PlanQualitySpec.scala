@@ -502,11 +502,12 @@ class PlanQualitySpec extends SparkSpec {
     assert(semis >= 2, s"expected >=2 semi joins (lex + sem), got $semis:\n$plan")
   }
 
-  test("merge-on-read delete: the sidecar applies as a BROADCAST " +
-      "anti-join, never a shuffled join or a product") {
+  test("merge-on-read delete: the sidecar applies as a key-set filter, " +
+      "never a join, an exchange or a product") {
     // the whole point of an O(batch) sidecar is that the read-side
     // apply never shuffles the corpus scan — a shuffled anti-join at
-    // 100 TB would cost more than the CoW rewrite the sidecar avoids
+    // 100 TB would cost more than the CoW rewrite the sidecar avoids;
+    // read on the driver, its keys filter the scan with no join at all
     import graft.substrate.{Layout, SnapshotStore}
     val tmp = java.nio.file.Files.createTempDirectory("pq_mor").toString
     try {
@@ -522,23 +523,23 @@ class PlanQualitySpec extends SparkSpec {
       val plan = planOf(SnapshotStore.readAt(spark, tmp, 2L))
       assert(!plan.contains("CartesianProduct"),
         s"product in MoR read:\n$plan")
-      assert(plan.contains("LeftAnti"),
-        s"no anti-join (sidecar apply) in MoR read:\n$plan")
-      assert(plan.contains("BroadcastHashJoin"),
-        s"the sidecar anti-join must broadcast:\n$plan")
+      assert(plan.contains("INSET"),
+        s"no key-set filter (sidecar apply) in MoR read:\n$plan")
+      assert(!plan.contains("Join") && !plan.contains("Exchange"),
+        s"the sidecar must apply without a join or an exchange:\n$plan")
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(tmp)).deleteRecursively()
     }
   }
 
-  test("merge-on-read MERGE read: the era-scoped sidecar still applies " +
-      "as a broadcast anti-join on the base era only — no shuffle, no " +
-      "product, images unjoined") {
+  test("merge-on-read MERGE read: the era-scoped sidecar applies as a " +
+      "key-set filter on the base era only — no join, no shuffle, no " +
+      "product, images unfiltered") {
     // r15: readCore splits the scan into added_v eras; the merge
-    // sidecar must broadcast onto the BASE era while the image era
-    // unions in untouched — a shuffled anti-join or a product here
-    // would price the O(batch) commit back into a corpus shuffle
+    // sidecar must filter the BASE era while the image era unions in
+    // untouched — a join, shuffle or product here would price the
+    // O(batch) commit back into a corpus pass
     import graft.substrate.{Layout, SnapshotStore}
     val tmp = java.nio.file.Files.createTempDirectory("pq_mmor").toString
     try {
@@ -556,13 +557,15 @@ class PlanQualitySpec extends SparkSpec {
       val plan = planOf(SnapshotStore.readAt(spark, tmp, 2L))
       assert(!plan.contains("CartesianProduct"),
         s"product in MoR merge read:\n$plan")
-      assert(plan.contains("LeftAnti") &&
-        plan.contains("BroadcastHashJoin"),
-        s"the merge sidecar must apply as a broadcast anti-join:\n$plan")
-      assert(!plan.contains("SortMergeJoin"),
-        s"the sidecar apply must never shuffle the scan:\n$plan")
+      // one physical Filter node carries the key set: the base era's
+      val keyFilters = plan.linesIterator.count(l =>
+        l.startsWith("Condition : ") && l.contains("INSET"))
+      assert(keyFilters == 1,
+        s"the merge sidecar must filter the base era only:\n$plan")
+      assert(!plan.contains("Join") && !plan.contains("Exchange"),
+        s"the sidecar apply must never join or shuffle the scan:\n$plan")
       assert(plan.contains("Union"),
-        s"the image era must union in unjoined:\n$plan")
+        s"the image era must union in unfiltered:\n$plan")
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(tmp)).deleteRecursively()

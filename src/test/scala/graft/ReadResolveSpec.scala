@@ -9,8 +9,10 @@ import graft.substrate.{Cdc, Layout, SnapshotStore}
 /** Resolving a read is planning, not execution: the store's read paths
   * and `CheckDsl.table` build their DataFrames without starting a Spark
   * job (the parquet schema comes from footers read on the driver), even
-  * when every pending sidecar kind applies. An append commit's manifest
-  * is driver-side metadata too, so appending written files starts none.
+  * when every pending sidecar kind applies. Executing such a read applies
+  * the sidecars as driver-held key sets: no broadcast, one scan job. An
+  * append commit's manifest is driver-side metadata too, so appending
+  * written files starts none.
   */
 class ReadResolveSpec extends SparkSpec {
 
@@ -39,12 +41,25 @@ class ReadResolveSpec extends SparkSpec {
     df
   }
 
+  /** `df`'s rows, asserting its execution planned no broadcast and
+    * started at most `budget` jobs.
+    */
+  private def executed(what: String, budget: Int)(df: DataFrame): DataFrame = {
+    val (rows, jobs) = jobsDuring(df.collect())
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Broadcast"), s"$what planned a broadcast:\n$plan")
+    assert(jobs <= budget, s"$what started $jobs Spark job(s), budget $budget")
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+  }
+
   test("readAt, readAtPoint and readAtWhere resolve without a Spark job " +
       "under two pending merge sidecars and a positional sidecar") {
+    // executing each read plans no broadcast and runs one job, and the
+    // null-key row survives every sidecar
     withStore { tmp =>
       import spark.implicits._
-      val base = (0 until 100).map(i => (i.toLong, (i % 7).toLong))
-        .toDF("k", "v")
+      val base = ((0 until 100).map(i => (Option(i.toLong), (i % 7).toLong))
+        :+ ((None: Option[Long]) -> 5L)).toDF("k", "v")
       Layout.writeClustered(base, s"$tmp/d1", "k", numFiles = 4)
       SnapshotStore.commit(spark, tmp, 1L,
         SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"),
@@ -65,15 +80,39 @@ class ReadResolveSpec extends SparkSpec {
 
       val expected = Cdc.applyChangeLog(
           Cdc.applyChangeLog(base, ch2, Seq("k")), ch3, Seq("k"))
-        .filter(!col("k").between(60, 65))
-      val all = resolved("readAt")(SnapshotStore.readAt(spark, tmp, 4L))
-      val point = resolved("readAtPoint")(
-        SnapshotStore.readAtPoint(spark, tmp, 4L, "k", 12L))
-      val range = resolved("readAtWhere")(
-        SnapshotStore.readAtWhere(spark, tmp, 4L, "k", 0L, 70L))
+        .filter(col("k").isNull || !col("k").between(60, 65))
+      val all = executed("readAt", 1)(
+        resolved("readAt")(SnapshotStore.readAt(spark, tmp, 4L)))
+      val point = executed("readAtPoint", 1)(resolved("readAtPoint")(
+        SnapshotStore.readAtPoint(spark, tmp, 4L, "k", 12L)))
+      val range = executed("readAtWhere", 1)(resolved("readAtWhere")(
+        SnapshotStore.readAtWhere(spark, tmp, 4L, "k", 0L, 70L)))
+      assert(all.filter(col("k").isNull).count() == 1)
       assert(sameRows(all, expected))
       assert(sameRows(point, expected.filter(col("k") === 12L)))
       assert(sameRows(range, expected.filter(col("k").between(0, 70))))
+    }
+  }
+
+  test("a composite-key row with one null key column survives a pending " +
+      "merge sidecar on that key") {
+    withStore { tmp =>
+      import spark.implicits._
+      val base = ((0 until 30).map(i =>
+          (i.toLong, Option((i % 3).toLong), i.toLong * 10)) :+
+        ((5L, None: Option[Long], 99L))).toDF("k", "j", "v")
+      Layout.writeClustered(base, s"$tmp/d1", "k", numFiles = 2)
+      SnapshotStore.commit(spark, tmp, 1L,
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"),
+          Seq("k")))
+      val ch = Seq((5L, 2L, 500L, "U", 1L), (6L, 0L, 0L, "D", 1L),
+        (40L, 1L, 400L, "I", 1L)).toDF("k", "j", "v", "op", "seq")
+      SnapshotStore.mergeCommitMor(spark, tmp, 2L, 1L, Seq("k", "j"), ch,
+        s"$tmp/del2", s"$tmp/img2", 1, "seq", "op")
+      val read = executed("readAt", 1)(SnapshotStore.readAt(spark, tmp, 2L))
+      assert(read.filter(col("k") === 5L && col("j").isNull)
+        .select("v").as[Long].collect().toSeq == Seq(99L))
+      assert(sameRows(read, Cdc.applyChangeLog(base, ch, Seq("k", "j"))))
     }
   }
 
