@@ -1,44 +1,54 @@
 package graft.substrate
 
 import org.apache.spark.sql.{Column, DataFrame, GraftColumn, Row}
+import org.apache.spark.sql.catalyst.analysis.{AnsiTypeCoercion, TypeCoercion}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-/** A driver-held set of key tuples — a pending delete sidecar's keys —
-  * applied to a scan as an IN filter instead of a join. The rows keep
-  * the key columns' own types and a probe casts the scan's columns to
-  * them, except that integral keys and columns all probe as LONG: a
-  * probe never narrows a data column, and an `InSet` over narrower
-  * integers compiles its values into a `switch`, one class per set.
+/** A pending delete sidecar's key tuples as a read applies them to a
+  * scan: a [[KeySet]] held on the driver when the sidecar is small, a
+  * [[KeyFrame]] left in its parquet otherwise. Either way a scan row
+  * whose tuple has a null in any column is never matched: the sidecar
+  * cannot name it.
   */
-private[graft] final case class KeySet(schema: StructType, rows: Seq[Row]) {
+private[graft] sealed trait PendingKeys {
 
-  /** The rows of a scan whose `cols` tuple is NOT in the set. A tuple
-    * with a null in any column survives: the set cannot name it (its own
+  /** The rows of `df` whose `cols` tuple is NOT among the keys. */
+  def hide(df: DataFrame, cols: Seq[String]): DataFrame
+
+  /** The rows of `df` whose `cols` tuple IS among the keys. */
+  def keep(df: DataFrame, cols: Seq[String]): DataFrame
+}
+
+/** Key tuples held on the driver, applied as one `InSet` filter instead
+  * of a join — no broadcast, no extra job, and the generated code does
+  * not depend on the set. A probe compares the scan's column and the key
+  * in their wider type ([[KeySet.probeType]]), so it never narrows the
+  * data.
+  */
+private[graft] final case class KeySet(schema: StructType, rows: Seq[Row])
+    extends PendingKeys {
+
+  def hide(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.filter(cols.map(col(_).isNull).reduce(_ || _) || !includes(df, cols))
+
+  def keep(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.filter(includes(df, cols))
+
+  /** `cols IN set`; a null in any column never matches (the set's own
     * null-bearing rows are dropped, see [[KeySet.literals]]).
     */
-  def excludes(df: DataFrame, cols: Seq[String]): Column =
-    cols.map(col(_).isNull).reduce(_ || _) || !includes(df, cols)
-
-  /** The rows of a scan whose `cols` tuple IS in the set; a null in any
-    * column never matches.
-    */
-  def includes(df: DataFrame, cols: Seq[String]): Column = {
-    val (probe, keys) = cols.zip(schema.fields).map { case (c, f) =>
-      val k =
-        if (KeySet.integral(df.schema(c).dataType) &&
-            KeySet.integral(f.dataType)) f.copy(dataType = LongType)
-        else f
-      (col(c).cast(k.dataType), k) // a same-type cast plans as nothing
-    }.unzip
-    val widened = StructType(keys)
-    val rs = if (widened == schema) rows else rows.map(r =>
-      Row.fromSeq(r.toSeq.zip(keys).map {
-        case (v: Number, StructField(_, LongType, _, _)) => v.longValue
-        case (v, _) => v
-      }))
-    GraftColumn.inSet(if (probe.size == 1) probe.head else struct(probe: _*),
-      KeySet.literals(widened, rs))
+  private def includes(df: DataFrame, cols: Seq[String]): Column = {
+    val probe = StructType(cols.zip(schema.fields).map { case (c, f) =>
+      f.copy(dataType = KeySet.probeType(df.schema(c).dataType, f.dataType))
+    })
+    // a same-type cast plans as nothing
+    val x = cols.zip(probe.fields).map { case (c, f) =>
+      col(c).cast(f.dataType) }
+    val t = if (probe.size == 1) probe.head.dataType else probe
+    GraftColumn.inSet(if (x.size == 1) x.head else struct(x: _*),
+      KeySet.literals(schema, rows), t)
   }
 
   /** The set's leading-column values in ascending order, when that column
@@ -50,11 +60,46 @@ private[graft] final case class KeySet(schema: StructType, rows: Seq[Row]) {
       .map(_.get(0).asInstanceOf[Number].longValue).toArray.sorted)
 }
 
+/** Key tuples too many to hold on the driver (or of a type its metadata
+  * reader does not carry), applied as a broadcast join: the equi-join
+  * never matches a null key, and the analyzer coerces both sides.
+  */
+private[graft] final case class KeyFrame(keys: DataFrame)
+    extends PendingKeys {
+
+  def hide(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.join(broadcast(keys), cols, "left_anti")
+
+  def keep(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.join(broadcast(keys), cols, "semi")
+}
+
 private[graft] object KeySet {
 
   private def integral(t: DataType): Boolean = t match {
     case ByteType | ShortType | IntegerType | LongType => true
     case _ => false
+  }
+
+  /** The type a scan column of type `data` and a key of type `key`
+    * compare in: their wider type under the session's coercion rules —
+    * what an equi-join on them would compare — with every integral type
+    * as LONG, since an `InSet` over narrower integers compiles its values
+    * into a `switch`, one class per set.
+    */
+  private def probeType(data: DataType, key: DataType): DataType = {
+    val wider =
+      if (data == key) Some(key)
+      else if (SQLConf.get.ansiEnabled)
+        AnsiTypeCoercion.findWiderTypeForTwo(data, key)
+      else TypeCoercion.findWiderTypeForTwo(data, key)
+    wider match {
+      case Some(t) if integral(t) => LongType
+      case Some(t) => t
+      case None => throw new IllegalArgumentException(
+        s"a sidecar key of type ${key.simpleString} cannot be compared " +
+          s"with a column of type ${data.simpleString}")
+    }
   }
 
   /** Key rows as typed IN-list literals: a row with a null in any

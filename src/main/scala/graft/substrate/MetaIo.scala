@@ -136,21 +136,14 @@ private[graft] object MetaIo {
     (schema, rows)
   }
 
-  /** The most rows one driver-side read or write of metadata rows may
-    * hold (4M): far past any manifest's file count, and past any pending
-    * sidecar a merge-on-read store keeps between maintenance windows.
-    */
-  val DriverRowCap: Int = 1 << 22
-
   /** Every row of the parquet `files` as Spark (schema, rows) under one
     * merged schema ([[readRowsMerged]]), read on the driver with no Spark
-    * job. The footers come first: when their row counts sum past `cap`
-    * the read fails with `tooMany(count)` before any row is read. None
-    * when a column lies outside the metadata type universe — the caller
-    * reads such files through Spark ([[readParquet]]).
+    * job — or None, before any row is read, when their footers hold more
+    * than `maxRows` rows in all or a column lies outside the metadata
+    * type universe: the caller then reads them through Spark
+    * ([[readParquet]]).
     */
-  def readCapped(conf: Configuration, files: Seq[String], cap: Long)(
-      tooMany: Long => String)
+  def readRowsUpTo(conf: Configuration, files: Seq[String], maxRows: Long)
       : Option[(org.apache.spark.sql.types.StructType,
         Seq[org.apache.spark.sql.Row])] = {
     import scala.jdk.CollectionConverters._
@@ -162,9 +155,8 @@ private[graft] object MetaIo {
           .fromPath(new Path(f), conf)))
       val n = readers.map(_.getFooter.getBlocks.asScala.map(_.getRowCount)
         .sum).sum
-      require(n <= cap, tooMany(n))
-      if (!readers.forall(_.getFooter.getFileMetaData.getSchema.getFields
-          .asScala.forall(sparkType(_).isRight))) None
+      if (n > maxRows || !readers.forall(_.getFooter.getFileMetaData
+          .getSchema.getFields.asScala.forall(sparkType(_).isRight))) None
       else Some(rowsOf(readers.map(rowsFrom).toSeq, files.mkString(",")))
     } finally readers.foreach(_.close())
   }

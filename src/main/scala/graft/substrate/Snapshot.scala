@@ -77,8 +77,8 @@ object SnapshotStore {
   private def claimRows(spark: SparkSession, base: String, version: Long,
       schema: StructType, rows: Seq[Row]): Unit = {
     // a pathological DATA-scale frame must fail loudly instead of
-    // ballooning the driver
-    require(rows.length <= MetaIo.DriverRowCap,
+    // ballooning the driver; 4M rows is far past any real file count
+    require(rows.length <= (1 << 22),
       s"commit() was handed ${rows.length} manifest rows for " +
         s"v=$version under $base — manifests are O(#files) metadata; " +
         "a row count this size means a data frame was passed by mistake")
@@ -301,51 +301,61 @@ object SnapshotStore {
       } yield (PathNorm(f), v))
       .groupBy(_._1).view.mapValues(_.map(_._2).min).toMap
 
-  /** The distinct `cols` tuples of one sidecar's `files`, read on the
-    * driver through [[MetaIo.readCapped]] with no Spark job. The footer
-    * row counts are checked against `cap` before any row is read: past
-    * it the read fails and names [[materializeCommit]], which folds the
-    * pending deletes into data files. A key column outside the metadata
-    * type universe (DATE, DECIMAL, TIME, TIMESTAMP) is collected through
-    * Spark instead, so it keeps its own type.
+  /** The distinct `cols` tuples of one sidecar's `files`. A sidecar
+    * whose footers hold at most [[sidecarKeySetMaxRows]] rows, in the
+    * metadata type universe, is read on the driver through
+    * [[MetaIo.readRowsUpTo]] with no Spark job and becomes a [[KeySet]];
+    * any other stays a [[KeyFrame]] over its parquet, decided from the
+    * footers before any row is read.
     */
   private[graft] def sidecarKeys(spark: SparkSession, files: Seq[String],
-      cols: Seq[String], cap: Long = MetaIo.DriverRowCap): KeySet =
-    MetaIo.readCapped(spark.sparkContext.hadoopConfiguration, files, cap)(
-      n => s"the pending sidecar ${files.mkString(", ")} holds $n rows, " +
-        s"past the $cap rows a read applies as a driver-side key set — " +
-        "materialize the pending deletes first (materializeCommit)") match {
+      cols: Seq[String]): PendingKeys =
+    MetaIo.readRowsUpTo(spark.sparkContext.hadoopConfiguration, files,
+        sidecarKeySetMaxRows) match {
       case Some((schema, rows)) =>
         val at = cols.map(schema.fieldIndex)
         KeySet(StructType(at.map(schema(_))),
           rows.map(r => Row.fromSeq(at.map(r.get))).distinct)
       case None =>
-        val df = MetaIo.readParquet(spark, files, mergeSchema = false)
-          .select(cols.map(col): _*).distinct()
-        KeySet(df.schema, df.collect().toSeq)
+        KeyFrame(MetaIo.readParquet(spark, files, mergeSchema = false)
+          .select(cols.map(col): _*).distinct())
     }
+
+  /** The most rows a pending sidecar may hold and still apply as a
+    * driver-held [[KeySet]]. Its cost grows with the set (a driver read,
+    * a literal per key, and an `InSet` whose plan string lists every
+    * key), while a broadcast join's barely moves: over a 4M-row store
+    * under one delete sidecar on 4 cores (median of 5 reads), the key set
+    * reads as fast up to 2,000 keys and its change feed faster, but at
+    * 4,000 keys the read is slower (276 vs 237 ms), at 8,000 clearly
+    * (415 vs 235 ms), and at 100k ten times (4.4 vs 0.45 s). A var ONLY
+    * as a test seam; production never writes it.
+    */
+  private[graft] var sidecarKeySetMaxRows: Long = 2048
 
   /** The key sets of one read, each sidecar's read once however many
     * era scans, steps or candidate frames apply it.
     */
   private final class SidecarKeys(spark: SparkSession) {
-    private val read =
-      scala.collection.mutable.Map.empty[(Seq[String], Seq[String]), KeySet]
-    def apply(files: Seq[String], cols: Seq[String]): KeySet =
+    private val read = scala.collection.mutable.Map
+      .empty[(Seq[String], Seq[String]), PendingKeys]
+    def apply(files: Seq[String], cols: Seq[String]): PendingKeys =
       read.getOrElseUpdate((files, cols), sidecarKeys(spark, files, cols))
   }
 
   /** The shared READ CORE under pending sidecars: scan `files` (the
     * version's data files, possibly pruned) and apply every pending
-    * sidecar as a KEY-SET FILTER at its scope. Each sidecar's keys are
-    * read once per read on the driver ([[sidecarKeys]], capped at
-    * [[MetaIo.DriverRowCap]] rows from the footers) and applied as one
-    * `InSet`, so no join, broadcast or extra job runs:
+    * sidecar at its scope. Each sidecar's keys are resolved once per read
+    * ([[sidecarKeys]]): a small sidecar's keys are read on the driver and
+    * applied as one `InSet` filter, so no join, broadcast or extra job
+    * runs —
     *  - single key: `k IS NULL OR NOT k IN set`;
     *  - composite key: any key column null, `OR NOT struct(keys) IN set`;
-    *  - positional: `NOT struct(_graft_file, _graft_pos) IN set`.
-    * A row whose key is NULL (in ANY column of a composite key) survives:
-    * a key set cannot name it. The scan splits into ERAS grouped by the
+    *  - positional: `NOT struct(_graft_file, _graft_pos) IN set` —
+    * and a larger one applies as a broadcast anti-join (sidecars are
+    * O(batch) by construction, so neither form shuffles the scan). A row
+    * whose key is NULL (in ANY column of a composite key) survives: a key
+    * set cannot name it. The scan splits into ERAS grouped by the
     * SET of sidecars that apply (O(pending sidecars) scans however long
     * the append chain): a merge sidecar skips files added at or after its
     * commit, so its own images and later appends serve while superseded
@@ -386,20 +396,20 @@ object SnapshotStore {
         MetaIo.readParquet(spark, fs, merge))) {
         (df, d) =>
           if (!d.keys.forall(df.columns.contains)) df
-          else df.filter(keys(d.files, d.keys).excludes(df, d.keys))
+          else keys(d.files, d.keys).hide(df, d.keys)
       }
     }.reduce(_.unionByName(_, allowMissingColumns = true))
     val applied =
       if (posFiles.isEmpty) scan
-      else scan.filter(keys(posFiles, PosCols).excludes(scan, PosCols))
+      else keys(posFiles, PosCols).hide(scan, PosCols)
     if (keepPos || posFiles.isEmpty) applied
     else applied.drop(PosCols: _*)
   }
 
   /** [[readCore]] straight off a version's manifest groups: each pending
-    * sidecar's keys read once on the driver (capped at
-    * [[MetaIo.DriverRowCap]] rows) and applied as a key-set filter, a
-    * null key surviving.
+    * sidecar's keys resolved once and applied as a key-set filter (a
+    * broadcast anti-join past [[sidecarKeySetMaxRows]]), a null key
+    * surviving.
     */
   private def readWithDeletes(spark: SparkSession, gs: Seq[Group],
       files: Seq[String], mergeSchema: Boolean): DataFrame =
@@ -1129,8 +1139,10 @@ object SnapshotStore {
       }
     }
 
-  /** DISTRIBUTED coverage prune of a caller's key batch
-    * ([[deleteCommitPos]]) — the batch never leaves the executors. Two aggregates: the leading key's global [min, max], then
+  /** DISTRIBUTED coverage prune of a key batch too large for the driver
+    * (a caller's batch in [[deleteCommitPos]], a [[KeyFrame]] sidecar in
+    * [[readChangesBetween]]) — the batch never leaves the executors. Two
+    * aggregates: the leading key's global [min, max], then
     * the OCCUPIED BINS of a fixed grid over that span — at most nBins
     * longs (min 1024, cap 2^20, sized to the candidate count) reach the
     * driver. A candidate survives when an occupied bin overlaps its
@@ -1535,13 +1547,14 @@ object SnapshotStore {
     * Composition, step by step (v-1 → v), all from manifest metadata:
     * the OLD candidates are v-1's logical rows in files v REMOVED, plus —
     * when v committed a new sidecar — v-1's logical rows in CARRIED files
-    * the sidecar hides. Every sidecar's keys are read once per call on
-    * the driver and applied as key-set filters under [[readCore]]'s null
-    * discipline and cap: a new equality sidecar keeps the carried files
-    * whose bounds contain one of its keys (one binary search per file, so
-    * a clustered store scans O(matching range) files) and their rows
-    * whose key is IN its set; a new positional sidecar's rows name its
-    * files and the (file, position) pairs to keep. The NEW candidates are
+    * the sidecar hides. Every sidecar's keys are resolved once per call
+    * ([[sidecarKeys]]) and applied under [[readCore]]'s null discipline:
+    * a new equality sidecar keeps the carried files whose bounds contain
+    * one of its keys (a driver-held set: one binary search per file; a
+    * larger one: [[pruneByKeyCoverage]]), so a clustered store scans
+    * O(matching range) files, and their rows whose key is IN its set; a
+    * new positional sidecar's rows name its files and the (file,
+    * position) pairs to keep. The NEW candidates are
     * v's logical rows in files v ADDED. A keyed full-outer diff classifies:
     * only new → insert; only old → delete; a non-key change → pre- and
     * postimage; identical → nothing (so a compaction emits no event).
@@ -1569,7 +1582,7 @@ object SnapshotStore {
     require(committed.contains(fromV) && committed.contains(toV),
       s"versions $fromV and $toV must both be committed under $base")
     val steps = committed.filter(v => v > fromV && v <= toV)
-    // one driver-side read per sidecar for the whole window: a pending
+    // one resolution per sidecar for the whole window: a pending
     // sidecar applies to every step until materialized
     val keys = new SidecarKeys(spark)
     val frames = steps.flatMap { v =>
@@ -1623,9 +1636,14 @@ object SnapshotStore {
         // other keeps every carried file), their logical v-1 rows
         // filtered to the sidecar's key set
         val oldFromCarried = newSidecars.headOption.flatMap { d =>
+          val bounds = boundsOfGroups(gsP, d.keys.head)
           val ks = keys(d.files, d.keys)
-          val hit = ks.sortedLeading.fold(carried)(filesCovering(
-            boundsOfGroups(gsP, d.keys.head), carried, _))
+          val hit = ks match {
+            case s: KeySet =>
+              s.sortedLeading.fold(carried)(filesCovering(bounds, carried, _))
+            case KeyFrame(k) =>
+              pruneByKeyCoverage(spark, k, d.keys.head, bounds, carried)
+          }
           if (hit.isEmpty) None
           else {
             val scan = readCore(spark, keys, delsP, addedVP, hit,
@@ -1633,7 +1651,7 @@ object SnapshotStore {
             // carried files that entirely predate the sidecar's key
             // column(s) cannot hold matching rows (the null discipline)
             if (!d.keys.forall(scan.columns.contains)) None
-            else Some(scan.filter(ks.includes(scan, d.keys)))
+            else Some(ks.keep(scan, d.keys))
           }
         }
         // carried rows a NEW positional sidecar hides: its rows name the
@@ -1643,13 +1661,17 @@ object SnapshotStore {
           if (newPos.isEmpty) None
           else {
             val ks = keys(newPos, PosCols)
-            val named = ks.rows.map(r => PathNorm(r.getString(0))).toSet
+            val named = (ks match {
+              case s: KeySet => s.rows.map(_.getString(0))
+              case KeyFrame(k) => k.select(PosCols.head).distinct().collect()
+                .map(_.getString(0)).toSeq
+            }).map(PathNorm(_)).toSet
             val hitFiles = carried.filter(f => named(PathNorm(f)))
             if (hitFiles.isEmpty) None
             else {
               val scan = readCore(spark, keys, delsP, addedVP, hitFiles,
                 mergeSchema = true, posP, keepPos = true)
-              Some(scan.filter(ks.includes(scan, PosCols)).drop(PosCols: _*))
+              Some(ks.keep(scan, PosCols).drop(PosCols: _*))
             }
           }
         val oldCand = (oldFromRemoved.toSeq ++ oldFromCarried.toSeq ++

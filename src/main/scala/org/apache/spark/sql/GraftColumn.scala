@@ -1,7 +1,9 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, InSet, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, InSet,
+  Literal}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.DataType
 
 /** Bridge between graft's native Catalyst expressions and the public Column
@@ -22,11 +24,14 @@ object GraftColumn {
     * `OptimizeIn`'s threshold an `In` stays an inlined chain of
     * comparisons, while an `InSet` references its value set from the
     * generated code, so two plans differing only in the set compile to
-    * the same class. No type coercion runs: `x` must already have the
-    * literals' type.
+    * the same class. No type coercion runs: `x` must have type `t`, and
+    * each literal is cast to `t` in the session's time zone.
     */
-  def inSet(x: Column, literals: Seq[Column]): Column =
-    of(InSet(expressionOf(x), literals.map(expressionOf(_).eval()).toSet))
+  def inSet(x: Column, literals: Seq[Column], t: DataType): Column = {
+    val tz = Option(SQLConf.get.sessionLocalTimeZone)
+    of(InSet(expressionOf(x),
+      literals.map(l => Cast(expressionOf(l), t, tz).eval()).toSet))
+  }
 
   /** Register graft's SQL functions on an ALREADY-RUNNING session (the
     * SparkSessionExtensions path only applies at session construction).

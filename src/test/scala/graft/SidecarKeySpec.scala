@@ -6,13 +6,15 @@ import org.apache.spark.sql.functions._
 import graft.substrate.{Cdc, Layout, SnapshotStore}
 
 /** A pending sidecar's keys are read on the driver before a read applies
-  * them: the read is bounded by the footers' row counts before any row
-  * is read, and a key column whose parquet type carries a logical
-  * annotation (DATE, DECIMAL) keeps its own type through the read.
+  * them when its footers' row counts are within the key-set bound; past
+  * it, the sidecar applies as a broadcast join with the same results. A
+  * key compares with the data in their wider type, and a key column whose
+  * parquet type carries a logical annotation (DATE, DECIMAL) keeps its
+  * own type through the read.
   */
 class SidecarKeySpec extends SparkSpec {
 
-  private def withDir(f: String => Unit): Unit = {
+  private def withDir[A](f: String => A): A = {
     val tmp = java.nio.file.Files.createTempDirectory("sidecar").toString
     try f(tmp)
     finally {
@@ -24,7 +26,16 @@ class SidecarKeySpec extends SparkSpec {
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
-  test("the key-set cap fires from the footer row counts alone") {
+  /** Runs `f` with [[SnapshotStore.sidecarKeySetMaxRows]] at `max`. */
+  private def withKeySetMax[A](max: Long)(f: => A): A = {
+    val was = SnapshotStore.sidecarKeySetMaxRows
+    SnapshotStore.sidecarKeySetMaxRows = max
+    try f
+    finally SnapshotStore.sidecarKeySetMaxRows = was
+  }
+
+  test("a sidecar past the key-set bound is left in its parquet, " +
+      "decided from the footer row counts alone") {
     withDir { tmp =>
       import spark.implicits._
       (0 until 10).map(_.toLong).toDF("k").coalesce(1)
@@ -41,14 +52,90 @@ class SidecarKeySpec extends SparkSpec {
       java.nio.file.Files.write(file.toPath, bytes)
       dir.listFiles().filter(_.getName.endsWith(".crc")).foreach(_.delete())
 
-      val capped = intercept[IllegalArgumentException](SnapshotStore
-        .sidecarKeys(spark, Seq(file.getPath), Seq("k"), cap = 5))
-      assert(capped.getMessage.contains("holds 10 rows"))
-      assert(capped.getMessage.contains("materializeCommit"))
-      // under the cap the same read reaches the zeroed rows and fails there
-      val read = intercept[Exception](SnapshotStore
-        .sidecarKeys(spark, Seq(file.getPath), Seq("k"), cap = 100))
-      assert(!Option(read.getMessage).exists(_.contains("materializeCommit")))
+      val past = withKeySetMax(5)(
+        SnapshotStore.sidecarKeys(spark, Seq(file.getPath), Seq("k")))
+      assert(past.isInstanceOf[graft.substrate.KeyFrame])
+      // under the bound the same call reads the zeroed rows and fails
+      intercept[Exception](withKeySetMax(100)(
+        SnapshotStore.sidecarKeys(spark, Seq(file.getPath), Seq("k"))))
+    }
+  }
+
+  test("delete sidecars accumulated past the key-set bound read, feed " +
+      "and materialize as under it") {
+    import spark.implicits._
+    val base = (0 until 100).map(i => (i.toLong, i.toLong * 10))
+      .toDF("k", "v")
+    // two delete sidecars on `k` form one 8-key set, then a positional
+    // sidecar and a merge sidecar
+    val gone = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 13L, 20L, 21L, 22L, 31L)
+    val ch = Seq((30L, 300L, "U", 1L), (31L, 0L, "D", 1L),
+      (200L, 2000L, "I", 1L)).toDF("k", "v", "op", "seq")
+    val expected = Cdc.applyChangeLog(base, ch, Seq("k"))
+      .filter(!col("k").isin(gone: _*))
+    def run(max: Long) = withKeySetMax(max) {
+      withDir { tmp =>
+        Layout.writeClustered(base, s"$tmp/d1", "k", numFiles = 4)
+        SnapshotStore.commit(spark, tmp, 1L,
+          SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"),
+            Seq("k")))
+        SnapshotStore.deleteCommitMor(spark, tmp, 2L, 1L, "k",
+          Seq(1L, 2L, 3L, 4L).toDF("k"), s"$tmp/del2")
+        SnapshotStore.deleteCommitMor(spark, tmp, 3L, 2L, "k",
+          Seq(10L, 11L, 12L, 13L).toDF("k"), s"$tmp/del3")
+        SnapshotStore.deleteCommitPos(spark, tmp, 4L, 3L, "k",
+          Seq(20L, 21L, 22L).toDF("k"), s"$tmp/pos4")
+        SnapshotStore.mergeCommitMor(spark, tmp, 5L, 4L, "k", ch,
+          s"$tmp/del5", s"$tmp/img5")
+        val read = SnapshotStore.readAt(spark, tmp, 5L)
+        assert(sameRows(read, expected))
+        val plan = read.queryExecution.executedPlan.toString
+        val feed = SnapshotStore.readChangesBetween(spark, tmp, 1L, 5L, "k")
+          .orderBy("_commit_version", "k", "_change_type").collect()
+        SnapshotStore.materializeCommit(spark, tmp, 6L, 5L, "k",
+          s"$tmp/m6", numFiles = 2)
+        assert(sameRows(SnapshotStore.readAt(spark, tmp, 6L), expected))
+        assert(SnapshotStore.countAt(spark, tmp, 6L) == expected.count())
+        (read.orderBy("k").collect(), plan, feed)
+      }
+    }
+    val (under, underPlan, underFeed) = run(SnapshotStore.sidecarKeySetMaxRows)
+    val (past, pastPlan, pastFeed) = run(5)
+    assert(!underPlan.contains("Join"), underPlan)
+    assert(pastPlan.contains("BroadcastHashJoin") &&
+      pastPlan.contains("LeftAnti"), pastPlan)
+    assert(past.toSeq == under.toSeq)
+    assert(pastFeed.toSeq == underFeed.toSeq)
+    assert(underFeed.count(_.getAs[String]("_change_type") == "delete") ==
+      gone.size)
+  }
+
+  test("a key probes a column of another type in their wider type") {
+    withDir { tmp =>
+      import spark.implicits._
+      // LONG keys over a DECIMAL column (a driver-held key set) and DATE
+      // keys over a TIMESTAMP column (past the metadata type universe):
+      // 5.50 and noon are not the keys 5 and the day, and stay
+      val base = Seq((1L, "5.00", "2024-01-01 00:00:00"),
+          (2L, "5.50", "2024-01-01 12:00:00"),
+          (3L, "6.00", "2024-01-03 00:00:00"),
+          (4L, "6.25", "2024-01-03 06:00:00"))
+        .toDF("id", "p", "t")
+        .select(col("id"), col("p").cast("decimal(12,2)").as("p"),
+          col("t").cast("timestamp").as("t"))
+      Layout.writeClustered(base, s"$tmp/d1", "id", numFiles = 1)
+      SnapshotStore.commit(spark, tmp, 1L,
+        SnapshotStore.manifestForStats(spark, 1L, Seq(s"$tmp/d1"),
+          Seq("id")))
+      def ids(v: Long): Seq[Long] = SnapshotStore.readAt(spark, tmp, v)
+        .select("id").as[Long].collect().sorted.toSeq
+      SnapshotStore.deleteCommitMor(spark, tmp, 2L, 1L, "p",
+        Seq(5L).toDF("p"), s"$tmp/del2")
+      assert(ids(2L) == Seq(2L, 3L, 4L))
+      SnapshotStore.deleteCommitMor(spark, tmp, 3L, 2L, "t",
+        Seq("2024-01-03").toDF("t").select(col("t").cast("date").as("t")),
+        s"$tmp/del3")
+      assert(ids(3L) == Seq(2L, 4L))
     }
   }
 
