@@ -1118,11 +1118,11 @@ object VectorTier {
           .localCheckpoint(true)
         val asg1 = assign(eu).localCheckpoint(true)
         val updIds = asg0.filter(col("cell") % 5 === 0).select("vec_id")
-        // the changed-cell set stays a DATAFRAME end-to-end (r13 —
-        // VERDICT r12 next #4): at drift scale it is (drifted fraction ×
-        // #cells) ids, which must never become an isin literal tree or
-        // a driver collect; the share split inside publishIncremental is
-        // a broadcast anti-join against the ancestor's manifest table
+        // the changed cells: the updated rows' old ∪ new cells. The
+        // codes stay a semi-join; the ids are collected, since the
+        // ancestor's clustered manifest — at least one row per cell — is
+        // already driver-side in publishIncremental, so the cell set is
+        // never the larger side
         val changedCells = asg0.filter(col("cell") % 5 === 0).select("cell")
           .unionAll(asg1.join(updIds, Seq("vec_id")).select("cell"))
           .distinct().localCheckpoint(true)
@@ -1131,7 +1131,8 @@ object VectorTier {
           PqIndex.encode(eu, "vec_id", "v", cb, dim = 64)
             .join(asg1, Seq("vec_id"))
             .join(changedCells, Seq("cell"), "left_semi"),
-          changedCells)
+          changedCells.select(col("cell").cast("long")).collect()
+            .map(_.getLong(0)).toSeq)
         val a = VectorArtifact.loadLatest(spark, tmp)
         require(a.version == 1L && a.sourceVersion.contains(0L),
           s"v1 must carry provenance source_version=0, got ${a.sourceVersion}")

@@ -301,38 +301,6 @@ object SnapshotStore {
       } yield (PathNorm(f), v))
       .groupBy(_._1).view.mapValues(_.map(_._2).min).toMap
 
-  /** The distinct `cols` tuples of one sidecar's `files`. A sidecar
-    * whose footers hold at most [[sidecarKeySetMaxRows]] rows, in the
-    * metadata type universe, is read on the driver through
-    * [[MetaIo.readRowsUpTo]] with no Spark job and becomes a [[KeySet]];
-    * any other stays a [[KeyFrame]] over its parquet, decided from the
-    * footers before any row is read.
-    */
-  private[graft] def sidecarKeys(spark: SparkSession, files: Seq[String],
-      cols: Seq[String]): PendingKeys =
-    MetaIo.readRowsUpTo(spark.sparkContext.hadoopConfiguration, files,
-        sidecarKeySetMaxRows) match {
-      case Some((schema, rows)) =>
-        val at = cols.map(schema.fieldIndex)
-        KeySet(StructType(at.map(schema(_))),
-          rows.map(r => Row.fromSeq(at.map(r.get))).distinct)
-      case None =>
-        KeyFrame(MetaIo.readParquet(spark, files, mergeSchema = false)
-          .select(cols.map(col): _*).distinct())
-    }
-
-  /** The most rows a pending sidecar may hold and still apply as a
-    * driver-held [[KeySet]]. Its cost grows with the set (a driver read,
-    * a literal per key, and an `InSet` whose plan string lists every
-    * key), while a broadcast join's barely moves: over a 4M-row store
-    * under one delete sidecar on 4 cores (median of 5 reads), the key set
-    * reads as fast up to 2,000 keys and its change feed faster, but at
-    * 4,000 keys the read is slower (276 vs 237 ms), at 8,000 clearly
-    * (415 vs 235 ms), and at 100k ten times (4.4 vs 0.45 s). A var ONLY
-    * as a test seam; production never writes it.
-    */
-  private[graft] var sidecarKeySetMaxRows: Long = 2048
-
   /** The key sets of one read, each sidecar's read once however many
     * era scans, steps or candidate frames apply it.
     */
@@ -340,15 +308,16 @@ object SnapshotStore {
     private val read = scala.collection.mutable.Map
       .empty[(Seq[String], Seq[String]), PendingKeys]
     def apply(files: Seq[String], cols: Seq[String]): PendingKeys =
-      read.getOrElseUpdate((files, cols), sidecarKeys(spark, files, cols))
+      read.getOrElseUpdate((files, cols),
+        PendingKeys.sidecarKeys(spark, files, cols))
   }
 
   /** The shared READ CORE under pending sidecars: scan `files` (the
     * version's data files, possibly pruned) and apply every pending
     * sidecar at its scope. Each sidecar's keys are resolved once per read
-    * ([[sidecarKeys]]): a small sidecar's keys are read on the driver and
-    * applied as one `InSet` filter, so no join, broadcast or extra job
-    * runs —
+    * ([[PendingKeys.sidecarKeys]]): a small sidecar's keys are read on the
+    * driver and applied as one `InSet` filter, so no join, broadcast or
+    * extra job runs —
     *  - single key: `k IS NULL OR NOT k IN set`;
     *  - composite key: any key column null, `OR NOT struct(keys) IN set`;
     *  - positional: `NOT struct(_graft_file, _graft_pos) IN set` —
@@ -408,8 +377,8 @@ object SnapshotStore {
 
   /** [[readCore]] straight off a version's manifest groups: each pending
     * sidecar's keys resolved once and applied as a key-set filter (a
-    * broadcast anti-join past [[sidecarKeySetMaxRows]]), a null key
-    * surviving.
+    * broadcast anti-join past [[PendingKeys.sidecarKeySetMaxRows]]), a
+    * null key surviving.
     */
   private def readWithDeletes(spark: SparkSession, gs: Seq[Group],
       files: Seq[String], mergeSchema: Boolean): DataFrame =
@@ -1548,12 +1517,12 @@ object SnapshotStore {
     * the OLD candidates are v-1's logical rows in files v REMOVED, plus —
     * when v committed a new sidecar — v-1's logical rows in CARRIED files
     * the sidecar hides. Every sidecar's keys are resolved once per call
-    * ([[sidecarKeys]]) and applied under [[readCore]]'s null discipline:
-    * a new equality sidecar keeps the carried files whose bounds contain
-    * one of its keys (a driver-held set: one binary search per file; a
-    * larger one: [[pruneByKeyCoverage]]), so a clustered store scans
-    * O(matching range) files, and their rows whose key is IN its set; a
-    * new positional sidecar's rows name its files and the (file,
+    * ([[PendingKeys.sidecarKeys]]) and applied under [[readCore]]'s null
+    * discipline: a new equality sidecar keeps the carried files whose
+    * bounds contain one of its keys (a driver-held set: one binary search
+    * per file; a larger one: [[pruneByKeyCoverage]]), so a clustered store
+    * scans O(matching range) files, and their rows whose key is IN its
+    * set; a new positional sidecar's rows name its files and the (file,
     * position) pairs to keep. The NEW candidates are
     * v's logical rows in files v ADDED. A keyed full-outer diff classifies:
     * only new → insert; only old → delete; a non-key change → pre- and

@@ -572,33 +572,75 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  /** A clustered 150×16 vector store at `tmp` whose v1 forgets every
+    * tenth vector through a merge-on-read sidecar (15 keys).
+    */
+  private def vectorStoreWithSidecar(tmp: String): Unit = {
+    import graft.substrate.{IvfPq, PqIndex, VectorArtifact}
+    val e = spark.range(150).select(col("id").as("vec_id"),
+      org.apache.spark.sql.functions.transform(
+        org.apache.spark.sql.functions.sequence(lit(0), lit(15)),
+        j => sin(col("id") * (j + lit(1)) * lit(0.37))).as("v"))
+      .localCheckpoint(true)
+    val cents = IvfPq.servingCentroids(e, centroidMod = 7)
+    val cb = PqIndex.codebookArrays(
+      PqIndex.codebooks(e, "vec_id", "v", dim = 16))
+    val asg = IvfPq.probeCellsFrom(cents, e, "vec_id", "v", nProbe = 1)
+      .select(col("qid").as("vec_id"), col("cell"))
+    val codes = PqIndex.encode(e, "vec_id", "v", cb, dim = 16)
+      .join(asg, Seq("vec_id"))
+    VectorArtifact.saveClustered(spark, tmp, 0L, 16, cents, cb, codes)
+    import spark.implicits._
+    VectorArtifact.deletePublishMor(spark, tmp, 1L, 0L,
+      (0L until 150L by 10L).toDF("vec_id"))
+  }
+
+  /** The plans of v1's full-ADC (`load`) and pruned (`codesForCells`)
+    * codes scans.
+    */
+  private def vectorServePlans(tmp: String): Seq[String] = {
+    import graft.substrate.VectorArtifact
+    val cells = VectorArtifact.readManifest(spark, tmp, 1L).flatMap(_._2)
+    Seq(planOf(VectorArtifact.load(spark, tmp, 1L).codes),
+      planOf(VectorArtifact.codesForCells(spark, tmp, 1L, cells.take(3))))
+  }
+
   test("vector MoR forget: the sidecar applies to the codes scan as a " +
       "broadcast anti-join — full-ADC and pruned serves alike") {
-    import graft.substrate.{IvfPq, PqIndex, VectorArtifact}
+    // past the key-set bound (forced to 0 here) the sidecar stays in its
+    // parquet and joins the scan's broadcast side
+    import graft.substrate.PendingKeys
     val tmp = java.nio.file.Files.createTempDirectory("pq_vmor").toString
+    val was = PendingKeys.sidecarKeySetMaxRows
     try {
-      val e = spark.range(150).select(col("id").as("vec_id"),
-        org.apache.spark.sql.functions.transform(
-          org.apache.spark.sql.functions.sequence(lit(0), lit(15)),
-          j => sin(col("id") * (j + lit(1)) * lit(0.37))).as("v"))
-        .localCheckpoint(true)
-      val cents = IvfPq.servingCentroids(e, centroidMod = 7)
-      val cb = PqIndex.codebookArrays(
-        PqIndex.codebooks(e, "vec_id", "v", dim = 16))
-      val asg = IvfPq.probeCellsFrom(cents, e, "vec_id", "v", nProbe = 1)
-        .select(col("qid").as("vec_id"), col("cell"))
-      val codes = PqIndex.encode(e, "vec_id", "v", cb, dim = 16)
-        .join(asg, Seq("vec_id"))
-      VectorArtifact.saveClustered(spark, tmp, 0L, 16, cents, cb, codes)
-      import spark.implicits._
-      VectorArtifact.deletePublishMor(spark, tmp, 1L, 0L,
-        (0L until 150L by 10L).toDF("vec_id"))
-      val plan = planOf(VectorArtifact.load(spark, tmp, 1L).codes)
-      assert(!plan.contains("CartesianProduct") &&
-        plan.contains("LeftAnti") && plan.contains("BroadcastHashJoin"),
-        s"vector sidecar must broadcast-anti-join the codes scan:\n$plan")
-      assert(!plan.contains("SortMergeJoin"),
-        s"the sidecar apply must never shuffle the codes scan:\n$plan")
+      vectorStoreWithSidecar(tmp)
+      PendingKeys.sidecarKeySetMaxRows = 0
+      vectorServePlans(tmp).foreach { plan =>
+        assert(!plan.contains("CartesianProduct") &&
+          plan.contains("LeftAnti") && plan.contains("BroadcastHashJoin"),
+          s"vector sidecar must broadcast-anti-join the codes scan:\n$plan")
+        assert(!plan.contains("SortMergeJoin"),
+          s"the sidecar apply must never shuffle the codes scan:\n$plan")
+      }
+    } finally {
+      PendingKeys.sidecarKeySetMaxRows = was
+      import scala.reflect.io.Directory
+      new Directory(new java.io.File(tmp)).deleteRecursively()
+    }
+  }
+
+  test("vector MoR forget: a sidecar within the key-set bound filters the " +
+      "codes scan with one key set — no join, no shuffle") {
+    val tmp = java.nio.file.Files.createTempDirectory("pq_vset").toString
+    try {
+      vectorStoreWithSidecar(tmp)
+      vectorServePlans(tmp).foreach { plan =>
+        assert(plan.linesIterator.count(l =>
+          l.startsWith("Condition : ") && l.contains("INSET")) == 1,
+          s"one key-set filter must carry the sidecar:\n$plan")
+        assert(!plan.contains("Join") && !plan.contains("Exchange"),
+          s"the sidecar apply must never join or shuffle the scan:\n$plan")
+      }
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(tmp)).deleteRecursively()

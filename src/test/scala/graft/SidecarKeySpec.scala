@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.substrate.{Cdc, Layout, SnapshotStore}
+import graft.substrate.{Cdc, IvfPq, Layout, PathNorm, PendingKeys, PqIndex,
+  SnapshotStore, VectorArtifact}
 
 /** A pending sidecar's keys are read on the driver before a read applies
   * them when its footers' row counts are within the key-set bound; past
@@ -26,12 +27,12 @@ class SidecarKeySpec extends SparkSpec {
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
-  /** Runs `f` with [[SnapshotStore.sidecarKeySetMaxRows]] at `max`. */
+  /** Runs `f` with [[PendingKeys.sidecarKeySetMaxRows]] at `max`. */
   private def withKeySetMax[A](max: Long)(f: => A): A = {
-    val was = SnapshotStore.sidecarKeySetMaxRows
-    SnapshotStore.sidecarKeySetMaxRows = max
+    val was = PendingKeys.sidecarKeySetMaxRows
+    PendingKeys.sidecarKeySetMaxRows = max
     try f
-    finally SnapshotStore.sidecarKeySetMaxRows = was
+    finally PendingKeys.sidecarKeySetMaxRows = was
   }
 
   test("a sidecar past the key-set bound is left in its parquet, " +
@@ -53,11 +54,11 @@ class SidecarKeySpec extends SparkSpec {
       dir.listFiles().filter(_.getName.endsWith(".crc")).foreach(_.delete())
 
       val past = withKeySetMax(5)(
-        SnapshotStore.sidecarKeys(spark, Seq(file.getPath), Seq("k")))
+        PendingKeys.sidecarKeys(spark, Seq(file.getPath), Seq("k")))
       assert(past.isInstanceOf[graft.substrate.KeyFrame])
       // under the bound the same call reads the zeroed rows and fails
       intercept[Exception](withKeySetMax(100)(
-        SnapshotStore.sidecarKeys(spark, Seq(file.getPath), Seq("k"))))
+        PendingKeys.sidecarKeys(spark, Seq(file.getPath), Seq("k"))))
     }
   }
 
@@ -99,7 +100,7 @@ class SidecarKeySpec extends SparkSpec {
         (read.orderBy("k").collect(), plan, feed)
       }
     }
-    val (under, underPlan, underFeed) = run(SnapshotStore.sidecarKeySetMaxRows)
+    val (under, underPlan, underFeed) = run(PendingKeys.sidecarKeySetMaxRows)
     val (past, pastPlan, pastFeed) = run(5)
     assert(!underPlan.contains("Join"), underPlan)
     assert(pastPlan.contains("BroadcastHashJoin") &&
@@ -108,6 +109,60 @@ class SidecarKeySpec extends SparkSpec {
     assert(pastFeed.toSeq == underFeed.toSeq)
     assert(underFeed.count(_.getAs[String]("_change_type") == "delete") ==
       gone.size)
+  }
+
+  test("vector delete sidecars load, prune and materialize alike under " +
+      "and past the key-set bound") {
+    val dim = 16
+    val e = spark.range(150).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(dim - 1)),
+        j => sin(col("id") * (j + lit(1)) * lit(0.37))).as("v"))
+      .localCheckpoint(true)
+    val cents = IvfPq.servingCentroids(e, centroidMod = 7)
+      .localCheckpoint(true)
+    val cb = Array.tabulate(8, 16)((s, c) =>
+      Array(math.sin(s * 1.3 + c * 0.41), math.cos(s * 0.7 + c * 0.53)))
+    val codes = PqIndex.encode(e, "vec_id", "v", cb, dim = dim)
+      .join(IvfPq.probeCellsFrom(cents, e, "vec_id", "v", nProbe = 1)
+        .select(col("qid").as("vec_id"), col("cell")), Seq("vec_id"))
+      .localCheckpoint(true)
+    val cells = codes.select("cell").distinct().orderBy("cell")
+      .collect().map(_.getLong(0)).toSeq.take(4)
+    def rows(df: DataFrame): Seq[String] =
+      df.orderBy("vec_id").collect().map(_.toSeq.mkString(":")).toSeq
+    def run(max: Long) = withKeySetMax(max) {
+      withDir { tmp =>
+        import spark.implicits._
+        VectorArtifact.saveClustered(spark, tmp, 0L, dim, cents, cb,
+          codes.filter(col("vec_id") < 120))
+        VectorArtifact.appendPublish(spark, tmp, 1L, 0L, dim, cents, cb,
+          codes.filter(col("vec_id") >= 120))
+        // two chained sidecars hold 30 keys between them
+        VectorArtifact.deletePublishMor(spark, tmp, 2L, 1L,
+          (0L until 150L by 10L).toDF("vec_id"))
+        VectorArtifact.deletePublishMor(spark, tmp, 3L, 2L,
+          (5L until 150L by 10L).toDF("vec_id"))
+        val loaded = VectorArtifact.load(spark, tmp, 3L).codes
+        val plan = loaded.queryExecution.executedPlan.toString
+        val pruned = rows(VectorArtifact.codesForCells(spark, tmp, 3L, cells))
+        VectorArtifact.compactPublish(spark, tmp, 4L, 3L)
+        val manifest = VectorArtifact.readManifestFull(spark, tmp, 4L)
+          .map { case (f, c, k) => (PathNorm(f).stripPrefix(tmp)
+            .replaceAll("/part-[^/]+$", ""), c, k) }.sorted
+        (rows(loaded), plan, pruned, manifest,
+          rows(VectorArtifact.load(spark, tmp, 4L).codes))
+      }
+    }
+    val under = run(PendingKeys.sidecarKeySetMaxRows)
+    val past = run(0)
+    assert(!under._2.contains("Join"), under._2)
+    assert(past._2.contains("BroadcastHashJoin") &&
+      past._2.contains("LeftAnti"), past._2)
+    val expected = rows(codes.filter(col("vec_id") % 5 =!= 0))
+    assert(under._1 == expected && past._1 == expected)
+    assert(under._3 == past._3 && under._3.nonEmpty)
+    assert(under._4 == past._4 && !under._4.exists(_._3.isDefined))
+    assert(under._5 == expected && past._5 == expected)
   }
 
   test("a key probes a column of another type in their wider type") {

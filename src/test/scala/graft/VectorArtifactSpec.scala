@@ -638,10 +638,13 @@ class VectorArtifactSpec extends SparkSpec {
   }
 
   test("publishIncremental Seq and DataFrame changedCells forms publish identical versions") {
-    // VERDICT r12 next #4: the DF overload keeps a drift-scale flagged
-    // set relational (anti-join share split, no isin literal trees, no
-    // O(F·C) driver scan) under the SAME contract — pinned by publishing
-    // both forms from one ancestor and comparing manifests + loaded rows.
+    // a DataFrame of changed cells publishes through the one Seq form,
+    // collected the way VectorTier and ScaleRehearsal collect theirs
+    // (distinct, unsorted): the version matches a sorted Seq's — pinned by
+    // publishing both from one ancestor and comparing manifests + loaded
+    // rows
+    def collected(df: DataFrame): Seq[Long] =
+      df.select(col("cell").cast("long")).collect().map(_.getLong(0)).toSeq
     withTmp { root =>
       // TWO stores, one per form (r14: derived publishes must derive
       // from the HEAD — publishing both forms from v0 of one store
@@ -657,7 +660,7 @@ class VectorArtifactSpec extends SparkSpec {
       VectorArtifact.publishIncremental(spark, tmpA, 1L, 0L, Dim, cents,
         cb, changedCodes, changedSeq)
       VectorArtifact.publishIncremental(spark, tmpB, 1L, 0L, Dim, cents,
-        cb, changedCodes, changedDf)
+        cb, changedCodes, collected(changedDf))
       def logical(base: String) = VectorArtifact
         .readManifest(spark, base, 1L)
         .map { case (f, c) => // files differ only by home store and the
@@ -670,13 +673,13 @@ class VectorArtifactSpec extends SparkSpec {
         .codes.select("vec_id", "codes", "cell")
         .orderBy("vec_id").collect().toSeq
       assert(key(tmpA) == key(tmpB))
-      // the double-count guard holds in the DF form too (derived from
-      // the HEAD v1 so the from-head gate passes through to it)
+      // the double-count guard holds for a collected set too (derived
+      // from the HEAD v1 so the from-head gate passes through to it)
       val fresh1 = VectorArtifact.load(spark, tmpB, 1L).codes
       intercept[IllegalArgumentException] {
         VectorArtifact.publishIncremental(spark, tmpB, 2L, 1L, Dim, cents,
           cb, fresh1, /* all cells, but changed says one */
-          changedDf.limit(1))
+          collected(changedDf.limit(1)))
       }
       // a stale-ancestor derived publish gets the TYPED conflict (r14:
       // it would silently drop v1's delta from the new head)
