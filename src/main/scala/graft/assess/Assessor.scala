@@ -117,7 +117,7 @@ object Assessor {
         "threshold", "passed", "extension")
   }
 
-  /** The REFERENCE-comparable rollup (ADVICE r10): same arithmetic as
+  /** The REFERENCE-comparable rollup: same arithmetic as
     * [[factorRollup]] over the 48 reference requirements ONLY — the
     * engine-defined extension rows are excluded via the scorecard's
     * `extension` tag, so the fractions use the pure-48 denominator a

@@ -178,8 +178,8 @@ object Registry {
     // Factor 3's value-freshness checks gate on RECENCY; nothing in the
     // 48 gates on the POPULATION still being distributed like the one
     // models were validated on — the standard pre-retrain/pre-serve
-    // monitor (VERDICT r9 next #7: make the drift tier load-bearing the
-    // way #10/#15 witnesses are). Scored like every other requirement
+    // monitor, making the drift tier load-bearing the way the #10/#15
+    // witnesses are. Scored like every other requirement
     // (fraction of monitored assets within their engine drift bar,
     // substrate.Drift.{PsiBar,MeanShiftBar} — THRESHOLDS.md).
     Requirement("distribution_currency", Factor.Current, ST,
@@ -189,8 +189,8 @@ object Registry {
   require(all.size == 49,
     s"registry must hold the 48 reference requirements + 1 engine-defined, got ${all.size}")
 
-  /** The engine-defined rows, named once (ADVICE r10: composing the 49th
-    * requirement into the scorecards changed the reference-facing
+  /** The engine-defined rows, named once (composing the 49th
+    * requirement into the scorecards changes the reference-facing
     * denominator — tagging the row lets consumers, and the
     * `factor_rollup_reference` entry, reproduce the pure-48 numbers a
     * reference implementation would emit).
@@ -199,7 +199,7 @@ object Registry {
   // a renamed/typo'd extension key would silently tag NOTHING: every row
   // keeps extension=false in BOTH engines, the NOT-extension filter keeps
   // all 49 rows, and factor_rollup_reference ships a 49-denominator
-  // number as the pure-48 rollup — still hash-green (code-review r11)
+  // number as the pure-48 rollup — still hash-green, so fail here
   require(extensionKeys.subsetOf(all.map(_.key).toSet),
     s"extensionKeys must name registry rows: ${extensionKeys -- all.map(_.key).toSet} unknown")
 

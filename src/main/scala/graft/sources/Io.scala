@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.StructType
 object Io {
 
   /** Vectorized parquet scan; filters/projections layered on top push down
-    * (ReadSchema/PushedFilters — see tools.ExplainAudit).
+    * (ReadSchema/PushedFilters — see `tools.Diag plan <entry>`).
     */
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)

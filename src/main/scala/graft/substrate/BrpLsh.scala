@@ -36,8 +36,8 @@ import graft.substrate.VectorOps._
   * width is DERIVED from the corpus ([[autoBucketLengths]]: per-table
   * spread × occupancy / n), so bucket count grows with n and the
   * candidate rate FALLS as the corpus grows — a fixed width held it
-  * constant (quadratic in the limit; SCALE.md r4 BRP rows, VERDICT r4
-  * #1). The occupancy default is generous because check #19's corpus is
+  * constant (quadratic in the limit; SCALE.md's BRP candidate-rate
+  * rows). The occupancy default is generous because check #19's corpus is
   * isotropic background (its top-10 sits barely closer than random) where
   * recall is bought only with candidate volume; corpora with real
   * neighbor structure can run much tighter (see [[DefaultOccupancy]]).
@@ -58,7 +58,7 @@ object BrpLsh {
   val DefaultProbe = 1
 
   /** Target MEAN bucket occupancy of the AUTO bucketLength policy (the
-    * default since r5 — VERDICT r4 #1, the sign-LSH autoBandBits
+    * default — the sign-LSH autoBandBits
     * precedent applied to the last fixed-width index default): per table,
     *
     *   L_t = (max_t − min_t) · occupancy / n
@@ -122,7 +122,7 @@ object BrpLsh {
       occupancy: Int = DefaultOccupancy): Seq[Double] =
     // memoized per dots-plan: the spread agg is the only eager action on
     // the auto path, and it re-runs for every serial bench repeat and
-    // every check sharing the corpus (VERDICT r6 performance)
+    // every check sharing the corpus
     DerivationCache.memo(corpusDots, s"brp-lengths-$nTables-$occupancy") {
       autoBucketLengthsUncached(corpusDots, nTables, occupancy)
     }

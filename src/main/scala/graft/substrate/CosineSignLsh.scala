@@ -42,7 +42,7 @@ object CosineSignLsh {
     */
   val DefaultBands = 4
 
-  /** SCALE.md band-width policy, now the DEFAULT (VERDICT r3 #1): with a
+  /** SCALE.md band-width policy, the DEFAULT: with a
     * fixed width the number of buckets per band is constant, so candidate
     * rate is constant in n — O(n²) candidates in the limit. Auto width:
     *
@@ -71,9 +71,9 @@ object CosineSignLsh {
     * (2^28 ≈ 268M rows: beyond it bucket occupancy — and the candidate
     * rate — grows linearly again). [[autoBandBits]] WARNS rather than
     * raises there (the result is still correct, just progressively more
-    * expensive), making the cliff explicit at plan time instead of silent
-    * (VERDICT r4 #6); the remedy is sharding the corpus (e.g. by a
-    * doc-hash prefix) and running per-shard dedup.
+    * expensive), making the cliff explicit at plan time instead of
+    * silent; the remedy is sharding the corpus (e.g. by a doc-hash
+    * prefix) and running per-shard dedup.
     */
   val AutoBandBitsMaxN: Long = 1L << 28
 
@@ -169,7 +169,7 @@ object CosineSignLsh {
         // corpus count + centering mean are the only eager driver actions
         // on this path — memoized per corpus plan (DerivationCache) so
         // bench repeats and corpus-sharing checks don't re-schedule them
-        // under the FAIR pool (VERDICT r6 performance)
+        // under the FAIR pool
         DerivationCache.memo(e, "signlsh-count")(e.count()))
     val np = if (nPlanes > 0) nPlanes else DefaultBands * bits
     val offsets =

@@ -10,8 +10,8 @@ import org.apache.spark.sql.DataFrame
   * mean), re-derived eagerly on the driver each time an operator builds its
   * plan. Under the bench's concurrent FAIR-pool suite those eager actions
   * dominate: each one schedules an extra Spark job that holds a pool worker
-  * while it queues behind the suite (VERDICT r6 performance — the vector
-  * tier's 7-18× serial-vs-concurrent inflation), and the SAME derivation
+  * while it queues behind the suite (the vector tier's 7-18×
+  * serial-vs-concurrent inflation), and the SAME derivation
   * re-runs for every check sharing a corpus and for every serial repeat of
   * the same check.
   *
@@ -90,7 +90,7 @@ object DerivationCache {
     * SQL conf — if a low-latency serving entry (shuffle.partitions=2
     * sub-session) happens to touch a shared index first, every other
     * entry's benched plan silently inherits those knobs (run-order
-    * sensitivity, code-review r11). Memo bodies that cache DataFrames
+    * sensitivity). Memo bodies that cache DataFrames
     * shared ACROSS entries build against this one pinned sibling
     * session instead: same SparkContext, shuffle partitions pinned
     * from the context conf, one per JVM.
@@ -99,13 +99,12 @@ object DerivationCache {
       : org.apache.spark.sql.SparkSession =
     artifactSessions.computeIfAbsent(spark.sparkContext, _ => {
       val s = spark.newSession()
-      // precedence (ADVICE r12 low #3 refining the r11/r12 chain): the
-      // CONTEXT conf wins when set — it is launch-time truth and immune
-      // to a sub-session's conf.set. When the builder never set it, the
-      // first caller's RUNTIME conf is consulted (the harness that
-      // configures partitions only via spark.conf.set) — but only if it
-      // is at least the context's core width: a runtime value NARROWER
-      // than defaultParallelism is a latency-tuned sub-session knob
+      // precedence: the CONTEXT conf wins when set — it is launch-time
+      // truth and immune to a sub-session's conf.set. When the builder
+      // never set it, the first caller's RUNTIME conf is consulted (the
+      // harness that configures partitions only via spark.conf.set) —
+      // but only if it is at least the context's core width: a runtime
+      // value NARROWER than defaultParallelism is a latency-tuned knob
       // (the serving entries pin partitions=2), and adopting it would
       // pin the shared artifact session to the first caller's run order
       // for the JVM lifetime — the exact hazard this session exists to

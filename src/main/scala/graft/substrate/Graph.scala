@@ -163,7 +163,8 @@ object Graph {
 
   /** [[componentsDistributed]] plus the CONVERGENCE ROUND COUNT — the
     * number the O(log diameter) pointer-doubling claim is measured by
-    * (tools.ScaleRehearsal records rounds vs log2(diameter) at 1×/10×).
+    * (SCALE.md's `components chain` rows record rounds vs log2(diameter)
+    * at 1×/10×/100×).
     */
   private[graft] def componentsDistributedWithRounds(e: DataFrame,
       maxIters: Int): (DataFrame, Int) = {

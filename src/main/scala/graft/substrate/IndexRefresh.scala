@@ -3,8 +3,8 @@ package graft.substrate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The ACT half of the index-freshness loop (VERDICT r10 what's-missing
-  * #2 — the reference's "freshness enforced by infrastructure"
+/** The ACT half of the index-freshness loop (the reference's
+  * "freshness enforced by infrastructure"
   * (`factors/3-current.md:12-15`) applied to the index ARTIFACT): the
   * drift monitor ([[Drift.embeddingMeanShift]]) decides, and this
   * operator EXECUTES — re-train the PQ codebook on the current
@@ -60,7 +60,7 @@ object IndexRefresh {
   }
 
   /** PER-CELL first-moment repair — the O(drifted-fraction) refresh a
-    * 100 TB residual index needs (VERDICT r10 next #8): for each IVF
+    * 100 TB residual index needs: for each IVF
     * cell, compare the members' per-dimension means between the indexed
     * snapshot `p0` and the current snapshot `p1` (membership = the
     * STORED assignment — the monitor reads the artifact it guards);
@@ -95,8 +95,8 @@ object IndexRefresh {
       avg(abs(col("dm"))).as("shift"))
     // LEFT join: a cell with no members in either snapshot (e.g. fully
     // deleted in p1) has no shift row — it must PASS THROUGH unrefreshed
-    // rather than silently vanish and shrink the coarse quantizer
-    // (ADVICE r11 low #3); a missing shift coalesces to "no evidence".
+    // rather than silently vanish and shrink the coarse quantizer; a
+    // missing shift coalesces to "no evidence".
     cents0.join(sv, Seq("cell"), "left")
       .select(col("cell"),
         when(coalesce(col("shift"), lit(0.0)) > Drift.MeanShiftBar,

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * bucket key), never the corpus — sub-scan access is the entire point of
   * the companion table.
   *
-  * SEGMENTED postings (the classic stopword-skew remedy, VERDICT r8 #1):
+  * SEGMENTED postings (the classic stopword-skew remedy):
   * a stopword-grade token at corpus scale would put O(n_docs) doc_ids
   * into ONE `collect_list` cell — a single-task memory blowup against the
   * 2 GB value ceiling. So tokens whose df exceeds `dfThreshold` have
@@ -375,9 +375,9 @@ object InvertedIndex {
       .select(col("qid"), col("df"), col("p.doc_id").as("doc_id"),
         col("p.tf").as("tf"))
     val posting0 = allowed match {
-      // broadcast() matches the documented plan shape (ADVICE r10: the
-      // bare join left Spark free to shuffle the exploded postings
-      // against the keep-list at scale)
+      // broadcast() matches the documented plan shape: a bare join
+      // leaves Spark free to shuffle the exploded postings against the
+      // keep-list at scale
       case Some(a) => posting1.join(broadcast(a.select(col("doc_id"))),
         Seq("doc_id"), "left_semi")
       case None => posting1

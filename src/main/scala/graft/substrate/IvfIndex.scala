@@ -56,7 +56,7 @@ object IvfIndex {
   def assign(e: DataFrame, centroidMod: Int): DataFrame =
     assignTo(e, centroids(e, centroidMod))
 
-  /** Coarse-codebook budget derived from the corpus (VERDICT r5 #2 — the
+  /** Coarse-codebook budget derived from the corpus (the
     * autoBandBits/autoBucketLengths precedent applied to the last
     * fixed-knob index default): [[assignHier]]'s per-vector probe work is
     * |C|/coarseFactor + nProbeCoarse·coarseFactor comparisons; √|C| is
@@ -93,8 +93,8 @@ object IvfIndex {
       nProbeCoarse: Int = 4): DataFrame = {
     // centroid COUNT is the only eager action on this path; memoized per
     // corpus plan so repeated builds (bench serial runs, checks sharing a
-    // corpus) don't re-schedule the job under the FAIR pool (VERDICT r6
-    // performance: eager knob derivations were the concurrent hot spot)
+    // corpus) don't re-schedule the job under the FAIR pool, where eager
+    // knob derivations queue behind the whole suite
     val nCents = DerivationCache.memo(e, s"ivf-ncents-$centroidMod") {
       e.filter(col("vec_id") % centroidMod === 0).count()
     }
@@ -258,7 +258,7 @@ object IvfIndex {
 
   /** Approximate top-k: probe the nProbe nearest cells per query, exact
     * distance inside the probed cells only. Assignment runs through the
-    * derived two-level codebook ([[assignAuto]] — VERDICT r5 #2), never
+    * derived two-level codebook ([[assignAuto]]), never
     * the flat witness.
     */
   def topK(e: DataFrame, queries: DataFrame, centroidMod: Int, k: Int,

@@ -54,7 +54,7 @@ object Layout {
   def zValue(x: Column, y: Column, bits: Int): Column =
     zValueN(Seq(x, y), bits)
 
-  /** [[zValue]] generalized to d dimensions (VERDICT r9 #8): bit i of
+  /** [[zValue]] generalized to d dimensions: bit i of
     * dimension d lands at position i·n + d, so consecutive z-values
     * trace the d-dimensional z-curve and any z-range covers a bounded
     * HYPERRECTANGLE. d=2 reduces exactly to the original interleave
@@ -131,7 +131,7 @@ object Layout {
     * splits a file. An oversized file may JOIN the bin already open when
     * it arrives (its preceding sum decides), but it always CLOSES that
     * bin — the floor-div jumps past it, so subsequent bin ids may skip
-    * (ADVICE r9: the old "occupy bins alone" wording overclaimed).
+    * (an oversized file does not necessarily occupy a bin alone).
     *
     * Input `files` is a LISTING — (part, file, bytes), metadata scale
     * (O(#files), ~10⁶ rows at 100 TB, not O(rows)) — and the window
@@ -142,8 +142,8 @@ object Layout {
     * 2^53 bytes (≈ 9 PB) per partition. Output: one row per planned
     * compaction task — (part, bin, n_files, total_bytes, first_file,
     * last_file, files), where `files` is the EXPLICIT member list the
-    * executor rewrites (ADVICE r10: selecting members at execution time
-    * by re-listing the directory and filtering a lexicographic
+    * executor rewrites (selecting members at execution time by
+    * re-listing the directory and filtering a lexicographic
     * [first_file, last_file] range would silently fold in any file added
     * between planning and execution — the plan itself must carry the
     * file set, exactly as table-format OPTIMIZE tasks name their input
@@ -152,7 +152,7 @@ object Layout {
   def compactionPlan(files: DataFrame, target: Column): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("part").orderBy("file")
-      // explicit ROWS frame (ADVICE r9): the default RANGE frame includes
+      // explicit ROWS frame: the default RANGE frame includes
       // all order-key PEERS in the running sum, which diverges from the
       // streaming first-fit semantics (and the oracle's ROWS frame) the
       // moment a (part, file) key repeats
@@ -190,8 +190,8 @@ object Layout {
       .toDF("part", "file", "bytes")
   }
 
-  /** EXECUTE a [[compactionPlan]] (VERDICT r9 what's-missing #3 — the
-    * OPTIMIZE loop's second half): rewrite each planned bin's files into
+  /** EXECUTE a [[compactionPlan]] (the OPTIMIZE loop's second half):
+    * rewrite each planned bin's files into
     * ONE merged file under `outPath`, preserving the clustered order.
     *
     * Execution shape — the Delta/Iceberg OPTIMIZE geometry, not a
@@ -219,16 +219,14 @@ object Layout {
     // emits per-part bin ids that each start at 0, so a multi-part plan
     // would collide on bin=N output paths; the multi-partition compactor
     // is [[compactAll]], which scopes each bin's output under its
-    // partition leaf. Fail loudly rather than silently overwrite
-    // (code-review r10).
+    // partition leaf. Fail loudly rather than silently overwrite.
     val parts = plan.select("part").distinct().collect().map(_.getString(0))
     require(parts.length <= 1,
       s"compact() is per-partition (one inPath): plan spans ${parts.length} parts — use compactAll (or call once per partition directory)")
     // the plan records the directory it was built over; executing it
     // against a DIFFERENT directory whose files share leaf names would
-    // silently compact the wrong data under the wrong bin geometry
-    // (code-review r11 — the single-part twin of compactAll's
-    // leaf-distinctness contract)
+    // silently compact the wrong data under the wrong bin geometry (the
+    // single-part twin of compactAll's leaf-distinctness contract)
     // the plan's part column is a qualified URI (listFiles) — qualify the
     // caller's inPath the same way before comparing
     val qIn = {
@@ -239,9 +237,9 @@ object Layout {
     require(parts.isEmpty ||
         parts.head.stripSuffix("/") == qIn.stripSuffix("/"),
       s"compact: plan was built over '${parts.head}' but inPath is '$inPath'")
-    // members come from the plan's OWN `files` column (ADVICE r10: the
-    // old execution-time re-list + lexicographic [first, last] range
-    // silently folded in files added after planning)
+    // members come from the plan's OWN `files` column: a re-list plus a
+    // lexicographic [first, last] range would fold in files added after
+    // planning
     val tasks = plan.select(col("bin"), col("files")).collect().map { r =>
       (r.getSeq[String](1).map(f => s"$inPath/$f"),
         f"$outPath/bin=${r.getLong(0)}%05d")
@@ -249,9 +247,9 @@ object Layout {
     runBinTasks(spark, tasks.toIndexedSeq, orderCol, maxConcurrent)
   }
 
-  /** Multi-partition compaction driver (VERDICT r10 what's-missing #3 —
-    * the orchestration wrapper a real OPTIMIZE run needs over the
-    * per-partition [[compact]] contract): execute a plan that spans many
+  /** Multi-partition compaction driver (the orchestration wrapper a real
+    * OPTIMIZE run needs over the per-partition [[compact]] contract):
+    * execute a plan that spans many
     * partition directories, writing each partition's rewritten bins
     * under `outBase/<partition-leaf>/bin=N` so per-part bin ids (each
     * starting at 0) can never collide across partitions. All (part, bin)

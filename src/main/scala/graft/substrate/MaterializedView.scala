@@ -60,7 +60,7 @@ object MaterializedView {
     // windowed frame from both union branches, executing the
     // shuffle+sort pipeline twice (12 Window nodes in the benched MV
     // plan). min_by/max_by on `seq` pick the same images — `seq` is
-    // UNIQUE per key AND NON-NULL (scaladoc contract; ADVICE r16:
+    // UNIQUE per key AND NON-NULL (scaladoc contract:
     // min_by/max_by IGNORE rows whose ordering value is null, where a
     // nulls-first row_number window would have folded a null-seq row
     // as the chain's first event — every caller passes commit

@@ -516,9 +516,8 @@ private[graft] object MetaIo {
     Some(g.getBinary(name, 0).getBytes)
   }
 
-  /** String bounds longer than this are TRUNCATED (r15 — VERDICT r14
-    * what's-missing #4 / next #6; until r14 they were dropped as
-    * unknown, so predicates on long-text prefixes never skipped files):
+  /** String bounds longer than this are TRUNCATED, not dropped as
+    * unknown, so predicates on long-text prefixes still skip files:
     * the MIN truncates to its first [[TruncateTo]] code points (a
     * strict prefix sorts ≤ the full string in unsigned UTF-8 order —
     * the range can only widen), and the MAX truncates with the last
@@ -526,7 +525,7 @@ private[graft] object MetaIo {
     * UnicodeUtil discipline) so the recorded bound sorts strictly ABOVE
     * every string sharing the prefix — again only widening. Truncation
     * operates on CODE POINTS, never raw bytes, so a multi-byte char is
-    * never split (the byte-boundary hazard that kept r13 conservative);
+    * never split (truncating bytes could leave a partial character);
     * code-point order equals UTF-8 unsigned byte order, so the
     * incremented bound compares correctly under [[utf8Lt]]. A max whose
     * every prefix position is saturated (all U+10FFFF) stays UNKNOWN —
@@ -597,8 +596,8 @@ private[graft] object MetaIo {
     * read per file (O(#files) driver I/O, the same budget as the
     * manifest listing itself), never a cluster job.
     *
-    * Two bound domains, each column landing in at most one (VERDICT r13
-    * what's-missing #3 — string predicates used to prune nothing):
+    * Two bound domains, each column landing in at most one, so both
+    * integral and string predicates prune:
     * INTEGRAL columns (INT32/INT64, plain signed) report LONG bounds;
     * STRING columns (BINARY + UTF8 annotation) report string bounds in
     * unsigned UTF-8 byte order, truncated conservatively when a bound
@@ -607,7 +606,7 @@ private[graft] object MetaIo {
     * missing from the file schema, has any other physical/logical type
     * (DECIMAL-backed INT64 stores UNSCALED values, unsigned ints
     * reorder above 2^63, TIMESTAMP annotations are value-domain
-    * ambiguous — code-review r13 round 2), or any row group recorded no
+    * ambiguous), or any row group recorded no
     * non-null values for it (min-of-mins over a block with empty stats
     * would understate the range). Row count is exact regardless: it
     * comes from block metadata, not column stats.

@@ -127,7 +127,7 @@ object MinHashLsh {
     *        itself. Default false: a same-id re-ingest of UNCHANGED
     *        content would otherwise report every re-ingested doc as its
     *        own near-dup. But this is a caller CHOICE, not intra-set
-    *        self-pair discipline (ADVICE r4): pass true when the delta
+    *        self-pair discipline: pass true when the delta
     *        carries re-ingests of possibly-CHANGED content under stable
     *        ids — there the same-id pair (with its Jaccard < 1) IS the
     *        content-drift signal.

@@ -27,10 +27,11 @@ import org.apache.spark.sql.functions._
   * literal centroid arrays — no shuffle, no join, whole-stage codegen'd
   * native ArraySqDist per (subspace, centroid) — so it pipelines into
   * the parquet scan at any corpus size (PlanQualitySpec gates the
-  * no-Exchange plan; ScaleRehearsal measures ~0 shuffle across three
-  * decades). ADC queries broadcast a per-query lookup table of
-  * m·k precomputed subspace distances and scan the CODES, never the
-  * vectors: per-candidate cost is m array lookups + adds.
+  * no-Exchange plan; SCALE.md's `pq encode codes` rows record ~0
+  * shuffle across three decades). ADC queries broadcast a per-query
+  * lookup table of m·k precomputed subspace distances and scan the
+  * CODES, never the vectors: per-candidate cost is m array lookups +
+  * adds.
   */
 object PqIndex {
 
@@ -38,7 +39,7 @@ object PqIndex {
   val DefaultCodebookK = 16
   val DefaultTrainMod = 5
 
-  /** Production codebook knobs (VERDICT r9 #1 — the k=16 defaults above
+  /** Production codebook knobs (the k=16 defaults above
     * are demo-grade: 4-bit codes measured recall@10 = 0.145 raw ADC /
     * 0.39 depth-50 reranked at sf0.1, far under the 0.8 SLA #19 holds
     * BRP to). k=256 is the 8-bit-per-subspace production standard (Jégou
@@ -97,9 +98,9 @@ object PqIndex {
       .select(col("sub").cast("int").as("sub"), col("cid").cast("int"),
         col("sv").as("cv"))
       .collect()
-    // ADVICE r10: an empty corpus died on `.max` of nothing and a corpus
-    // with fewer than k vectors left null slots in codebookArrays(k) that
-    // would NPE inside PqEncode's tight loop — fail HERE with the actual
+    // an empty corpus would die on `.max` of nothing, and a corpus with
+    // fewer than k vectors would leave null slots in codebookArrays(k)
+    // that NPE inside PqEncode's tight loop — fail HERE with the actual
     // contract instead
     require(seedSubs.nonEmpty,
       s"PqIndex.codebooks: empty training corpus — cannot seed $k centroids")

@@ -49,7 +49,7 @@ abstract class SparkSpec extends AnyFunSuite {
     sc.setLocalProperty("graft.spec.tag", tag)
     try {
       val out = body
-      org.apache.spark.SpecListenerBus.drain(sc)
+      org.apache.spark.GraftListenerBus.drain(sc)
       (out, n.get)
     } finally {
       sc.setLocalProperty("graft.spec.tag", null)

@@ -639,7 +639,7 @@ class VectorArtifactSpec extends SparkSpec {
 
   test("publishIncremental Seq and DataFrame changedCells forms publish identical versions") {
     // a DataFrame of changed cells publishes through the one Seq form,
-    // collected the way VectorTier and ScaleRehearsal collect theirs
+    // collected the way VectorTier collects them
     // (distinct, unsorted): the version matches a sorted Seq's — pinned by
     // publishing both from one ancestor and comparing manifests + loaded
     // rows
